@@ -18,12 +18,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - writers stage data files under unique names, then publish manifest
   *     v(N+1) with an atomic no-overwrite primitive (hard link on local
   *     filesystems, rename on the HDFS family; object stores are refused
-  *     without an external CAS). A lost race returns false; the writer
-  *     re-reads the new latest manifest, rebases its file list, retries.
-  *   - compaction commits a manifest that REPLACES its input files with
-  *     the compacted ones; appends that raced in land in later versions
-  *     and are rebased over, never lost. Old data files stay on disk for
+  *     without an external CAS). Old data files stay on disk for
   *     older-snapshot readers until [[vacuum]].
+  *   - every commit goes through ONE loop, [[occCommit]]: read the latest
+  *     snapshot, run the op's prepare step (stage files, or decide there
+  *     is nothing to do), fire [[commitRaceHook]], apply the op's
+  *     conflict rule, publish via [[tryCommit]]. A lost race or conflict
+  *     deletes the attempt's staged files and re-runs prepare; after 20
+  *     attempts the op fails with "<op> lost 20 commit races for <table>".
+  *     An op is its prepare step, its conflict rule and its manifest
+  *     lines ([[metaLines]] carries every metadata kind forward).
+  *
+  * Conflict rules (what a commit does about writes that landed after
+  * its snapshot read):
+  *   - rebase — commit over the latest snapshot, keeping raced commits:
+  *     append, appendIdempotent / commitStagedIdempotent (streaming
+  *     sink, WAP publish), overwrite, replaceTable, deleteByKeys, create,
+  *     cloneTable and the metadata ops (alterProperties, tag/untag,
+  *     addColumns, declareSchema, setColumnDefault, rename/drop/
+  *     moveColumn). No re-read: a raced commit makes the publish lose.
+  *   - conditional rebase — re-read at commit time; rebase over raced
+  *     appends unless they can hold rows the op rewrote: compact (all
+  *     inputs still live, delete layer unchanged), upsert (raced appends'
+  *     key ranges disjoint from the update range, rewritten files live,
+  *     layer unchanged).
+  *   - retry — re-read; any change to the data files or the delete layer
+  *     re-runs the op: delete, update, replaceWhere, materializeFieldIds.
+  *   - rescan — re-read; ANY commit (even metadata) re-runs the op:
+  *     restore, deleteWhereMergeOnRead (their staged diff/positions pin
+  *     the exact version).
+  *   - abort — the op's precondition re-runs per attempt and throws
+  *     ConcurrentModificationException once the files or layer moved:
+  *     commitReplaceFiles (SQL row-level DML). A strict WAP publish
+  *     (`requireVersion`) likewise throws once the base version moved.
   *
   * ==Migration seam to Delta Lake / Iceberg==
   * This protocol is deliberately a strict subset of Delta's: immutable
@@ -104,7 +131,7 @@ object VersionedTable {
   private val FidPrefix = "#fid "
   private val CdcPrefix = "#cdc "
   // "#stats <file> <json>": per-data-file column bounds ([[FileStats]])
-  // for plan-time skipping. NOT carried by the hand-built meta sites:
+  // for plan-time skipping. NOT carried by [[metaLines]]:
   // [[tryCommit]] itself reconciles them every commit — carrying lines
   // for retained files from the previous manifest, computing fresh ones
   // from the just-written parquet footers, dropping lines whose file
@@ -113,9 +140,8 @@ object VersionedTable {
   // "#tag <name> <version>": named snapshot refs (Iceberg tag
   // semantics) — time travel by name (`VERSION AS OF 'prod'`, reader
   // option versionAsOf=prod), vacuum-protected. Carried by EVERY
-  // commit (metaLines whitelist + the hand-built replaceTable/restore
-  // meta sites); a tag pins a version, never files, so structural
-  // rewrites and restores cannot invalidate it.
+  // commit (metaLines); a tag pins a version, never files, so
+  // structural rewrites and restores cannot invalidate it.
   private val TagPrefix = "#tag "
 
   /** The table property that turns on write-time CDC files. */
@@ -351,10 +377,8 @@ object VersionedTable {
     * SQL `ALTER ... SET DEFAULT` semantics, same as Delta).
     */
   def setColumnDefault(spark: SparkSession, table: String, column: String,
-      default: Option[String], maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+      default: Option[String]): Long =
+    occCommit(spark, table, "setColumnDefault") { (_, lines) =>
       val declared = schemaLine(lines).getOrElse(
         throw new IllegalStateException(
           s"setColumnDefault needs a declared schema on $table"))
@@ -371,14 +395,10 @@ object VersionedTable {
       }
       val ns = org.apache.spark.sql.types.StructType(
         declared.fields.updated(idx, f.copy(metadata = mb.build())))
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "set-default", newSchema = Some(ns)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      Commit(Rebase, base =>
+        metaLines(base, "set-default", newSchema = Some(ns)) ++
+          dataFiles(base))
     }
-    throw new IllegalStateException(
-      s"setColumnDefault lost $maxRetries commit races")
-  }
 
   /** Validate a [[ClusterByProperty]] spec against a schema (None =
     * pre-schema table, columns unknowable — allow). Shared by
@@ -476,28 +496,38 @@ object VersionedTable {
     */
   private[sources] val FieldIdKey = "parquet.field.id"
 
-  /** txn watermark + declared-schema + pending-delete lines carried
-    * forward, plus this commit's op marker. `newSchema` (a
-    * schema-evolving commit) REPLACES any carried schema line;
-    * `dropDeletes` (compaction/overwrite — commits that rewrite or
-    * replace every file the deletes could apply to) drops the pending
-    * delete layer.
+  /** The metadata lines of the next manifest: txn watermarks, tags,
+    * declared schema, properties, field-id mark and pending delete
+    * layer carried forward from `prevRaw`, plus this commit's op marker.
+    * Each `new*` argument REPLACES its carried lines; `txn` advances one
+    * writer's watermark; `dropDeletes` (compaction/overwrite — commits
+    * that rewrite or replace every file the deletes could apply to)
+    * drops the pending delete layer. Every commit builds its metadata
+    * here, so no commit kind can forget a line kind.
     */
   private def metaLines(prevRaw: Seq[String], op: String,
       newSchema: Option[org.apache.spark.sql.types.StructType] = None,
       dropDeletes: Boolean = false,
       newProps: Option[Map[String, String]] = None,
-      newFid: Option[Long] = None): Seq[String] =
-    prevRaw.filter(l => l.startsWith(TxnPrefix) ||
-        l.startsWith(TagPrefix) ||
+      newFid: Option[Long] = None,
+      newTags: Option[Map[String, Long]] = None,
+      txn: Option[(String, Long)] = None): Seq[String] =
+    prevRaw.filter(l => (l.startsWith(TxnPrefix) && txn.isEmpty) ||
+        (l.startsWith(TagPrefix) && newTags.isEmpty) ||
         (l.startsWith(SchemaPrefix) && newSchema.isEmpty) ||
         (l.startsWith(PropPrefix) && newProps.isEmpty) ||
         (l.startsWith(FidPrefix) && newFid.isEmpty) ||
         ((l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix)) &&
           !dropDeletes)) ++
+      txn.toSeq.flatMap(t => txnLines(txnMap(prevRaw) + t)) ++
       newSchema.map(s => SchemaPrefix + s.json) ++
       newFid.map(n => FidPrefix + n) ++
-      newProps.toSeq.flatMap(propLines) :+ (OpPrefix + op)
+      newProps.toSeq.flatMap(propLines) ++
+      newTags.toSeq.flatMap(tagLines) :+ (OpPrefix + op)
+
+  /** The data-file lines of a raw manifest. */
+  private def dataFiles(lines: Seq[String]): Seq[String] =
+    lines.filterNot(_.startsWith("#"))
 
   // ---------- parquet field ids (rename/drop-safe schema evolution) ----
 
@@ -1119,17 +1149,14 @@ object VersionedTable {
     * line format is `#prop <key> <rest-of-line value>`.
     */
   def alterProperties(spark: SparkSession, table: String,
-      set: Map[String, String], unset: Seq[String] = Nil,
-      maxRetries: Int = 20): Long = {
+      set: Map[String, String], unset: Seq[String] = Nil): Long = {
     require(set.nonEmpty || unset.nonEmpty, "nothing to change")
     (set.keys ++ unset).foreach(k => require(
       k.nonEmpty && !k.exists(_.isWhitespace),
       s"property key '$k' must be non-empty and space-free"))
     set.values.foreach(v => require(!v.contains("\n"),
       "property values must be single-line"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    occCommit(spark, table, "alterProperties") { (_, lines) =>
       if (set.get(CdcProperty).exists(_.trim.equalsIgnoreCase("true")))
         // tables born via plain append have no declared schema line —
         // one footer read of a data file stands in (enable-time only)
@@ -1173,13 +1200,10 @@ object VersionedTable {
             table)
       }
       val next = (propMap(lines) ++ set) -- unset
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "properties", newProps = Some(next)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      Commit(Rebase, base =>
+        metaLines(base, "properties", newProps = Some(next)) ++
+          dataFiles(base))
     }
-    throw new IllegalStateException(
-      s"alterProperties lost $maxRetries commit races")
   }
 
   /** Create an empty table with a declared schema: commit v1 with no
@@ -1195,13 +1219,14 @@ object VersionedTable {
     // prerequisite for rename/drop evolution
     val (idFields, fid) = assignIds(schema0.fields.toSeq, maxFieldId(schema0))
     val schema = org.apache.spark.sql.types.StructType(idFields.toArray)
-    val (v, _) = latestRaw(spark, table)
-    if (v > 0 || !tryCommit(spark, table, 1L,
-        metaLines(Nil, "create", Some(schema), newFid = Some(fid)))) {
-      if (!ifNotExists) throw new IllegalStateException(
-        s"table $table already exists (version ${latestRaw(spark, table)._1})")
-      latestRaw(spark, table)._1
-    } else 1L
+    occCommit(spark, table, "create") { (v, _) =>
+      if (v == 0)
+        Commit(Rebase, _ =>
+          metaLines(Nil, "create", Some(schema), newFid = Some(fid)))
+      else if (ifNotExists) Done(v)
+      else throw new IllegalStateException(
+        s"table $table already exists (version $v)")
+    }
   }
 
   /** Column-append schema evolution: a METADATA-ONLY commit that widens
@@ -1214,17 +1239,14 @@ object VersionedTable {
     * evolution has a base to widen.
     */
   def addColumns(spark: SparkSession, table: String,
-      newCols: Seq[org.apache.spark.sql.types.StructField],
-      maxRetries: Int = 20): Long = {
+      newCols: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(newCols.nonEmpty, "addColumns needs at least one column")
     newCols.foreach(f => require(f.nullable,
       s"new column ${f.name} must be nullable: rows written before this " +
         "commit have no value for it"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    occCommit(spark, table, "addColumns") { (_, lines) =>
       val base = schemaLine(lines).getOrElse {
-        val files = lines.filterNot(_.startsWith("#"))
+        val files = dataFiles(lines)
         require(files.nonEmpty,
           s"$table has no declared schema and no data files to infer one")
         spark.read.parquet(s"$table/${files.head}").schema
@@ -1242,12 +1264,10 @@ object VersionedTable {
       val (idNew, fid) = assignIds(newCols, math.max(fidOf(lines),
         maxFieldId(base)))
       val widened = org.apache.spark.sql.types.StructType(base.fields ++ idNew)
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(widened), newFid = Some(fid)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      Commit(Rebase, b =>
+        metaLines(b, "schema", Some(widened), newFid = Some(fid)) ++
+          dataFiles(b))
     }
-    throw new IllegalStateException(s"addColumns lost $maxRetries commit races")
   }
 
   /** Record `schema` as the declared schema of an EXISTING table that
@@ -1258,24 +1278,16 @@ object VersionedTable {
     * (the catalog) guarantee it — it IS the schema the write ran under.
     */
   private[graft] def declareSchema(spark: SparkSession, table: String,
-      schema: org.apache.spark.sql.types.StructType,
-      maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      if (schemaLine(lines).isDefined) return v
+      schema: org.apache.spark.sql.types.StructType): Long =
+    occCommit(spark, table, "declareSchema") { (v, lines) =>
+      if (schemaLine(lines).isDefined) Done(v)
       // NO field ids here: the staged CTAS data was already written
       // under the id-less schema, and stamping ids now would make the
       // id-matching read miss every column of those files. The table
       // stays name-matched until [[materializeFieldIds]] upgrades it.
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(schema)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      else Commit(Rebase, base =>
+        metaLines(base, "schema", Some(schema)) ++ dataFiles(base))
     }
-    throw new IllegalStateException(
-      s"declareSchema lost $maxRetries commit races")
-  }
 
   /** Align `df` to the table's declared schema for a write, by NAME
     * (order-insensitive, case-insensitive like Spark's resolver):
@@ -1417,7 +1429,7 @@ object VersionedTable {
   }
 
   /** Atomically commit `files` as version `v`; false if someone else won
-    * the race for `v`.
+    * the race for `v`. Only [[occCommit]] calls it.
     */
   private def tryCommit(spark: SparkSession, table: String, v: Long,
       lines0: Seq[String]): Boolean = {
@@ -1427,47 +1439,145 @@ object VersionedTable {
       try reconcileStats(spark, table, v, lines0)
       catch { case _: Exception => lines0 }
     val f = fs(spark, table)
+    val scheme = f.getUri.getScheme
+    val isLocal = scheme == "file"
+    // object stores (s3a, gs, abfs...) have NO atomic no-overwrite
+    // primitive — a check-then-rename would let two racers both "win" a
+    // version and silently lose one commit. Refuse, as Delta does
+    // without an external CAS/lock service.
+    if (!isLocal && !Set("hdfs", "viewfs", "webhdfs").contains(scheme))
+      throw new UnsupportedOperationException(
+        s"VersionedTable commits need atomic no-overwrite rename or " +
+          s"link; filesystem scheme '$scheme' has neither — configure an " +
+          "external commit coordinator")
     f.mkdirs(new Path(s"$table/$CommitsDir"))
     // Write the full manifest to a temp name, then publish with an ATOMIC
     // no-overwrite primitive, so readers never see a torn manifest and
     // exactly one racer wins a version. HDFS rename refuses an existing
     // destination atomically; POSIX/local rename OVERWRITES, so for file:
     // URIs we publish via hard-link creation — link(2) fails with EEXIST
-    // atomically (the classic lock-file primitive). Object stores without
-    // atomic rename need an external CAS — same requirement as Delta.
+    // atomically (the classic lock-file primitive).
     val tmp = new Path(s"$table/$CommitsDir/.tmp-${java.util.UUID.randomUUID}")
     val dst = commitPath(table, v)
+    val won =
+      try {
+        val out = f.create(tmp, false)
+        try out.write((files.mkString("\n") + "\n").getBytes("UTF-8"))
+        finally out.close()
+        if (isLocal) {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(dst.toUri.getPath),
+            java.nio.file.Paths.get(tmp.toUri.getPath))
+          true
+        } else f.rename(tmp, dst)
+      } catch {
+        // FileAlreadyExistsException (a lost link race) is one of these
+        case _: java.io.IOException => false
+      }
+    // `won` is final here: the link/rename above published or did not.
+    // Cleanup is best-effort — a failing delete must never turn a won
+    // publish into a reported lost race (the caller would then commit
+    // the same staged files again as v+1).
+    if (!won || isLocal)
+      try f.delete(tmp, false)
+      catch { case _: java.io.IOException => }
+    won
+  }
+
+  // ---------- the OCC commit primitive ----------
+
+  /** Attempts a commit makes before giving up. */
+  private val MaxCommitAttempts = 20
+
+  /** How a commit treats writes that landed after its snapshot read —
+    * the op → rule table is in the header.
+    */
+  private sealed trait Conflict
+  /** Commit over the snapshot prepare read, with no re-read: a raced
+    * commit makes the publish lose and the next attempt re-prepares.
+    */
+  private case object Rebase extends Conflict
+  /** Re-read at commit time; commit over the latest iff
+    * `ok(version, lines)`, else drop the attempt's files and re-prepare.
+    */
+  private final case class Recheck(ok: (Long, Seq[String]) => Boolean)
+    extends Conflict
+
+  /** Retry unless the data files AND the pending delete layer are those
+    * of the prepare read (a raced layer commit adds no data file, but a
+    * rewrite's fresh file names would escape it).
+    */
+  private def sameFilesAndLayer(lines: Seq[String]): Conflict =
+    Recheck((_, latest) =>
+      dataFiles(latest).toSet == dataFiles(lines).toSet &&
+        deleteLayer(latest) == deleteLayer(lines))
+
+  /** Re-scan unless nothing at all committed since the prepare read. */
+  private def sameVersion(v: Long): Conflict = Recheck((latest, _) => latest == v)
+
+  /** What one attempt's prepare step decided. */
+  private sealed trait Step
+  /** Nothing to commit: return `version`. `discard` also deletes the
+    * op's owned files (a racing instance already committed its epoch).
+    */
+  private final case class Done(version: Long, discard: Boolean = false)
+    extends Step
+  /** Publish `manifest(base)` as the next version under `rule`, where
+    * `base` is the snapshot the rule commits over. `staged` are the files
+    * this attempt wrote; they are deleted if the attempt loses or fails.
+    */
+  private final case class Commit(rule: Conflict,
+      manifest: Seq[String] => Seq[String], staged: Seq[String] = Nil)
+    extends Step
+
+  /** The one OCC loop every commit goes through. Each attempt reads the
+    * latest snapshot, runs `prepare` on it, fires [[commitRaceHook]],
+    * applies the step's conflict rule and publishes through
+    * [[tryCommit]]. `owned` are files the op staged once, before its
+    * first attempt: they are deleted when the op gives up, fails, or
+    * finds its epoch already committed. `prepare` must not `return`
+    * (a non-local return would read as a failure and delete `owned`).
+    */
+  private def occCommit(spark: SparkSession, table: String, op: String,
+      owned: Seq[String] = Nil)(
+      prepare: (Long, Seq[String]) => Step): Long = {
+    val f = fs(spark, table)
+    def drop(names: Seq[String]): Unit =
+      names.foreach(n => f.delete(new Path(table, n), false))
+    var staged: Seq[String] = Nil
     try {
-      val out = f.create(tmp, false)
-      try out.write((files.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      val won =
-        if (f.getUri.getScheme == "file") {
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(dst.toUri.getPath),
-              java.nio.file.Paths.get(tmp.toUri.getPath))
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-          }
-        } else if (Set("hdfs", "viewfs", "webhdfs").contains(f.getUri.getScheme)) {
-          f.rename(tmp, dst) // HDFS-family rename refuses an existing dst atomically
-        } else {
-          // object stores (s3a, gs, abfs...) have NO atomic no-overwrite
-          // primitive — a check-then-rename would let two racers both
-          // "win" a version and silently lose one commit. Refuse, as
-          // Delta does without an external CAS/lock service.
-          throw new UnsupportedOperationException(
-            s"VersionedTable commits need atomic no-overwrite rename or " +
-              s"link; filesystem scheme '${f.getUri.getScheme}' has " +
-              "neither — configure an external commit coordinator")
+      var attempt = 0
+      while (attempt < MaxCommitAttempts) {
+        val (v, lines) = latestRaw(spark, table)
+        prepare(v, lines) match {
+          case Done(version, discard) =>
+            if (discard) drop(owned)
+            return version
+          case Commit(rule, manifest, files) =>
+            staged = files
+            commitRaceHook()
+            val base = rule match {
+              case Rebase => Some((v, lines))
+              case Recheck(ok) =>
+                Some(latestRaw(spark, table)).filter(ok.tupled)
+            }
+            base match {
+              case Some((bv, bl))
+                  if tryCommit(spark, table, bv + 1, manifest(bl)) =>
+                return bv + 1
+              case _ =>
+                drop(staged)
+                staged = Nil
+            }
         }
-      if (f.exists(tmp) && (!won || f.getUri.getScheme == "file"))
-        f.delete(tmp, false)
-      won
+        attempt += 1
+      }
+      throw new IllegalStateException(
+        s"$op lost $MaxCommitAttempts commit races for $table")
     } catch {
-      case _: java.io.IOException => f.delete(tmp, false); false
+      case e: Throwable =>
+        drop(staged ++ owned)
+        throw e
     }
   }
 
@@ -1636,8 +1746,7 @@ object VersionedTable {
     * concurrently evolved schema so no writer's columns are lost).
     */
   def append(spark: SparkSession, df: DataFrame, table: String,
-      maxRetries: Int = 20, evolveSchema: Boolean = false,
-      sortedBy: Seq[String] = Nil): Long = {
+      evolveSchema: Boolean = false, sortedBy: Seq[String] = Nil): Long = {
     val lines0 = latestRaw(spark, table)._2
     val (aligned, extras) = schemaLine(lines0) match {
       case Some(sc) => alignToSchema(df, sc, evolveSchema, table)
@@ -1645,21 +1754,12 @@ object VersionedTable {
     }
     val staged = stage(spark, aligned, table, cluster = true,
       sortedBy = sortedBy)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      // writer txn watermarks carry forward; op marker is per-commit
-      val newSchema = schemaLine(lines).flatMap(widen(_, extras))
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "append", newSchema) ++
-          lines.filterNot(_.startsWith("#")) ++ staged)) return v + 1
-      attempt += 1
+    // writer txn watermarks carry forward; op marker is per-commit
+    occCommit(spark, table, "append", owned = staged) { (_, _) =>
+      Commit(Rebase, base =>
+        metaLines(base, "append", schemaLine(base).flatMap(widen(_, extras))) ++
+          dataFiles(base) ++ staged)
     }
-    // never committed: remove the staged files so they don't sit orphaned
-    // in the table dir until a vacuum
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(s"append lost $maxRetries commit races")
   }
 
   /** Exactly-once append for streaming micro-batches: the commit records
@@ -1674,7 +1774,7 @@ object VersionedTable {
     * query racing the same batch commit it exactly once.
     */
   def appendIdempotent(spark: SparkSession, df: DataFrame, table: String,
-      writerId: String, epoch: Long, maxRetries: Int = 20): Long = {
+      writerId: String, epoch: Long): Long = {
     require(writerId.nonEmpty && !writerId.contains(" ") &&
       !writerId.contains("\n"), "writerId must be non-empty, no spaces")
     val (v0, lines0) = latestRaw(spark, table)
@@ -1683,30 +1783,8 @@ object VersionedTable {
       case Some(sc) => alignToSchema(df, sc, evolve = false, table)._1
       case None => df
     }
-    val staged = stage(spark, aligned, table, cluster = true)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val txns = txnMap(lines)
-      if (txns.get(writerId).exists(_ >= epoch)) {
-        // a racing instance of this writer committed our epoch first —
-        // drop our staged files; the batch is already in the table
-        val f = fs(spark, table)
-        staged.foreach(n => f.delete(new Path(table, n), false))
-        return v
-      }
-      val next = lines.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-        l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-        l.startsWith(PropPrefix)) ++
-        txnLines(txns + (writerId -> epoch)) :+ (OpPrefix + "append")
-      val nextAll = next ++ lines.filterNot(_.startsWith("#")) ++ staged
-      if (tryCommit(spark, table, v + 1, nextAll)) return v + 1
-      attempt += 1
-    }
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"appendIdempotent lost $maxRetries commit races")
+    commitStagedIdempotent(spark, table,
+      stage(spark, aligned, table, cluster = true), writerId, epoch)
   }
 
   /** Stage `df` into the table dir (aligned to the declared schema,
@@ -1748,37 +1826,25 @@ object VersionedTable {
     */
   private[sources] def commitStagedIdempotent(spark: SparkSession,
       table: String, files: Seq[String], writerId: String, epoch: Long,
-      maxRetries: Int = 20, requireVersion: Option[Long] = None,
-      deleteOnDuplicate: Boolean = true): Long = {
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val txns = txnMap(lines)
-      if (txns.get(writerId).exists(_ >= epoch)) {
-        if (deleteOnDuplicate)
-          files.foreach(n => f.delete(new Path(table, n), false))
-        return v
+      requireVersion: Option[Long] = None,
+      deleteOnDuplicate: Boolean = true): Long =
+    occCommit(spark, table, "appendIdempotent",
+        owned = if (deleteOnDuplicate) files else Nil) { (v, lines) =>
+      // the epoch check re-runs per attempt: a racing instance of this
+      // writer may have committed it — the batch is already in the table
+      if (txnMap(lines).get(writerId).exists(_ >= epoch))
+        Done(v, discard = true)
+      else {
+        requireVersion.filter(_ != v).foreach { expect =>
+          throw new IllegalStateException(
+            s"strict publish on $table expected base version $expect " +
+              s"but found $v (concurrent commit); session left open")
+        }
+        Commit(Rebase, base =>
+          metaLines(base, "append", txn = Some(writerId -> epoch)) ++
+            dataFiles(base) ++ files)
       }
-      requireVersion.filter(_ != v).foreach { expect =>
-        throw new IllegalStateException(
-          s"strict publish on $table expected base version $expect " +
-            s"but found $v (concurrent commit); session left open")
-      }
-      val next = lines.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-        l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-        l.startsWith(PropPrefix)) ++
-        txnLines(txns + (writerId -> epoch)) :+ (OpPrefix + "append")
-      if (tryCommit(spark, table, v + 1,
-          next ++ lines.filterNot(_.startsWith("#")) ++ files))
-        return v + 1
-      attempt += 1
     }
-    if (deleteOnDuplicate)
-      files.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"streaming epoch commit lost $maxRetries races")
-  }
 
   /** Snapshot read of the latest committed version. Pass `schema` so an
     * EMPTY/new table still yields a correctly-typed empty frame
@@ -2171,6 +2237,14 @@ object VersionedTable {
     readFilesDeleteAware(spark, table, files, schemaLine(lines),
       delLines(lines), keepFileCol = true, posDels = delPosLines(lines))
 
+  /** The files of a [[snapReadWithFile]] frame holding a row where
+    * `predicate` is TRUE — the copy-on-write rewrites' affected set.
+    */
+  private def filesMatching(snap: DataFrame,
+      predicate: org.apache.spark.sql.Column): Seq[String] =
+    snap.where(predicate).select(org.apache.spark.sql.functions.col(
+      "__vt_file")).distinct().collect().map(_.getString(0)).toSeq
+
   /** [[snapReadWithFile]] plus `__vt_pos` (the row's physical index in
     * its file) — the provenance [[deleteWhereMergeOnRead]] stages.
     */
@@ -2200,9 +2274,11 @@ object VersionedTable {
       table: String): Set[String] =
     deleteLayer(latestRaw(spark, table)._2)
 
-  /** Test seam: invoked between a rewrite's snapshot read and its
-    * commit-time conflict check, so specs can deterministically inject
-    * a racing commit into the OCC window. No-op in production.
+  /** Test seam: [[occCommit]] invokes it in every attempt, between the
+    * prepare step and the conflict check/publish, so specs can inject a
+    * racing commit into any op's OCC window. A hook that commits must
+    * guard against re-entry (its own commit fires it too). No-op in
+    * production.
     */
   private[graft] var commitRaceHook: () => Unit = () => ()
 
@@ -2272,37 +2348,54 @@ object VersionedTable {
       }
       cur = cur.join(broadcast(fvDf), Seq("__vt_file"), "left")
       dels.groupBy(_._3).foreach { case (keyCols, group) =>
-        // one read for the whole key-column group (same rationale as
-        // the position layer above); each file's delete version tags
-        // back on by file name — by a constant when the group is one
-        // file (the common young-layer case: no join needed)
-        val raw = spark.read
-          .parquet(group.map { case (delFile, _, _) =>
-            s"$table/$delFile" }: _*)
-        val tagged0 = group match {
-          case Seq((_, dv, _)) =>
-            raw.select(keyCols.map(col): _*)
-              .withColumn("__vt_dv", lit(dv))
-          case _ =>
-            val dvDf = {
-              import spark.implicits._
-              group.map { case (delFile, dv, _) => (delFile, dv) }
-                .toDF("__vt_dfile", "__vt_dv")
-            }
-            raw.select(keyCols.map(col) :+
-                element_at(split(col("_metadata.file_path"), "/"), -1)
-                  .as("__vt_dfile"): _*)
-              .join(broadcast(dvDf), Seq("__vt_dfile")).drop("__vt_dfile")
-        }
-        val keys = tagged0
-          .groupBy(keyCols.map(col): _*)
-          .agg(max(col("__vt_dv")).as("__vt_dv"))
+        val keys = deleteKeyGroup(spark, table, group, keyCols, base.schema)
         cur = cur.join(keys, keyCols, "left")
           .where(col("__vt_dv").isNull || col("__vt_dv") < col("__vt_fv"))
           .drop("__vt_dv")
       }
     }
     cur.select(outCols: _*)
+  }
+
+  /** One equality-delete key group (the layer files sharing `keyCols`)
+    * as (keys, `__vt_dv` = the newest delete version per key). One
+    * multi-path read for the whole group (r16: a read per layer file
+    * cost a schema-inference job each), under an explicit schema giving
+    * each key its type in `tableSchema` — integral keys read as long —
+    * because the group's files may have been staged from frames of
+    * drifted key types (INT32 then INT64), which a schema inferred from
+    * one file's footer fails to read. Each file's delete version tags
+    * back on by file name — by a constant when the group is one file
+    * (the common young-layer case: no join needed).
+    */
+  private def deleteKeyGroup(spark: SparkSession, table: String,
+      group: Seq[(String, Long, Seq[String])], keyCols: Seq[String],
+      tableSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val keySchema = StructType(keyCols.map(c => StructField(c,
+      tableSchema(c).dataType match {
+        case ByteType | ShortType | IntegerType => LongType
+        case t => t
+      })))
+    val raw = spark.read.schema(keySchema)
+      .parquet(group.map { case (delFile, _, _) => s"$table/$delFile" }: _*)
+    val tagged = group match {
+      case Seq((_, dv, _)) =>
+        raw.select(keyCols.map(col): _*).withColumn("__vt_dv", lit(dv))
+      case _ =>
+        val dvDf = {
+          import spark.implicits._
+          group.map { case (delFile, dv, _) => (delFile, dv) }
+            .toDF("__vt_dfile", "__vt_dv")
+        }
+        raw.select(keyCols.map(col) :+
+            element_at(split(col("_metadata.file_path"), "/"), -1)
+              .as("__vt_dfile"): _*)
+          .join(broadcast(dvDf), Seq("__vt_dfile")).drop("__vt_dfile")
+    }
+    tagged.groupBy(keyCols.map(col): _*)
+      .agg(max(col("__vt_dv")).as("__vt_dv"))
   }
 
   private def readFiles(spark: SparkSession, table: String,
@@ -2351,7 +2444,7 @@ object VersionedTable {
     * belongs to compact().
     */
   def compactToSize(spark: SparkSession, table: String,
-      targetFileSizeBytes: Long, maxRetries: Int = 20,
+      targetFileSizeBytes: Long,
       zorderDims: Seq[org.apache.spark.sql.Column] = Nil,
       zorderBits: Int = 16): Long = {
     require(targetFileSizeBytes > 0,
@@ -2377,11 +2470,10 @@ object VersionedTable {
     val n = math.min(
       math.max(1L, (total + targetFileSizeBytes - 1) / targetFileSizeBytes),
       Int.MaxValue.toLong).toInt
-    compact(spark, table, n, maxRetries, zorderDims, zorderBits)
+    compact(spark, table, n, zorderDims, zorderBits)
   }
 
   def compact(spark: SparkSession, table: String, numFiles: Int,
-      maxRetries: Int = 20,
       zorderDims: Seq[org.apache.spark.sql.Column] = Nil,
       zorderBits: Int = 16,
       curve: String = "zorder"): Long = {
@@ -2389,69 +2481,60 @@ object VersionedTable {
       s"curve must be 'zorder' or 'hilbert', got '$curve'")
     require(curve != "hilbert" || zorderDims.size == 2,
       s"the hilbert curve is 2-D: pass exactly 2 dims, got ${zorderDims.size}")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (_, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) return -1L
-      val snapshot = snapRead(spark, table, files, lines)
-      val clusterCols = clusterColsOf(lines)
-      val rangeSorted = zorderDims.isEmpty && clusterCols.nonEmpty
-      val clustered =
-        if (rangeSorted) {
-          // no explicit dims on a clustered table: compaction preserves
-          // the write-time range layout instead of destroying it with a
-          // round-robin repartition
-          val cs = clusterCols.map(org.apache.spark.sql.functions.col)
-          snapshot.repartitionByRange(numFiles, cs: _*)
-            .sortWithinPartitions(cs: _*)
-        }
-        else if (zorderDims.isEmpty) snapshot.repartition(numFiles)
-        else {
-          // hilbert: unit-step locality — a file's key range is a compact
-          // blob, so min/max pruning on BOTH dims beats z-order's
-          // quadrant jumps for the same rewrite cost
-          val z =
-            if (curve == "hilbert") graft.functions.GraftFunctions
-              .hilbert(zorderBits)(zorderDims(0), zorderDims(1))
-            else graft.functions.GraftFunctions
-              .zvalue(zorderBits)(zorderDims: _*)
-          snapshot.withColumn("__graft_z", z)
-            .repartitionByRange(numFiles,
-              org.apache.spark.sql.functions.col("__graft_z"))
-            .sortWithinPartitions("__graft_z")
-            .drop("__graft_z")
-        }
-      val compacted = stage(spark,
-        stampFieldIds(clustered, schemaLine(lines)), table,
-        // z-order interleaving is NOT a lexicographic sort — only the
-        // preserved range layout may claim the sorted-file marker
-        sortedBy = if (rangeSorted) clusterCols else Nil)
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      // valid only while EVERY input file is still live (another
-      // compactor replacing them would make our commit duplicate rows)
-      // AND the pending delete layer is unchanged — a deleteByKeys/
-      // deleteWhereMergeOnRead that raced in adds NO data file, so the
-      // file check alone would pass and dropDeletes would then discard
-      // a layer this rewrite never applied (permanent data loss).
-      // Concurrent APPENDS are rebased over (kept alongside). Writer txn
-      // watermarks carry forward — a compaction must not make a streaming
-      // writer forget its committed epochs (that would re-admit replays).
-      val committed =
-        files.forall(files2.contains) &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
-            metaLines(lines2, "compact", dropDeletes = true) ++
-              compacted ++ files2.filterNot(files.contains))
-      if (committed) return v2 + 1
-      // lost the race — drop our staged output and retry from scratch
-      val f = fs(spark, table)
-      compacted.foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+    occCommit(spark, table, "compact") { (_, lines) =>
+      val files = dataFiles(lines)
+      if (files.isEmpty) Done(-1L)
+      else {
+        val snapshot = snapRead(spark, table, files, lines)
+        val clusterCols = clusterColsOf(lines)
+        val rangeSorted = zorderDims.isEmpty && clusterCols.nonEmpty
+        val clustered =
+          if (rangeSorted) {
+            // no explicit dims on a clustered table: compaction preserves
+            // the write-time range layout instead of destroying it with a
+            // round-robin repartition
+            val cs = clusterCols.map(org.apache.spark.sql.functions.col)
+            snapshot.repartitionByRange(numFiles, cs: _*)
+              .sortWithinPartitions(cs: _*)
+          }
+          else if (zorderDims.isEmpty) snapshot.repartition(numFiles)
+          else {
+            // hilbert: unit-step locality — a file's key range is a compact
+            // blob, so min/max pruning on BOTH dims beats z-order's
+            // quadrant jumps for the same rewrite cost
+            val z =
+              if (curve == "hilbert") graft.functions.GraftFunctions
+                .hilbert(zorderBits)(zorderDims(0), zorderDims(1))
+              else graft.functions.GraftFunctions
+                .zvalue(zorderBits)(zorderDims: _*)
+            snapshot.withColumn("__graft_z", z)
+              .repartitionByRange(numFiles,
+                org.apache.spark.sql.functions.col("__graft_z"))
+              .sortWithinPartitions("__graft_z")
+              .drop("__graft_z")
+          }
+        val compacted = stage(spark,
+          stampFieldIds(clustered, schemaLine(lines)), table,
+          // z-order interleaving is NOT a lexicographic sort — only the
+          // preserved range layout may claim the sorted-file marker
+          sortedBy = if (rangeSorted) clusterCols else Nil)
+        // valid only while EVERY input file is still live (another
+        // compactor replacing them would make our commit duplicate rows)
+        // AND the pending delete layer is unchanged — a deleteByKeys/
+        // deleteWhereMergeOnRead that raced in adds NO data file, so the
+        // file check alone would pass and dropDeletes would then discard
+        // a layer this rewrite never applied (permanent data loss).
+        // Concurrent APPENDS are rebased over (kept alongside). Writer txn
+        // watermarks carry forward — a compaction must not make a streaming
+        // writer forget its committed epochs (that would re-admit replays).
+        Commit(Recheck((_, latest) =>
+            files.forall(dataFiles(latest).toSet) &&
+              deleteLayer(latest) == deleteLayer(lines)),
+          base => metaLines(base, "compact", dropDeletes = true) ++
+            compacted ++ dataFiles(base).filterNot(files.toSet),
+          staged = compacted)
+      }
     }
-    throw new IllegalStateException(s"compact lost $maxRetries commit races")
   }
 
   // ---------- row-level operations (copy-on-write) ----------
@@ -2585,65 +2668,51 @@ object VersionedTable {
     */
   private[sources] def commitReplaceFiles(spark: SparkSession, table: String,
       expectedSnapshot: Seq[String], remove: Seq[String], add: Seq[String],
-      op: String, maxRetries: Int = 20,
-      expectedLayer: Option[Set[String]] = None): Long = {
-    var attempt = 0
-    var cdcFiles: Seq[String] = Nil
-    var cdcStaged = false
-    try {
-      while (attempt < maxRetries) {
-        val (v, lines) = latestRaw(spark, table)
-        val files = lines.filterNot(_.startsWith("#"))
-        // a raced delete-LAYER commit changes no data file but the
-        // replacement files would escape it (fresh names/higher version),
-        // so it conflicts exactly like a moved snapshot
-        if (files.toSet != expectedSnapshot.toSet ||
-            expectedLayer.exists(_ != deleteLayer(lines)))
-          throw new java.util.ConcurrentModificationException(
-            s"$op of $table: snapshot changed since the statement's scan — " +
-              "re-run the statement")
-        if (!cdcStaged && (remove.nonEmpty || add.nonEmpty)) {
-          cdcStaged = true
-          // SQL rewrites only hand over final rows — derive this
-          // commit's changes from its touched files (EXCEPT ALL under
-          // the pinned layers), labeled by op like readChangesCDF
-          cdcFiles = stageCdcIfEnabled(spark, table, lines, {
-            import org.apache.spark.sql.functions.lit
-            val declared = schemaLine(lines)
-            val pre = readFilesDeleteAware(spark, table, remove, declared,
-              delLines(lines), keepFileCol = false,
-              posDels = delPosLines(lines))
-            val post = readFiles(spark, table, add, declared)
-            val preD = pre.exceptAll(post)
-            val postD = post.exceptAll(pre)
-            op match {
-              case "update" =>
-                preD.withColumn(ChangeTypeCol, lit("update_preimage"))
-                  .unionByName(postD.withColumn(ChangeTypeCol,
-                    lit("update_postimage")))
-              case "delete" =>
-                preD.withColumn(ChangeTypeCol, lit("delete"))
-              case _ =>
-                preD.withColumn(ChangeTypeCol, lit("delete"))
-                  .unionByName(postD.withColumn(ChangeTypeCol,
-                    lit("insert")))
-            }
-          })
-        }
-        if (tryCommit(spark, table, v + 1,
-            metaLines(lines, op) ++ cdcFiles.map(CdcPrefix + _) ++
-              files.filterNot(remove.contains) ++ add)) return v + 1
-        attempt += 1
-      }
-      throw new IllegalStateException(
-        s"$op lost $maxRetries commit races for $table")
-    } catch {
-      case e: Throwable =>
-        val f = fs(spark, table)
-        cdcFiles.foreach(n => f.delete(new Path(table, n), false))
-        throw e
+      op: String, expectedLayer: Option[Set[String]] = None): Long =
+    // conflict rule ABORT: the precondition below re-runs per attempt,
+    // so any commit that moved the files or the layer — including one
+    // that won the publish race — throws instead of rebasing
+    occCommit(spark, table, op) { (_, lines) =>
+      // a raced delete-LAYER commit changes no data file but the
+      // replacement files would escape it (fresh names/higher version),
+      // so it conflicts exactly like a moved snapshot
+      if (dataFiles(lines).toSet != expectedSnapshot.toSet ||
+          expectedLayer.exists(_ != deleteLayer(lines)))
+        throw new java.util.ConcurrentModificationException(
+          s"$op of $table: snapshot changed since the statement's scan — " +
+            "re-run the statement")
+      // SQL rewrites only hand over final rows — derive this commit's
+      // changes from its touched files (EXCEPT ALL under the pinned
+      // layers), labeled by op like readChangesCDF
+      val cdc =
+        if (remove.isEmpty && add.isEmpty) Nil
+        else stageCdcIfEnabled(spark, table, lines, {
+          import org.apache.spark.sql.functions.lit
+          val declared = schemaLine(lines)
+          val pre = readFilesDeleteAware(spark, table, remove, declared,
+            delLines(lines), keepFileCol = false,
+            posDels = delPosLines(lines))
+          val post = readFiles(spark, table, add, declared)
+          val preD = pre.exceptAll(post)
+          val postD = post.exceptAll(pre)
+          op match {
+            case "update" =>
+              preD.withColumn(ChangeTypeCol, lit("update_preimage"))
+                .unionByName(postD.withColumn(ChangeTypeCol,
+                  lit("update_postimage")))
+            case "delete" =>
+              preD.withColumn(ChangeTypeCol, lit("delete"))
+            case _ =>
+              preD.withColumn(ChangeTypeCol, lit("delete"))
+                .unionByName(postD.withColumn(ChangeTypeCol,
+                  lit("insert")))
+          }
+        })
+      Commit(Rebase, base =>
+        metaLines(base, op) ++ cdc.map(CdcPrefix + _) ++
+          dataFiles(base).filterNot(remove.contains) ++ add,
+        staged = cdc)
     }
-  }
 
   /** Keyed UPSERT (merge): rows of `updates` REPLACE current rows with
     * the same `key`; unmatched update rows are inserts. Copy-on-write:
@@ -2672,13 +2741,20 @@ object VersionedTable {
     *   [[graft.streaming.VersionedSink.upsertExactlyOnce]]).
     */
   def upsert(spark: SparkSession, updates0: DataFrame, table: String,
-      key: String, maxRetries: Int = 20,
-      txn: Option[(String, Long)] = None): Long = {
+      key: String, txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{col, max => smax, min => smin}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+    txn.foreach { case (w, _) =>
+      require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
+        "writerId must be non-empty, no spaces")
+    }
+    val (v0, lines0) = latestRaw(spark, table)
+    // replay check BEFORE staging anything
+    if (txn.exists { case (w, e) => txnMap(lines0).get(w).exists(_ >= e) })
+      return v0
     // align to the declared schema up front so the rewritten survivors
     // (read under that schema) union cleanly with the update rows
-    val updates = schemaLine(latestRaw(spark, table)._2) match {
+    val updates = schemaLine(lines0) match {
       case Some(sc) => alignToSchema(updates0, sc, evolve = false, table)._1
       case None => updates0
     }
@@ -2703,42 +2779,22 @@ object VersionedTable {
       // the watermark must still advance — the batch WAS processed —
       // so route through the idempotent append.
       return txn match {
-        case Some((w, e)) =>
-          appendIdempotent(spark, updates, table, w, e, maxRetries)
+        case Some((w, e)) => appendIdempotent(spark, updates, table, w, e)
         case None =>
           if (updates.isEmpty) latest(spark, table)._1
-          else append(spark, updates, table, maxRetries)
+          else append(spark, updates, table)
       }
     }
     val (lo, hi) = (b.get(0), b.get(1))
     val conf = spark.sparkContext.hadoopConfiguration
-    txn.foreach { case (w, _) =>
-      require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
-        "writerId must be non-empty, no spaces")
-    }
-    // replay check BEFORE staging anything
-    txn match {
-      case Some((w, e))
-          if txnMap(latestRaw(spark, table)._2).get(w).exists(_ >= e) =>
-        return latest(spark, table)._1
-      case _ =>
-    }
     val newFiles = stage(spark, updates, table, cluster = true)
-    var attempt = 0
-    var lastRewritten: Seq[String] = Nil
-    try {
-      while (attempt < maxRetries) {
-        val (_, lines) = latestRaw(spark, table)
-        val files = lines.filterNot(_.startsWith("#"))
-        // replay re-check inside the OCC loop: a racing instance of the
-        // same writer may have committed this epoch while we retried
-        txn match {
-          case Some((w, e)) if txnMap(lines).get(w).exists(_ >= e) =>
-            val f = fs(spark, table)
-            newFiles.foreach(n => f.delete(new Path(table, n), false))
-            return latest(spark, table)._1
-          case _ =>
-        }
+    try occCommit(spark, table, "upsert", owned = newFiles) { (v, lines) =>
+      // replay re-check per attempt: a racing instance of the same
+      // writer may have committed this epoch while we retried
+      if (txn.exists { case (w, e) => txnMap(lines).get(w).exists(_ >= e) })
+        Done(v, discard = true)
+      else {
+        val files = dataFiles(lines)
         val affected = files.filter(n =>
           fileIntersects(conf, new Path(table, n), key, lo, hi, isString))
         // delete-aware snapshot read (NOT a raw parquet read): a
@@ -2776,56 +2832,30 @@ object VersionedTable {
                 .withColumn(ChangeTypeCol, lit("insert")))
           }
         })
-        lastRewritten = rewritten ++ cdc
-        commitRaceHook()
-        val (v2, lines2) = latestRaw(spark, table)
-        val files2 = lines2.filterNot(_.startsWith("#"))
         // WRITE-WRITE conflict detection (Delta's ConcurrentAppend rule):
         // a file appended between our snapshot and our commit may hold
         // rows with keys this upsert replaces — rebasing over it would
         // leave both versions live. Rebase only appends whose footer key
         // range is DISJOINT from the update range; otherwise retry from
-        // the new snapshot (the re-run anti-joins them too).
-        val racedAppends = files2.filterNot(files.contains)
-        val conflicting = racedAppends.exists(n =>
-          fileIntersects(conf, new Path(table, n), key, lo, hi, isString))
-        val meta = txn match {
-          case Some((w, e)) =>
-            lines2.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-              l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-              l.startsWith(PropPrefix)) ++
-              txnLines(txnMap(lines2) + (w -> e)) :+ (OpPrefix + "upsert")
-          case None => metaLines(lines2, "upsert")
-        }
-        // the rewritten files escape any delete layer committed AFTER
-        // our snapshot read (fresh names, higher file version), so a
-        // changed layer forces a retry like a conflicting append
-        val committed = !conflicting &&
-          affected.forall(files2.contains) &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-            tryCommit(spark, table, v2 + 1,
-              meta ++ cdc.map(CdcPrefix + _) ++
-                files2.filterNot(affected.contains) ++ rewritten ++ newFiles)
-        if (committed) return v2 + 1
-        val f = fs(spark, table)
-        (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-        lastRewritten = Nil
-        attempt += 1
+        // the new snapshot (the re-run anti-joins them too). The
+        // rewritten files escape any delete layer committed AFTER our
+        // snapshot read (fresh names, higher file version), so a changed
+        // layer forces a retry like a conflicting append. Sustained
+        // intersecting appends legitimately starve an optimistic upsert
+        // — Delta's ConcurrentAppendException: the caller backs off.
+        Commit(Recheck { (_, latest) =>
+            val files2 = dataFiles(latest)
+            !files2.filterNot(files.contains).exists(n => fileIntersects(
+              conf, new Path(table, n), key, lo, hi, isString)) &&
+              affected.forall(files2.contains) &&
+              deleteLayer(latest) == deleteLayer(lines)
+          },
+          base => metaLines(base, "upsert", txn = txn) ++
+            cdc.map(CdcPrefix + _) ++
+            dataFiles(base).filterNot(affected.contains) ++ rewritten ++
+            newFiles,
+          staged = rewritten ++ cdc)
       }
-      val f = fs(spark, table)
-      newFiles.foreach(n => f.delete(new Path(table, n), false))
-      // sustained appends intersecting the key range legitimately starve
-      // an optimistic upsert — same contract as Delta's
-      // ConcurrentAppendException: the caller backs off and retries
-      throw new IllegalStateException(
-        s"upsert lost $maxRetries commit races (concurrent appends kept " +
-          "intersecting the update key range) — back off and retry")
-    } catch {
-      case e: Throwable if !e.isInstanceOf[IllegalStateException] =>
-        val f = fs(spark, table)
-        (newFiles ++ lastRewritten)
-          .foreach(n => f.delete(new Path(table, n), false))
-        throw e
     } finally updKeys.unpersist()
   }
 
@@ -2839,60 +2869,48 @@ object VersionedTable {
     */
   def update(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 20): Long = {
+      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "update needs at least one assignment")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) return v
-      val snap = snapReadWithFile(spark, table, files, lines)
-      assignments.keys.foreach { c =>
-        require(snap.columns.contains(c), s"no such column to SET: $c")
-      }
-      val affected = snap.where(predicate)
-        .select(col("__vt_file")).distinct().collect()
-        .map(_.getString(0)).toSeq
-      if (affected.isEmpty) return v
-      val hit = coalesce(predicate, lit(false))
-      val rewrittenDf = assignments.foldLeft(
-        snapRead(spark, table, affected, lines)) {
-        case (df, (c, expr)) =>
-          df.withColumn(c, when(hit, expr).otherwise(col(c)))
-      }
-      val rewritten = stage(spark,
-        stampFieldIds(rewrittenDf, schemaLine(lines)), table)
-      val cdc = stageCdcIfEnabled(spark, table, lines, {
-        // apply the assignments to the PRE rows (the hit predicate is
-        // over original columns, so it must not re-evaluate post-SET)
-        val pre = snapRead(spark, table, affected, lines).where(hit)
-        val post = assignments.foldLeft(pre) {
-          case (df, (c, expr)) => df.withColumn(c, expr)
+    occCommit(spark, table, "update") { (v, lines) =>
+      val files = dataFiles(lines)
+      val affected =
+        if (files.isEmpty) Nil
+        else {
+          val snap = snapReadWithFile(spark, table, files, lines)
+          assignments.keys.foreach { c =>
+            require(snap.columns.contains(c), s"no such column to SET: $c")
+          }
+          filesMatching(snap, predicate)
         }
-        pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(post.withColumn(ChangeTypeCol,
-            lit("update_postimage")))
-      })
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      // same conflict rule as delete: any raced data file → retry; a
-      // raced delete-LAYER commit changes no data file but the rewritten
-      // files would escape it (fresh names/higher version) → retry too
-      val committed =
-        files2.toSet == files.toSet &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
-            metaLines(lines2, "update") ++ cdc.map(CdcPrefix + _) ++
-              files2.filterNot(affected.contains) ++ rewritten)
-      if (committed) return v2 + 1
-      val f = fs(spark, table)
-      (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+      if (affected.isEmpty) Done(v)
+      else {
+        val hit = coalesce(predicate, lit(false))
+        val rewrittenDf = assignments.foldLeft(
+          snapRead(spark, table, affected, lines)) {
+          case (df, (c, expr)) =>
+            df.withColumn(c, when(hit, expr).otherwise(col(c)))
+        }
+        val rewritten = stage(spark,
+          stampFieldIds(rewrittenDf, schemaLine(lines)), table)
+        val cdc = stageCdcIfEnabled(spark, table, lines, {
+          // apply the assignments to the PRE rows (the hit predicate is
+          // over original columns, so it must not re-evaluate post-SET)
+          val pre = snapRead(spark, table, affected, lines).where(hit)
+          val post = assignments.foldLeft(pre) {
+            case (df, (c, expr)) => df.withColumn(c, expr)
+          }
+          pre.withColumn(ChangeTypeCol, lit("update_preimage"))
+            .unionByName(post.withColumn(ChangeTypeCol,
+              lit("update_postimage")))
+        })
+        // same conflict rule as delete
+        Commit(sameFilesAndLayer(lines), base =>
+          metaLines(base, "update") ++ cdc.map(CdcPrefix + _) ++
+            dataFiles(base).filterNot(affected.contains) ++ rewritten,
+          staged = rewritten ++ cdc)
+      }
     }
-    throw new IllegalStateException(s"update lost $maxRetries commit races")
   }
 
   /** Atomic predicate overwrite (Delta's replaceWhere): ONE commit that
@@ -2905,33 +2923,24 @@ object VersionedTable {
     */
   def replaceWhere(spark: SparkSession, df: DataFrame, table: String,
       predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20, sortedBy: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+      sortedBy: Seq[String] = Nil): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val lines1 = latestRaw(spark, table)._2
     val newFiles = stage(spark,
       stampFieldIds(df, schemaLine(lines1)), table, cluster = true,
       sortedBy = sortedBy)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (_, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      val (affected, rewritten) =
-        if (files.isEmpty) (Nil, Nil)
-        else {
-          val snap = snapReadWithFile(spark, table, files, lines)
-          val aff = snap.where(predicate)
-            .select(col("__vt_file")).distinct().collect()
-            .map(_.getString(0)).toSeq
-          if (aff.isEmpty) (Nil, Nil)
-          else {
-            val survivors = snapRead(spark, table, aff, lines)
-              .where(not(coalesce(predicate, lit(false))))
-            (aff, stage(spark,
-              stampFieldIds(survivors, schemaLine(lines)), table))
-          }
-        }
+    occCommit(spark, table, "replaceWhere", owned = newFiles) { (_, lines) =>
+      val files = dataFiles(lines)
+      val affected =
+        if (files.isEmpty) Nil
+        else filesMatching(snapReadWithFile(spark, table, files, lines),
+          predicate)
+      val rewritten =
+        if (affected.isEmpty) Nil
+        else stage(spark, stampFieldIds(snapRead(spark, table, affected, lines)
+          .where(not(coalesce(predicate, lit(false)))), schemaLine(lines)),
+          table)
       val cdc = stageCdcIfEnabled(spark, table, lines, {
-        import org.apache.spark.sql.functions.lit
         val inserts = df.withColumn(ChangeTypeCol, lit("insert"))
         if (affected.isEmpty) inserts
         else snapRead(spark, table, affected, lines)
@@ -2941,24 +2950,12 @@ object VersionedTable {
           // the CDC rows mirror that
           .unionByName(inserts, allowMissingColumns = true)
       })
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      val committed =
-        files2.toSet == files.toSet &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
-            metaLines(lines2, "replace") ++ cdc.map(CdcPrefix + _) ++
-              files2.filterNot(affected.contains) ++ rewritten ++ newFiles)
-      if (committed) return v2 + 1
-      val f = fs(spark, table)
-      (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+      Commit(sameFilesAndLayer(lines), base =>
+        metaLines(base, "replace") ++ cdc.map(CdcPrefix + _) ++
+          dataFiles(base).filterNot(affected.contains) ++ rewritten ++
+          newFiles,
+        staged = rewritten ++ cdc)
     }
-    val f = fs(spark, table)
-    newFiles.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"replaceWhere lost $maxRetries commit races")
   }
 
   /** Overwrite: one atomic commit whose snapshot is exactly `df` — the
@@ -2968,7 +2965,7 @@ object VersionedTable {
     * loudly unless the consumer opted into skipping row-level commits.
     */
   def overwrite(spark: SparkSession, df: DataFrame, table: String,
-      maxRetries: Int = 20, evolveSchema: Boolean = false,
+      evolveSchema: Boolean = false,
       sortedBy: Seq[String] = Nil): Long = {
     val lines0 = latestRaw(spark, table)._2
     val (aligned, extras) = schemaLine(lines0) match {
@@ -2977,18 +2974,11 @@ object VersionedTable {
     }
     val staged = stage(spark, aligned, table, cluster = true,
       sortedBy = sortedBy)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val newSchema = schemaLine(lines).flatMap(widen(_, extras))
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "overwrite", newSchema,
-            dropDeletes = true) ++ staged)) return v + 1
-      attempt += 1
+    occCommit(spark, table, "overwrite", owned = staged) { (_, _) =>
+      Commit(Rebase, base =>
+        metaLines(base, "overwrite", schemaLine(base).flatMap(widen(_, extras)),
+          dropDeletes = true) ++ staged)
     }
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(s"overwrite lost $maxRetries commit races")
   }
 
   /** REPLACE TABLE: one atomic commit whose snapshot is exactly `df`
@@ -3003,7 +2993,7 @@ object VersionedTable {
     */
   def replaceTable(spark: SparkSession, df: DataFrame, table: String,
       schema0: org.apache.spark.sql.types.StructType,
-      maxRetries: Int = 20, sortedBy: Seq[String] = Nil): Long = {
+      sortedBy: Seq[String] = Nil): Long = {
     require(schema0.nonEmpty, s"cannot replace $table with an empty schema")
     // ids resolved ONCE before staging (files are written with them);
     // the commit's #fid only ever moves UP past concurrent allocations
@@ -3016,21 +3006,13 @@ object VersionedTable {
     val aligned = alignToSchema(df, schema, evolve = false, table)._1
     val staged = stage(spark, aligned, table, sortedBy = sortedBy,
       markerSchema = Some(schema))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val meta = lines.filter(l =>
-          l.startsWith(TxnPrefix) || l.startsWith(TagPrefix)) ++
-        Seq(SchemaPrefix + schema.json,
-          FidPrefix + math.max(fid, fidOf(lines)),
-          OpPrefix + "replace-table")
-      if (tryCommit(spark, table, v + 1, meta ++ staged)) return v + 1
-      attempt += 1
+    // old props and delete layers drop; txn watermarks and tags carry
+    occCommit(spark, table, "replaceTable", owned = staged) { (_, _) =>
+      Commit(Rebase, base =>
+        metaLines(base, "replace-table", Some(schema), dropDeletes = true,
+          newProps = Some(Map.empty),
+          newFid = Some(math.max(fid, fidOf(base)))) ++ staged)
     }
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"replaceTable lost $maxRetries commit races")
   }
 
   /** RESTORE TABLE to the snapshot of `version` (Delta `RESTORE ...
@@ -3056,8 +3038,7 @@ object VersionedTable {
     * layers reach into retained files). Changefeed consumers without
     * CDC see it as a row-level commit (resync or opt into skipping).
     */
-  def restore(spark: SparkSession, table: String, version: Long,
-      maxRetries: Int = 20): Long = {
+  def restore(spark: SparkSession, table: String, version: Long): Long = {
     import org.apache.spark.sql.functions.lit
     val f = fs(spark, table)
     require(version >= 1, s"cannot restore $table to version $version")
@@ -3074,56 +3055,49 @@ object VersionedTable {
         s"${gone.take(3).mkString(", ")}${if (gone.sizeIs > 3) ", …" else ""}" +
         " were vacuumed")
     val targetSchema = schemaLine(target)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      if (v == version) return v
-      val curFiles = lines.filterNot(_.startsWith("#"))
+    occCommit(spark, table, "restore") { (v, lines) =>
+      val curFiles = dataFiles(lines)
       val sameState = curFiles.toSet == targetFiles.toSet &&
         deleteLayer(lines) == deleteLayer(target) &&
         schemaLine(lines).map(_.json) == targetSchema.map(_.json)
-      if (sameState) return v
-      val removed = curFiles.filterNot(targetFiles.contains)
-      val added = targetFiles.filterNot(curFiles.contains)
-      val layerChanged = deleteLayer(lines) != deleteLayer(target)
-      // CDC context: current props decide enablement, but the change
-      // frame is built under the TARGET schema (the declared schema
-      // after this commit) so its field-id stamping matches
-      val cdcCtx = lines.filterNot(_.startsWith(SchemaPrefix)) ++
-        targetSchema.map(SchemaPrefix + _.json)
-      val cdc = stageCdcIfEnabled(spark, table, cdcCtx, {
-        val (preFiles, postFiles) =
-          if (layerChanged) (curFiles, targetFiles) else (removed, added)
-        val pre = readFilesDeleteAware(spark, table, preFiles, targetSchema,
-          delLines(lines), keepFileCol = false, posDels = delPosLines(lines))
-        val post = readFilesDeleteAware(spark, table, postFiles,
-          targetSchema, delLines(target), keepFileCol = false,
-          posDels = delPosLines(target))
-        pre.exceptAll(post).withColumn(ChangeTypeCol, lit("delete"))
-          .unionByName(
-            post.exceptAll(pre).withColumn(ChangeTypeCol, lit("insert")))
-      })
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      // strict conflict rule: ANY commit since the pinned snapshot (new
-      // files, layer change, schema change) invalidates the staged CDC
-      // diff and the no-op check — retry from scratch
-      val committed = v2 == v &&
-        tryCommit(spark, table, v2 + 1,
-          lines2.filter(l =>
-            l.startsWith(TxnPrefix) || l.startsWith(TagPrefix)) ++
-            targetSchema.map(SchemaPrefix + _.json).toSeq ++
-            Seq(FidPrefix + math.max(fidOf(lines2), fidOf(target))) ++
-            propLines(propMap(lines2)) ++
+      if (v == version || sameState) Done(v)
+      else {
+        val removed = curFiles.filterNot(targetFiles.contains)
+        val added = targetFiles.filterNot(curFiles.contains)
+        val layerChanged = deleteLayer(lines) != deleteLayer(target)
+        // CDC context: current props decide enablement, but the change
+        // frame is built under the TARGET schema (the declared schema
+        // after this commit) so its field-id stamping matches
+        val cdcCtx = lines.filterNot(_.startsWith(SchemaPrefix)) ++
+          targetSchema.map(SchemaPrefix + _.json)
+        val cdc = stageCdcIfEnabled(spark, table, cdcCtx, {
+          val (preFiles, postFiles) =
+            if (layerChanged) (curFiles, targetFiles) else (removed, added)
+          val pre = readFilesDeleteAware(spark, table, preFiles,
+            targetSchema, delLines(lines), keepFileCol = false,
+            posDels = delPosLines(lines))
+          val post = readFilesDeleteAware(spark, table, postFiles,
+            targetSchema, delLines(target), keepFileCol = false,
+            posDels = delPosLines(target))
+          pre.exceptAll(post).withColumn(ChangeTypeCol, lit("delete"))
+            .unionByName(
+              post.exceptAll(pre).withColumn(ChangeTypeCol, lit("insert")))
+        })
+        // strict conflict rule: ANY commit since the pinned snapshot (new
+        // files, layer change, schema change) invalidates the staged CDC
+        // diff and the no-op check — rescan from scratch. The schema,
+        // layers and stats come from the target; txn watermarks, tags,
+        // properties and the (never regressing) field-id mark carry.
+        Commit(sameVersion(v), base =>
+          metaLines(base.filterNot(_.startsWith(SchemaPrefix)), "restore",
+            newSchema = targetSchema, dropDeletes = true,
+            newFid = Some(math.max(fidOf(base), fidOf(target)))) ++
             target.filter(l => l.startsWith(DelPrefix) ||
               l.startsWith(DelPosPrefix) || l.startsWith(StatsPrefix)) ++
-            cdc.map(CdcPrefix + _) :+ (OpPrefix + "restore") :++
-            targetFiles)
-      if (committed) return v2 + 1
-      cdc.foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+            cdc.map(CdcPrefix + _) ++ targetFiles,
+          staged = cdc)
+      }
     }
-    throw new IllegalStateException(s"restore lost $maxRetries commit races")
   }
 
   // ---------- named snapshot refs (tags) ----------
@@ -3157,46 +3131,32 @@ object VersionedTable {
     * (unchanged when the tag already points there).
     */
   def tag(spark: SparkSession, table: String, name: String,
-      version: Option[Long] = None, maxRetries: Int = 20): Long = {
+      version: Option[Long] = None): Long = {
     requireTagName(name)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    occCommit(spark, table, "tag") { (v, lines) =>
       val target = version.getOrElse(v)
       require(target >= 1 && target <= v,
         s"cannot tag $table@$target: no such committed version (latest $v)")
       require(fs(spark, table).exists(commitPath(table, target)),
         s"cannot tag $table@$target: its manifest was vacuumed")
-      if (tagMap(lines).get(name).contains(target)) return v
-      val next = tagMap(lines) + (name -> target)
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "tag").filterNot(_.startsWith(TagPrefix)) ++
-            tagLines(next) ++ lines.filterNot(_.startsWith("#"))))
-        return v + 1
-      attempt += 1
+      if (tagMap(lines).get(name).contains(target)) Done(v)
+      else Commit(Rebase, base =>
+        metaLines(base, "tag", newTags = Some(tagMap(base) + (name -> target))) ++
+          dataFiles(base))
     }
-    throw new IllegalStateException(s"tag lost $maxRetries commit races")
   }
 
   /** Drop the named ref; its version stays time-travelable by number
     * until vacuum reclaims it. No-op (current version returned) if the
     * tag does not exist.
     */
-  def untag(spark: SparkSession, table: String, name: String,
-      maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      if (!tagMap(lines).contains(name)) return v
-      val next = tagMap(lines) - name
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "untag").filterNot(_.startsWith(TagPrefix)) ++
-            tagLines(next) ++ lines.filterNot(_.startsWith("#"))))
-        return v + 1
-      attempt += 1
+  def untag(spark: SparkSession, table: String, name: String): Long =
+    occCommit(spark, table, "untag") { (v, lines) =>
+      if (!tagMap(lines).contains(name)) Done(v)
+      else Commit(Rebase, base =>
+        metaLines(base, "untag", newTags = Some(tagMap(base) - name)) ++
+          dataFiles(base))
     }
-    throw new IllegalStateException(s"untag lost $maxRetries commit races")
-  }
 
   /** A version reference as read surfaces accept it: a bare number is
     * a commit version, anything else a tag name (loud error listing
@@ -3219,49 +3179,37 @@ object VersionedTable {
     * committed version (unchanged if nothing matched).
     */
   def delete(spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) return v
-      val snap = snapReadWithFile(spark, table, files, lines)
-      val affected = snap.where(predicate)
-        .select(col("__vt_file")).distinct().collect()
-        .map(_.getString(0)).toSeq
-      if (affected.isEmpty) return v
-      val survivors = snapRead(spark, table, affected, lines)
-        .where(not(coalesce(predicate, lit(false))))
-      val rewritten = stage(spark,
-        stampFieldIds(survivors, schemaLine(lines)), table)
-      val cdc = stageCdcIfEnabled(spark, table, lines,
-        snapRead(spark, table, affected, lines)
-          .where(coalesce(predicate, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete")))
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      // conflict rule: an arbitrary predicate can't be footer-checked
-      // against raced appends (they may contain matching rows), so ANY
-      // new data file forces a retry over the fresh snapshot; likewise
-      // a raced delete-layer commit (no data file change, but the
-      // rewritten files would escape the new layer). Stricter than
-      // upsert's key-range test; deletes under heavy append traffic
-      // pay retries, never correctness.
-      val committed =
-        files2.toSet == files.toSet &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
-            metaLines(lines2, "delete") ++ cdc.map(CdcPrefix + _) ++
-              files2.filterNot(affected.contains) ++ rewritten)
-      if (committed) return v2 + 1
-      val f = fs(spark, table)
-      (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+      predicate: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    occCommit(spark, table, "delete") { (v, lines) =>
+      val files = dataFiles(lines)
+      val affected =
+        if (files.isEmpty) Nil
+        else filesMatching(snapReadWithFile(spark, table, files, lines),
+          predicate)
+      if (affected.isEmpty) Done(v)
+      else {
+        val survivors = snapRead(spark, table, affected, lines)
+          .where(not(coalesce(predicate, lit(false))))
+        val rewritten = stage(spark,
+          stampFieldIds(survivors, schemaLine(lines)), table)
+        val cdc = stageCdcIfEnabled(spark, table, lines,
+          snapRead(spark, table, affected, lines)
+            .where(coalesce(predicate, lit(false)))
+            .withColumn(ChangeTypeCol, lit("delete")))
+        // conflict rule: an arbitrary predicate can't be footer-checked
+        // against raced appends (they may contain matching rows), so ANY
+        // new data file forces a retry over the fresh snapshot; likewise
+        // a raced delete-layer commit (no data file change, but the
+        // rewritten files would escape the new layer). Stricter than
+        // upsert's key-range test; deletes under heavy append traffic
+        // pay retries, never correctness.
+        Commit(sameFilesAndLayer(lines), base =>
+          metaLines(base, "delete") ++ cdc.map(CdcPrefix + _) ++
+            dataFiles(base).filterNot(affected.contains) ++ rewritten,
+          staged = rewritten ++ cdc)
+      }
     }
-    throw new IllegalStateException(s"delete lost $maxRetries commit races")
   }
 
   /** Delete data files referenced by NO manifest version >= `keepFrom`
@@ -3297,7 +3245,7 @@ object VersionedTable {
     *   advances the watermark (the batch WAS processed).
     */
   def deleteByKeys(spark: SparkSession, table: String, keys: DataFrame,
-      maxRetries: Int = 20, txn: Option[(String, Long)] = None): Long = {
+      txn: Option[(String, Long)] = None): Long = {
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
     keyCols.foreach(c => require(!c.exists(_.isWhitespace),
@@ -3321,51 +3269,30 @@ object VersionedTable {
     if (noKeys && txn.isEmpty) return latest(spark, table)._1
     val staged =
       if (noKeys) Nil else stage(spark, clean, table, prefix = "del-")
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      // replay re-check inside the OCC loop (racing instance of the
-      // same restarted query)
-      txn match {
-        case Some((w, e)) if txnMap(lines).get(w).exists(_ >= e) =>
-          staged.foreach(n => f.delete(new Path(table, n), false))
-          return v
-        case _ =>
+    occCommit(spark, table, "deleteByKeys", owned = staged) { (v, lines) =>
+      // replay re-check per attempt (racing instance of the same
+      // restarted query)
+      if (txn.exists { case (w, e) => txnMap(lines).get(w).exists(_ >= e) })
+        Done(v, discard = true)
+      else {
+        // CDF property on: record the exact rows this layer hides (the
+        // VISIBLE rows matching the keys) — costs one bounded scan, only
+        // when the table opted into the feed
+        val cdc =
+          if (noKeys) Nil
+          else stageCdcIfEnabled(spark, table, lines,
+            snapRead(spark, table, dataFiles(lines), lines)
+              .join(clean, keyCols, "left_semi")
+              .withColumn(ChangeTypeCol,
+                org.apache.spark.sql.functions.lit("delete")))
+        Commit(Rebase, base =>
+          metaLines(base, "delete-mor", txn = txn) ++
+            staged.map(n =>
+              DelPrefix + ((n +: (v + 1).toString +: keyCols).mkString(" "))) ++
+            cdc.map(CdcPrefix + _) ++ dataFiles(base),
+          staged = cdc)
       }
-      val meta = txn match {
-        case Some((w, e)) =>
-          lines.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-            l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-            l.startsWith(PropPrefix)) ++
-            txnLines(txnMap(lines) + (w -> e)) :+ (OpPrefix + "delete-mor")
-        case None => metaLines(lines, "delete-mor")
-      }
-      val newDelLines = staged.map(n =>
-        DelPrefix + ((n +: (v + 1).toString +: keyCols).mkString(" ")))
-      // CDF property on: record the exact rows this layer hides (the
-      // VISIBLE rows matching the keys) — costs one bounded scan, only
-      // when the table opted into the feed
-      val cdc =
-        if (noKeys) Nil
-        else stageCdcIfEnabled(spark, table, lines, {
-          import org.apache.spark.sql.functions.lit
-          val files = lines.filterNot(_.startsWith("#"))
-          readFilesDeleteAware(spark, table, files, schemaLine(lines),
-            delLines(lines), keepFileCol = false,
-            posDels = delPosLines(lines))
-            .join(clean, keyCols, "left_semi")
-            .withColumn(ChangeTypeCol, lit("delete"))
-        })
-      if (tryCommit(spark, table, v + 1,
-          meta ++ newDelLines ++ cdc.map(CdcPrefix + _) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      cdc.foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
     }
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"deleteByKeys lost $maxRetries commit races")
   }
 
   /** Merge-on-read DELETE by PREDICATE — [[deleteByKeys]]' arbitrary-
@@ -3391,49 +3318,27 @@ object VersionedTable {
     * file would silently miss.
     */
   def deleteWhereMergeOnRead(spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20): Long = {
-    import org.apache.spark.sql.functions.col
-    val f = fs(spark, table)
-    var attempt = 0
-    var staged: Seq[String] = Nil
-    try {
-      while (attempt < maxRetries) {
-        val (v, lines) = latestRaw(spark, table)
-        val files = lines.filterNot(_.startsWith("#"))
-        if (files.isEmpty) return v
-        val matched = snapReadWithFilePos(spark, table, files, lines)
-          .where(predicate)
-        val hits = matched.select(col("__vt_file"), col("__vt_pos"))
-        if (hits.isEmpty) return v
+      predicate: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions.{col, lit}
+    occCommit(spark, table, "deleteWhereMergeOnRead") { (v, lines) =>
+      val files = dataFiles(lines)
+      lazy val matched = snapReadWithFilePos(spark, table, files, lines)
+        .where(predicate)
+      lazy val hits = matched.select(col("__vt_file"), col("__vt_pos"))
+      if (files.isEmpty || hits.isEmpty) Done(v)
+      else {
         val posFiles = stage(spark, hits, table, prefix = "delpos-")
-        val cdc = stageCdcIfEnabled(spark, table, lines, {
-          import org.apache.spark.sql.functions.lit
+        val cdc = stageCdcIfEnabled(spark, table, lines,
           matched.drop("__vt_file", "__vt_pos")
-            .withColumn(ChangeTypeCol, lit("delete"))
-        })
-        staged = posFiles ++ cdc
-        val (v2, lines2) = latestRaw(spark, table)
+            .withColumn(ChangeTypeCol, lit("delete")))
         // any raced commit (append/rewrite/compact) invalidates the
         // scanned snapshot: stale positions would be wrong for rewritten
         // files and absent for new ones — rescan from scratch
-        val committed = v2 == v &&
-          tryCommit(spark, table, v2 + 1,
-            metaLines(lines2, "delete-mor") ++
-              posFiles.map(DelPosPrefix + _) ++
-              cdc.map(CdcPrefix + _) ++
-              lines2.filterNot(_.startsWith("#")))
-        if (committed) return v2 + 1
-        staged.foreach(n => f.delete(new Path(table, n), false))
-        staged = Nil
-        attempt += 1
+        Commit(sameVersion(v), base =>
+          metaLines(base, "delete-mor") ++ posFiles.map(DelPosPrefix + _) ++
+            cdc.map(CdcPrefix + _) ++ dataFiles(base),
+          staged = posFiles ++ cdc)
       }
-      throw new IllegalStateException(
-        s"deleteWhereMergeOnRead lost $maxRetries commit races")
-    } catch {
-      case e: Throwable =>
-        staged.foreach(n => f.delete(new Path(table, n), false))
-        throw e
     }
   }
 
@@ -3607,49 +3512,31 @@ object VersionedTable {
     * already has ids everywhere.
     */
   def materializeFieldIds(spark: SparkSession, table: String,
-      numFiles: Int, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+      numFiles: Int): Long =
+    occCommit(spark, table, "materializeFieldIds") { (v, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"materializeFieldIds needs a declared schema on $table"))
-      if (declared.fields.forall(f => fieldId(f).isDefined)) return v
-      val (idFields, fid) = assignIds(declared.fields.toSeq,
-        math.max(fidOf(lines), maxFieldId(declared)))
-      val idSchema = org.apache.spark.sql.types.StructType(idFields.toArray)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) {
-        // metadata-only flip: nothing to rewrite
-        if (tryCommit(spark, table, v + 1,
-            metaLines(lines, "schema", Some(idSchema), newFid = Some(fid))))
-          return v + 1
-        attempt += 1
-      } else {
-        val snapshot = snapRead(spark, table, files, lines)
-        val rewritten = stage(spark,
-          stampFieldIds(snapshot.repartition(numFiles), Some(idSchema)),
-          table)
-        commitRaceHook()
-        val (v2, lines2) = latestRaw(spark, table)
-        val files2 = lines2.filterNot(_.startsWith("#"))
+      if (declared.fields.forall(f => fieldId(f).isDefined)) Done(v)
+      else {
+        val (idFields, fid) = assignIds(declared.fields.toSeq,
+          math.max(fidOf(lines), maxFieldId(declared)))
+        val idSchema = org.apache.spark.sql.types.StructType(idFields.toArray)
+        val files = dataFiles(lines)
+        // nothing to rewrite on an empty table: a metadata-only flip
+        val rewritten =
+          if (files.isEmpty) Nil
+          else stage(spark, stampFieldIds(
+            snapRead(spark, table, files, lines).repartition(numFiles),
+            Some(idSchema)), table)
         // same conflict rules as compact: every input file still live,
         // delete layer unchanged; raced appends CANNOT rebase here
         // (they'd stay id-less under the new schema) — strict equality
-        val committed =
-          files2.toSet == files.toSet &&
-            deleteLayer(lines2) == deleteLayer(lines) &&
-            tryCommit(spark, table, v2 + 1,
-              metaLines(lines2, "schema", Some(idSchema),
-                dropDeletes = true, newFid = Some(fid)) ++ rewritten)
-        if (committed) return v2 + 1
-        val f = fs(spark, table)
-        rewritten.foreach(n => f.delete(new Path(table, n), false))
-        attempt += 1
+        Commit(sameFilesAndLayer(lines), base =>
+          metaLines(base, "schema", Some(idSchema),
+            dropDeletes = files.nonEmpty, newFid = Some(fid)) ++ rewritten,
+          staged = rewritten)
       }
     }
-    throw new IllegalStateException(
-      s"materializeFieldIds lost $maxRetries commit races")
-  }
 
   /** RENAME COLUMN: a metadata-only commit replacing the declared
     * schema — the field keeps its parquet field ID, so every data file
@@ -3662,14 +3549,12 @@ object VersionedTable {
     * layer keys on the column (its manifest line stores the NAME).
     */
   def renameColumn(spark: SparkSession, table: String, from: String,
-      to: String, maxRetries: Int = 20): Long = {
+      to: String): Long = {
     require(to.nonEmpty && !to.contains("\n") && !to.contains("."),
       "bad target name (rename the leaf only — no dots)")
     require(!ReservedCdfCols.exists(_.equalsIgnoreCase(to)),
       s"'$to' is a reserved change-data-feed column name")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    occCommit(spark, table, "renameColumn") { (_, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"renameColumn needs a declared schema on $table"))
       val parts = pathParts(declared, from)
@@ -3680,7 +3565,7 @@ object VersionedTable {
         s"column '$from' of $table has no field id — run " +
           "VersionedTable.materializeFieldIds first (schema-merge " +
           "evolution columns stay name-matched)")
-      val files = lines.filterNot(_.startsWith("#"))
+      val files = dataFiles(lines)
       if (parts.length == 1)
         require(filesCarryFieldIds(spark, table, files),
           s"$table has data files without physical field ids — a rename " +
@@ -3717,13 +3602,10 @@ object VersionedTable {
           Some(props1.getOrElse(props0) + (BucketByProperty -> s"$to,$n"))
         case _ => props1
       }
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(renamed), newProps = newProps) ++
-            files)) return v + 1
-      attempt += 1
+      Commit(Rebase, base =>
+        metaLines(base, "schema", Some(renamed), newProps = newProps) ++
+          dataFiles(base))
     }
-    throw new IllegalStateException(
-      s"renameColumn lost $maxRetries commit races")
   }
 
   /** DROP COLUMN: a metadata-only commit narrowing the declared schema.
@@ -3735,18 +3617,15 @@ object VersionedTable {
     * and refuses while a pending equality-delete layer keys on the
     * column.
     */
-  def dropColumn(spark: SparkSession, table: String, name: String,
-      maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+  def dropColumn(spark: SparkSession, table: String, name: String): Long =
+    occCommit(spark, table, "dropColumn") { (_, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"dropColumn needs a declared schema on $table"))
       val parts = pathParts(declared, name)
       requireNoConstraintOn(spark, lines, parts.head, table)
       val chain = fieldsAlong(declared, parts, table)
       val target = chain.last
-      val files = lines.filterNot(_.startsWith("#"))
+      val files = dataFiles(lines)
       if (parts.length == 1)
         require(!clusterColsOf(lines).exists(_.equalsIgnoreCase(name)),
           s"'$name' is a $ClusterByProperty column of $table — clear or " +
@@ -3776,13 +3655,9 @@ object VersionedTable {
         org.apache.spark.sql.types.StructType(
           st.fields.filterNot(_ eq target))
       }
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(narrowed)) ++ files)) return v + 1
-      attempt += 1
+      Commit(Rebase, base =>
+        metaLines(base, "schema", Some(narrowed)) ++ dataFiles(base))
     }
-    throw new IllegalStateException(
-      s"dropColumn lost $maxRetries commit races")
-  }
 
   /** Column position for [[moveColumn]] / SQL `ALTER TABLE ... ALTER
     * COLUMN x FIRST | AFTER y`.
@@ -3801,15 +3676,12 @@ object VersionedTable {
     * align by name, so existing writers are unaffected.
     */
   def moveColumn(spark: SparkSession, table: String, name: String,
-      position: ColumnPosition, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+      position: ColumnPosition): Long =
+    occCommit(spark, table, "moveColumn") { (v, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"moveColumn needs a declared schema on $table"))
       val parts = pathParts(declared, name)
       val target = fieldsAlong(declared, parts, table).last
-      val files = lines.filterNot(_.startsWith("#"))
       val moved = transformParentStruct(declared, parts, table) { st =>
         val rest = st.fields.filterNot(_ eq target)
         val reordered = position match {
@@ -3825,14 +3697,10 @@ object VersionedTable {
         }
         org.apache.spark.sql.types.StructType(reordered)
       }
-      if (moved == declared) return v // already in position: no commit
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(moved)) ++ files)) return v + 1
-      attempt += 1
+      if (moved == declared) Done(v) // already in position: no commit
+      else Commit(Rebase, base =>
+        metaLines(base, "schema", Some(moved)) ++ dataFiles(base))
     }
-    throw new IllegalStateException(
-      s"moveColumn lost $maxRetries commit races")
-  }
 
   private def manifestLinesAt(spark: SparkSession, table: String,
       version: Option[Long]): Seq[String] = version match {
@@ -3945,30 +3813,6 @@ object VersionedTable {
         fvAll.getOrElse(n, Long.MaxValue) <= maxDv)
       if (candidates.isEmpty) None
       else {
-        // one read per key-column group, version tagged by file name —
-        // by a constant when the group is one file (r16, same as
-        // readFilesDeleteAware)
-        val raw = spark.read
-          .parquet(group.map { case (delFile, _, _) =>
-            s"$table/$delFile" }: _*)
-        val tagged0 = group match {
-          case Seq((_, dv, _)) =>
-            raw.select(keyCols.map(col): _*)
-              .withColumn("__vt_dv", lit(dv))
-          case _ =>
-            val dvDf = {
-              import spark.implicits._
-              group.map { case (delFile, dv, _) => (delFile, dv) }
-                .toDF("__vt_dfile", "__vt_dv")
-            }
-            raw.select(keyCols.map(col) :+
-                element_at(split(col("_metadata.file_path"), "/"), -1)
-                  .as("__vt_dfile"): _*)
-              .join(broadcast(dvDf), Seq("__vt_dfile")).drop("__vt_dfile")
-        }
-        val keys = tagged0
-          .groupBy(keyCols.map(col): _*)
-          .agg(max(col("__vt_dv")).as("__vt_dv"))
         // declared schema so pre-evolution files missing a key column
         // read it as null (never matches) — same as the batch read path.
         // Field-id matching must be on here too: after a renameColumn,
@@ -3976,7 +3820,9 @@ object VersionedTable {
         // null and silently resolve zero dead rows.
         ensureFieldIdRead(spark, schema)
         val reader = schema.fold(spark.read)(sc => spark.read.schema(sc))
-        val base = reader.parquet(candidates.map(n => s"$table/$n"): _*)
+        val data = reader.parquet(candidates.map(n => s"$table/$n"): _*)
+        val keys = deleteKeyGroup(spark, table, group, keyCols, data.schema)
+        val base = data
           .select(keyCols.map(col) :+
             element_at(split(col("_metadata.file_path"), "/"), -1)
               .as("__vt_file") :+
@@ -4089,13 +3935,13 @@ object VersionedTable {
       l.startsWith(FidPrefix) || l.startsWith(PropPrefix) ||
       l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
       l.startsWith(StatsPrefix))
-    val committed = tryCommit(spark, target, 1L,
-      state ++ Seq(OpPrefix + "clone") ++ dataFiles)
-    // target-exists was checked above; a racer creating the same target
-    // concurrently is the only way to lose v1
-    require(committed,
-      s"clone lost the v1 commit race on $target (concurrent create?)")
-    1L
+    occCommit(spark, target, "cloneTable") { (v, _) =>
+      // target-exists was checked above; a racer creating the same
+      // target concurrently is the only way to find a version here
+      require(v == 0,
+        s"clone lost the v1 commit race on $target (concurrent create?)")
+      Commit(Rebase, _ => state ++ Seq(OpPrefix + "clone") ++ dataFiles)
+    }
   }
 
   def vacuum(spark: SparkSession, table: String, keepFrom: Long,

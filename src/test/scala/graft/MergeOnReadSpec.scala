@@ -311,49 +311,6 @@ class MergeOnReadSpec extends SparkTestBase {
     assert(rows(t) === Seq((1L, "a"), (3L, "c")))
   }
 
-  test("compact and CoW rewrites detect a raced delete-layer commit " +
-      "(metadata-only) and retry, never dropping or escaping it") {
-    // regression: the OCC checks compared only data-file sets; a raced
-    // deleteByKeys adds NO data file, so compact passed the check and
-    // dropDeletes discarded the never-applied layer (permanent loss).
-    val t = tmp()
-    VersionedTable.append(spark,
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), t)
-    // one-shot hook: a MoR delete lands inside compact's OCC window
-    var fired = false
-    VersionedTable.commitRaceHook = () => {
-      if (!fired) {
-        fired = true
-        VersionedTable.deleteByKeys(spark, t, Seq(2L).toDF("k"))
-      }
-    }
-    try VersionedTable.compact(spark, t, numFiles = 1)
-    finally VersionedTable.commitRaceHook = () => ()
-    assert(fired)
-    assert(rows(t) === Seq((1L, "a"), (3L, "c")))
-    // the retry materialized the layer: physically gone
-    val (_, files) = VersionedTable.latest(spark, t)
-    assert(spark.read.parquet(files.map(n => s"$t/$n"): _*)
-      .where(col("k") === 2L).count() === 0L)
-    // same window for a CoW update: the raced layer must survive the
-    // rewrite (retry applies it), not be escaped by fresh file names
-    val t2 = tmp()
-    VersionedTable.append(spark,
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), t2)
-    var fired2 = false
-    VersionedTable.commitRaceHook = () => {
-      if (!fired2) {
-        fired2 = true
-        VersionedTable.deleteByKeys(spark, t2, Seq(2L).toDF("k"))
-      }
-    }
-    try VersionedTable.update(spark, t2, col("k") === 3L,
-      Map("v" -> lit("C")))
-    finally VersionedTable.commitRaceHook = () => ()
-    assert(fired2)
-    assert(rows(t2) === Seq((1L, "a"), (3L, "C")))
-  }
-
   test("a watermark-only delete-mor commit (empty CDC batch) is a " +
       "changefeed no-op, not a row-level guard trip") {
     val t = tmp()
@@ -447,10 +404,8 @@ class MergeOnReadSpec extends SparkTestBase {
           case 3 =>
             val fresh = Seq((100L + i, s"a$i"))
             VersionedTable.append(spark, fresh.toDF("k", "v"), t)
-            // appends have no race window hook; a pending injection
-            // never fired — discard it
-            injected.clear()
-            model ++= fresh
+            // the append rebases over the raced layer
+            model = model -- injected ++ fresh
             s"append($fresh)"
         } finally VersionedTable.commitRaceHook = () => ()
       sync(step)
@@ -463,5 +418,31 @@ class MergeOnReadSpec extends SparkTestBase {
     val vDel = VersionedTable.deleteByKeys(spark, t, Seq(2L).toDF("k"))       // v2
     assert(VersionedTable.read(spark, t, 1L).count() === 2L)
     assert(VersionedTable.read(spark, t, vDel).count() === 1L)
+  }
+
+  test("delete layers whose key files drifted from INT32 to INT64 read " +
+      "under the table's key type") {
+    // Spark infers a multi-path read's schema from the footer of the
+    // lexicographically FIRST file, so the layer only fails to read when
+    // an INT32 key file sorts before the INT64 one: add INT32 layers (of
+    // absent keys) until one does
+    val t = tmp()
+    VersionedTable.append(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), t)
+    def delFiles: Seq[String] = new java.io.File(t).list().toSeq
+      .filter(n => n.startsWith("del-") && n.endsWith(".parquet")).sorted
+    VersionedTable.deleteByKeys(spark, t, Seq(2L).toDF("k")) // INT64 file
+    val longFile = delFiles.head
+    VersionedTable.deleteByKeys(spark, t, Seq(1).toDF("k"))  // INT32 file
+    var extra = 100
+    while (delFiles.head == longFile && extra < 140) {
+      VersionedTable.deleteByKeys(spark, t, Seq(extra).toDF("k"))
+      extra += 1
+    }
+    assert(delFiles.head != longFile, "an INT32 key file sorts first")
+    assert(rows(t) === Seq((3L, "c")))
+    // the DSv2 scan resolves the same layer to positions
+    assert(spark.read.format("graft-table").load(t)
+      .as[(Long, String)].collect().toSeq === Seq((3L, "c")))
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftCatalog, VersionedTable}
+import graft.sources.{GraftCatalog, VersionedTable, Wap}
 
 /** Named snapshot refs (Iceberg tag semantics): `tag()` pins a version
   * under a name in ONE metadata commit, every read surface resolves it
@@ -112,5 +112,32 @@ class TagSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       VersionedTable.tag(spark, path, "ghost", Some(99L))
     }
+  }
+
+  test("tags survive the exactly-once (txn watermark) commits") {
+    val t = tmp()
+    VersionedTable.append(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t) // v1
+    VersionedTable.tag(spark, t, "pin", Some(1L))
+    def check(step: String): Unit = {
+      assert(VersionedTable.tags(spark, t) === Map("pin" -> 1L), step)
+      VersionedTable.vacuum(spark, t, VersionedTable.latest(spark, t)._1,
+        retentionMs = 0L)
+      assert(VersionedTable.read(spark, t, 1L).count() === 2L, step)
+    }
+    VersionedTable.appendIdempotent(spark, Seq((3L, "c")).toDF("k", "v"), t,
+      "w", 1L)
+    check("appendIdempotent")
+    VersionedTable.upsert(spark, Seq((3L, "C")).toDF("k", "v"), t, "k",
+      txn = Some(("w", 2L)))
+    check("upsert with txn")
+    VersionedTable.deleteByKeys(spark, t, Seq(3L).toDF("k"),
+      txn = Some(("w", 3L)))
+    check("deleteByKeys with txn")
+    Wap.publish(spark, Wap.write(spark, Wap.begin(spark, t, "rel"),
+      Seq((4L, "d")).toDF("k", "v")))
+    check("Wap.publish")
+    assert(VersionedTable.read(spark, t).orderBy("k").as[(Long, String)]
+      .collect().toSeq === Seq((1L, "a"), (2L, "b"), (4L, "d")))
   }
 }

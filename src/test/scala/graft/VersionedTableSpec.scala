@@ -207,4 +207,45 @@ class VersionedTableSpec extends SparkTestBase {
     assert(spans.forall { case (sx, sy) => sx <= 31 && sy <= 31 },
       s"files must be sub-grid clustered, got spans ${spans.toSeq}")
   }
+
+  test("a won publish survives a failing temp-manifest cleanup") {
+    // the hard link published v2; the temp-file delete that follows
+    // fails. The commit must still count as won: reporting a lost race
+    // would retry and publish the same staged files again as v3.
+    val t = Files.createTempDirectory("vt_tmpdel").toString + "/t"
+    VersionedTable.append(spark, Seq((1, "a"), (2, "b")).toDF("k", "v"), t)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    FailingTmpDeleteFs.refused.set(0)
+    conf.set("fs.file.impl", classOf[FailingTmpDeleteFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    val v =
+      try VersionedTable.append(spark, Seq((3, "c")).toDF("k", "v"), t)
+      finally saved.foreach {
+        case (k, Some(old)) => conf.set(k, old)
+        case (k, None) => conf.unset(k)
+      }
+    assert(FailingTmpDeleteFs.refused.get() > 0, "cleanup failure injected")
+    assert(v === 2L)
+    assert(VersionedTable.versions(spark, t) === Seq(1L, 2L))
+    assert(VersionedTable.read(spark, t).count() === 3L)
+  }
+}
+
+/** Local filesystem whose deletes of `_commits/.tmp-*` files throw: the
+  * cleanup step after a manifest publish.
+  */
+class FailingTmpDeleteFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def delete(p: org.apache.hadoop.fs.Path,
+      recursive: Boolean): Boolean =
+    if (p.getName.startsWith(".tmp-") &&
+        p.getParent.getName == "_commits") {
+      FailingTmpDeleteFs.refused.incrementAndGet()
+      throw new java.io.IOException(s"injected delete failure: $p")
+    } else super.delete(p, recursive)
+}
+
+object FailingTmpDeleteFs {
+  val refused = new java.util.concurrent.atomic.AtomicInteger
 }
