@@ -1232,28 +1232,6 @@ object SparkEntry {
       out: DataFrame): DataFrame =
     runStreamTwinFiltered(s, root, out, col("user_id") >= 0)
 
-  /** State-partition count for a streaming twin, derived from the
-    * SHIPPED FEED's bytes (guide §2.2: derive partitioning from the
-    * input, never a constant) and capped at the session's parallelism
-    * — at scale the cap binds and keeps today's width; on a small feed
-    * it stops paying (stores × partitions × batches) lifecycle cost
-    * for partitions holding kilobytes. Measured on j1s (sf0.1, 32
-    * cpus): every micro-batch was a 32-task stage of state open/evict/
-    * commit at ~0.4 MB of feed per partition, and the 8-core driver
-    * run beating the 32-core run on every twin (BENCH_r15_c8) was the
-    * same fact. The per-partition byte target is ~1 MB — far below
-    * the guide's batch-shuffle band because state-store row operations
-    * cost ~two orders more per byte than a shuffle copy (measured
-    * ~0.5 s/MB of feed through insert+join+evict, vs ~10 ms/partition/
-    * batch of store lifecycle: the balance point is around a megabyte;
-    * a 64 MB target re-serialized the heavy batches, 64 KB re-bought
-    * the lifecycle tax — the r16 sweep is in OPTIMIZATION_r16.md).
-    * Overridable via graft.stream.statePartitionBytes.
-    */
-  private def twinStatePartitions(s: SparkSession, root: String): Int =
-    graft.streaming.StreamTune.partitionsFor(s,
-      graft.streaming.StreamTune.dirParquetBytes(root))
-
   /** [[runStreamTwin]] with a caller-chosen seal filter (the stream-
     * stream twins key on other columns than `user_id`).
     *
@@ -1275,7 +1253,7 @@ object SparkEntry {
     // freezes it into the checkpoint at first batch; the sizing
     // rationale and the synchronous-clone proof live in StreamTune)
     val q = graft.streaming.StreamTune.pinnedStart(s,
-      graft.streaming.StreamTune.dirParquetBytes(root)) {
+      graft.streaming.StreamTune.dirParquetBytes(s, root)) {
       val w = out.writeStream.outputMode("append")
         .option("checkpointLocation", root + "/ckpt")
       (if (fileSink) w.format("parquet").option("path", root + "/out")
@@ -1283,7 +1261,10 @@ object SparkEntry {
     }
     q.processAllAvailable()
     q.stop()
-    val sealedRows = (if (fileSink) s.read.parquet(root + "/out")
+    // explicit schema: a zero-row stream leaves only the sink's log,
+    // which would fail parquet schema inference
+    val sealedRows = (if (fileSink) s.read.schema(out.schema)
+        .parquet(root + "/out")
       else s.table(qn)).where(seal)
       .localCheckpoint(true)
     if (!fileSink) s.catalog.dropTempView(qn)
@@ -1547,7 +1528,7 @@ object SparkEntry {
           StructField("doc_id", LongType), StructField("text", StringType))))
         .option("maxFilesPerTrigger", 1).parquet(src)
       val q = graft.streaming.StreamTune.pinnedStart(s,
-        graft.streaming.StreamTune.dirParquetBytes(src)) {
+        graft.streaming.StreamTune.dirParquetBytes(s, src)) {
         graft.streaming.NearDupFeed.startGate(s, stream,
           root + "/idx", "doc_id", "text", threshold = 1.0,
           checkpoint = root + "/ckpt")
@@ -1843,7 +1824,7 @@ object SparkEntry {
         emb.where(col("vec_id") % 4 === 1),
         emb.where(col("vec_id") % 4 === 3)))
       val fq = graft.streaming.StreamTune.pinnedStart(s,
-        graft.streaming.StreamTune.dirParquetBytes(root + "/src")) {
+        graft.streaming.StreamTune.dirParquetBytes(s, root + "/src")) {
         graft.streaming.AnnFeed.startAppend(s, stream, idxDir,
           "vec_id", "embedding", root + "/ckpt")
       }
@@ -2151,7 +2132,7 @@ object SparkEntry {
         ev.where(col("event_id") % 2 === 0).drop("event_id"),
         ev.where(col("event_id") % 2 === 1).drop("event_id")))
       val fq = graft.streaming.StreamTune.pinnedStart(s,
-        graft.streaming.StreamTune.dirParquetBytes(root + "/src")) {
+        graft.streaming.StreamTune.dirParquetBytes(s, root + "/src")) {
         graft.streaming.SketchFeed.startTheta(s, stream,
           "ts", "slot", windowSeconds = 86400L, k = 4096,
           table = table, checkpoint = root + "/ckpt")
@@ -2183,7 +2164,7 @@ object SparkEntry {
         ev.where(col("event_id") % 2 === 0).drop("event_id"),
         ev.where(col("event_id") % 2 === 1).drop("event_id")))
       val fq = graft.streaming.StreamTune.pinnedStart(s,
-        graft.streaming.StreamTune.dirParquetBytes(root + "/src")) {
+        graft.streaming.StreamTune.dirParquetBytes(s, root + "/src")) {
         graft.streaming.SketchFeed.startCountMin(s, stream,
           "ts", "event_type", windowSeconds = 86400L,
           depth = 4, width = 4096, table = table,
@@ -4704,7 +4685,7 @@ object SparkEntry {
           StructField("doc_id", LongType), StructField("text", StringType))))
         .parquet(src)
       val q = graft.streaming.StreamTune.pinnedStart(s,
-        graft.streaming.StreamTune.dirParquetBytes(src)) {
+        graft.streaming.StreamTune.dirParquetBytes(s, src)) {
         graft.streaming.DecontaminateFeed.startScore(s, stream,
           root + "/idx", "doc_id", "text", maxOverlap = 0.5,
           checkpoint = root + "/ckpt")

@@ -45,10 +45,12 @@ import graft.sources.VersionedTable
   * the CDF window — bounded by each commit's touched files, never the
   * table — and (b) one linear scan of the view pruned to the touched
   * groups (semi join; AQE broadcasts the delta side when small). The
-  * source is never rescanned after [[create]]. Writes are two keyed
-  * commits at most (upsert survivors, delete emptied groups), each
-  * carrying a writer-txn watermark so a crashed-and-retried refresh is
-  * exactly-once (the Delta `txn` discipline).
+  * source is never rescanned after [[create]]. Writes are one keyed
+  * commit ([[VersionedTable.merge]]: upsert survivors, delete emptied
+  * groups) that also advances the view's writer-txn watermark and
+  * stamps the source version it reflects, so a crashed-and-retried
+  * refresh is exactly-once (the Delta `txn` discipline) and the stamp
+  * can never lag the state.
   *
   * Reference analog: the reference recomputes its BigQuery analytics
   * (the `Queries` folder's whole-table aggregates) from scratch every
@@ -91,6 +93,21 @@ object IncrementalView {
   def thetaCol(m: String): String = s"_mv_th_$m"
 
   private val Sep = "\u0001"
+
+  /** The writer id of the view's txn watermark (epoch = the source
+    * version folded in). Views last written by the two-commit apply
+    * (upsert, then delete) carry `graft-mv-upsert` / `graft-mv-delete`
+    * instead.
+    */
+  private val MvWriter = "graft-mv"
+
+  /** The source version whose window is already folded into the view:
+    * its watermark, else the legacy upsert one — past that, a retry
+    * would fold the upserted survivors a second time.
+    */
+  private def appliedEpoch(spark: SparkSession, view: String): Option[Long] =
+    VersionedTable.lastCommittedEpoch(spark, view, MvWriter).orElse(
+      VersionedTable.lastCommittedEpoch(spark, view, "graft-mv-upsert"))
 
   /** A key or measure spec is `name` (a source column) or `name=expr`
     * (any deterministic SQL expression over a source row — e.g.
@@ -322,16 +339,25 @@ object IncrementalView {
     }
 
   /** Fold one CDF frame (rows tagged `_change_type`) into the view state
-    * under idempotence epoch `epoch` — the shared core of the batch
+    * under idempotence epoch `epoch` and stamp `epoch` as the source
+    * version the view reflects — the shared core of the batch
     * [[refresh]] and the streaming [[startMaintain]]. Additive state
     * makes any partition of the feed into apply calls equivalent, as
     * long as each call's rows are all from commits <= its epoch and the
-    * calls arrive in commit order (both maintainers guarantee it).
+    * calls arrive in commit order (both maintainers guarantee it). A
+    * window already folded (a retry after the commit landed) only moves
+    * a stamp that lags.
     */
   private def applyCdf(spark: SparkSession, view: String, spec: Spec,
       cdf: DataFrame, epoch: Long,
       insertOnlyHint: Option[Boolean] = None): Unit = {
     import spec.scale
+    if (appliedEpoch(spark, view).exists(_ >= epoch)) {
+      if (spec.stampedVersion < epoch)
+        VersionedTable.alterProperties(spark, view,
+          Map(SourceVersionProperty -> epoch.toString))
+      return
+    }
     val keySpecs = parseSpecs(spec.keys)
     val measureSpecs = parseSpecs(spec.measures)
     val minmaxSpecs = parseSpecs(spec.minmax)
@@ -429,8 +455,6 @@ object IncrementalView {
       thetaM: Seq[String],
       scale: Int, epoch: Long,
       recomputed: Option[DataFrame] = None): Unit = {
-    if (delta.isEmpty) return
-
     // current state of ONLY the touched groups (semi join prunes the
     // view scan; AQE broadcasts the delta side when it is small)
     val curState = VersionedTable.read(spark, view)
@@ -501,25 +525,20 @@ object IncrementalView {
         .select(viewSchemaCols.map(col): _*)
       val dead = merged.where(col(RowsCol) <= 0L).select(KeyCol)
 
-      // writer-txn watermarks make a crashed-and-retried apply
-      // exactly-once: a re-run recomputes against the already-updated
-      // view, but its writes are skipped at the stamped epoch. Distinct
-      // writer ids per op — they are independently idempotent. The
-      // delete MUST run unconditionally: an empty batch still advances
-      // its watermark, and without that a retry whose recomputation
-      // (against the already-upserted state) produces spurious rows<=0
-      // groups would delete LIVE groups — the no-dead-groups first run
-      // would have left the delete watermark behind the epoch.
-      VersionedTable.upsert(spark, survivors, view, KeyCol,
-        txn = Some(("graft-mv-upsert", epoch)))
-      VersionedTable.deleteByKeys(spark, view, dead,
-        txn = Some(("graft-mv-delete", epoch)))
+      // ONE commit: survivors, dead groups, the writer-txn watermark and
+      // the source-version stamp land together, so a crashed apply left
+      // nothing behind and a retried one is skipped at the epoch — it
+      // can never fold the window a second time. An empty delta still
+      // commits (watermark + stamp, no data file).
+      VersionedTable.merge(spark, view, KeyCol, survivors, dead,
+        txn = Some((MvWriter, epoch)),
+        setProps = Map(SourceVersionProperty -> epoch.toString))
     } finally { merged.unpersist(false); () }
   }
 
   /** Fold the source commits past the stamped version into the view via
-    * its CDF. Returns the number of source versions applied (0 = the
-    * view was already fresh; no commit is written).
+    * its CDF, in one view commit. Returns the number of source versions
+    * applied (0 = the view was already fresh; no commit is written).
     */
   def refresh(spark: SparkSession, view: String): Long = {
     val spec = specOf(spark, view)
@@ -530,8 +549,6 @@ object IncrementalView {
     applyCdf(spark, view, spec, cdf, cur,
       insertOnlyHint =
         Some(VersionedTable.insertOnlyRange(spark, spec.source, from, cur)))
-    VersionedTable.alterProperties(spark, view,
-      Map(SourceVersionProperty -> cur.toString))
     cur - from
   }
 
@@ -601,13 +618,12 @@ object IncrementalView {
         val b = batch.toDF().persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          if (!b.isEmpty) {
+          // one job: the batch's max version, null for an empty batch
+          val top = b.agg(max(col("_commit_version"))).head()
+          if (!top.isNullAt(0)) {
             val s = batch.sparkSession
-            val epoch = b.agg(max(col("_commit_version"))).head().getLong(0)
             // re-read the spec each batch: the stamp moves under us
-            applyCdf(s, view, specOf(s, view), b, epoch)
-            VersionedTable.alterProperties(s, view,
-              Map(SourceVersionProperty -> epoch.toString))
+            applyCdf(s, view, specOf(s, view), b, top.getLong(0))
           }
         } finally { b.unpersist(false); () }
         ()

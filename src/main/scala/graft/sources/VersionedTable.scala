@@ -39,9 +39,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     moveColumn). No re-read: a raced commit makes the publish lose.
   *   - conditional rebase — re-read at commit time; rebase over raced
   *     appends unless they can hold rows the op rewrote: compact (all
-  *     inputs still live, delete layer unchanged), upsert (raced appends'
-  *     key ranges disjoint from the update range, rewritten files live,
-  *     layer unchanged).
+  *     inputs still live, delete layer unchanged), upsert and merge
+  *     (raced appends' key ranges disjoint from the upsert ∪ delete key
+  *     range, rewritten files live, layer unchanged).
   *   - retry — re-read; any change to the data files or the delete layer
   *     re-runs the op: delete, update, replaceWhere, materializeFieldIds.
   *   - rescan — re-read; ANY commit (even metadata) re-runs the op:
@@ -1151,11 +1151,7 @@ object VersionedTable {
   def alterProperties(spark: SparkSession, table: String,
       set: Map[String, String], unset: Seq[String] = Nil): Long = {
     require(set.nonEmpty || unset.nonEmpty, "nothing to change")
-    (set.keys ++ unset).foreach(k => require(
-      k.nonEmpty && !k.exists(_.isWhitespace),
-      s"property key '$k' must be non-empty and space-free"))
-    set.values.foreach(v => require(!v.contains("\n"),
-      "property values must be single-line"))
+    requirePropChange(set, unset)
     occCommit(spark, table, "alterProperties") { (_, lines) =>
       if (set.get(CdcProperty).exists(_.trim.equalsIgnoreCase("true")))
         // tables born via plain append have no declared schema line —
@@ -1205,6 +1201,23 @@ object VersionedTable {
           dataFiles(base))
     }
   }
+
+  /** Property keys must be space-free and values single-line: the
+    * manifest line format is `#prop <key> <rest-of-line value>`.
+    */
+  private def requirePropChange(set: Map[String, String],
+      unset: Seq[String]): Unit = {
+    (set.keys ++ unset).foreach(k => require(
+      k.nonEmpty && !k.exists(_.isWhitespace),
+      s"property key '$k' must be non-empty and space-free"))
+    set.values.foreach(v => require(!v.contains("\n"),
+      "property values must be single-line"))
+  }
+
+  /** Properties [[alterProperties]] validates against the table. */
+  private def validatedProp(k: String): Boolean =
+    Set(CdcProperty, ClusterByProperty, BucketByProperty).contains(k) ||
+      k.startsWith(ConstraintPrefix)
 
   /** Create an empty table with a declared schema: commit v1 with no
     * data files. The catalog / CTAS primitive — a table EXISTS once (and
@@ -1775,10 +1788,9 @@ object VersionedTable {
     */
   def appendIdempotent(spark: SparkSession, df: DataFrame, table: String,
       writerId: String, epoch: Long): Long = {
-    require(writerId.nonEmpty && !writerId.contains(" ") &&
-      !writerId.contains("\n"), "writerId must be non-empty, no spaces")
+    requireWriterId(writerId)
     val (v0, lines0) = latestRaw(spark, table)
-    if (txnMap(lines0).get(writerId).exists(_ >= epoch)) return v0
+    if (committed(lines0, Some(writerId -> epoch))) return v0
     val aligned = schemaLine(lines0) match {
       case Some(sc) => alignToSchema(df, sc, evolve = false, table)._1
       case None => df
@@ -1832,8 +1844,7 @@ object VersionedTable {
         owned = if (deleteOnDuplicate) files else Nil) { (v, lines) =>
       // the epoch check re-runs per attempt: a racing instance of this
       // writer may have committed it — the batch is already in the table
-      if (txnMap(lines).get(writerId).exists(_ >= epoch))
-        Done(v, discard = true)
+      if (committed(lines, Some(writerId -> epoch))) Done(v, discard = true)
       else {
         requireVersion.filter(_ != v).foreach { expect =>
           throw new IllegalStateException(
@@ -2552,7 +2563,8 @@ object VersionedTable {
     * parquet FOOTER's per-row-group min/max statistics — no data pages
     * are read. Conservative: unreadable footers, missing columns, or
     * absent statistics count as intersecting; an all-null block cannot
-    * match a non-null equality key and does not.
+    * match a non-null equality key and does not, nor can a file with no
+    * row group (an empty rewrite).
     */
   private def fileIntersects(conf: org.apache.hadoop.conf.Configuration,
       file: Path, key: String, lo: Any, hi: Any,
@@ -2560,6 +2572,7 @@ object VersionedTable {
     import scala.jdk.CollectionConverters._
     try {
       val md = readParquetFooter(conf, file)
+      if (md.getBlocks.isEmpty) return false
       val cols = md.getBlocks.asScala
         .flatMap(_.getColumns.asScala.filter(_.getPath.toDotString == key))
       if (cols.isEmpty) return true
@@ -2714,26 +2727,22 @@ object VersionedTable {
         staged = cdc)
     }
 
-  /** Keyed UPSERT (merge): rows of `updates` REPLACE current rows with
-    * the same `key`; unmatched update rows are inserts. Copy-on-write:
-    * only files whose footer key range intersects the updates' key range
-    * are rewritten (their survivors anti-joined against the update
-    * keys); every other file is carried into the new manifest untouched,
-    * and readers see one atomic snapshot flip. At 100 TB, pair with
-    * [[compact]]'s z-order clustering on the key: a narrow upsert then
-    * rewrites the handful of files covering its key range, not the
-    * table — the same footer-stats pruning that serves reads serves
-    * writes.
+  /** Keyed UPSERT: rows of `updates` REPLACE current rows with the same
+    * `key`; unmatched update rows are inserts. [[merge]] with no delete
+    * keys: copy-on-write, only files whose footer key range intersects
+    * the updates' key range are rewritten; every other file is carried
+    * into the new manifest untouched, and readers see one atomic
+    * snapshot flip. At 100 TB, pair with [[compact]]'s z-order
+    * clustering on the key: a narrow upsert then rewrites the handful of
+    * files covering its key range, not the table — the same
+    * footer-stats pruning that serves reads serves writes.
     *
     * `key` must be an integral or string column. SQL equality semantics:
     * null-keyed existing rows never match (they survive), null-keyed
-    * update rows are plain inserts. OCC like [[compact]]: the commit
-    * validates every rewritten input is still live, rebases over raced
-    * appends, and retries from scratch otherwise; writer txn watermarks
-    * carry forward. Returns the committed version (or the current one if
-    * `updates` is empty).
-    */
-  /** @param txn optional (writerId, epoch) idempotence watermark: the
+    * update rows are plain inserts. Returns the committed version (or
+    * the current one if `updates` is empty).
+    *
+    * @param txn optional (writerId, epoch) idempotence watermark: the
     *   upsert is a NO-OP if the writer already committed this epoch, and
     *   the commit records it — the exactly-once contract of
     *   [[appendIdempotent]] extended to merges, which is what a CDC
@@ -2741,122 +2750,204 @@ object VersionedTable {
     *   [[graft.streaming.VersionedSink.upsertExactlyOnce]]).
     */
   def upsert(spark: SparkSession, updates0: DataFrame, table: String,
-      key: String, txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, max => smax, min => smin}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-    txn.foreach { case (w, _) =>
-      require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
-        "writerId must be non-empty, no spaces")
-    }
+      key: String, txn: Option[(String, Long)] = None): Long =
+    keyedMerge(spark, table, key, updates0, None, txn, Map.empty, "upsert")
+
+  /** Keyed MERGE — the change-apply commit: rows of `upserts` replace
+    * current rows with the same `key` (unmatched rows are inserts) and
+    * current rows whose key is in `deleteKeys` (a frame with a `key`
+    * column) vanish, in ONE copy-on-write commit. The files whose footer
+    * key range meets (upsert keys ∪ delete keys) are rewritten with
+    * their survivors anti-joined against both key sets, so a delete
+    * leaves no `#del` layer for readers to apply. A key in both sets
+    * ends as its upsert row. The same commit advances `txn`'s writer
+    * watermark (a replayed epoch is a no-op, as in [[upsert]]) and sets
+    * `setProps` — plain properties only; the validated ones (CDF,
+    * clustering, bucketing, constraints) go through [[alterProperties]].
+    * With the change data feed on, replaced rows are `update_preimage`,
+    * deleted rows `delete`.
+    *
+    * Conflict rule (shared with [[upsert]]): rebase over raced appends
+    * whose footer key ranges miss the merged key range; retry on an
+    * intersecting append, a rewritten input gone, or a changed delete
+    * layer.
+    */
+  def merge(spark: SparkSession, table: String, key: String,
+      upserts: DataFrame, deleteKeys: DataFrame,
+      txn: Option[(String, Long)] = None,
+      setProps: Map[String, String] = Map.empty): Long = {
+    requirePropChange(setProps, Nil)
+    setProps.keys.foreach(k => require(!validatedProp(k),
+      s"merge cannot set $k — use alterProperties, which validates it"))
+    keyedMerge(spark, table, key, upserts, Some(deleteKeys), txn, setProps,
+      "merge")
+  }
+
+  /** Has the writer of `txn` already committed its epoch in `lines`? */
+  private def committed(lines: Seq[String],
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (w, e) => txnMap(lines).get(w).exists(_ >= e) }
+
+  private def requireWriterId(w: String): Unit =
+    require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
+      "writerId must be non-empty, no spaces")
+
+  /** The one body of [[upsert]] and [[merge]] (`deletes0` None: upsert,
+    * whose commits keep their `upsert` op marker).
+    */
+  private def keyedMerge(spark: SparkSession, table: String, key: String,
+      upserts0: DataFrame, deletes0: Option[DataFrame],
+      txn: Option[(String, Long)], setProps: Map[String, String],
+      op: String): Long = {
+    import org.apache.spark.sql.functions.{col, count, lit, when, max => smax, min => smin}
+    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+    txn.foreach { case (w, _) => requireWriterId(w) }
     val (v0, lines0) = latestRaw(spark, table)
     // replay check BEFORE staging anything
-    if (txn.exists { case (w, e) => txnMap(lines0).get(w).exists(_ >= e) })
-      return v0
+    if (committed(lines0, txn)) return v0
     // align to the declared schema up front so the rewritten survivors
-    // (read under that schema) union cleanly with the update rows
-    val updates = schemaLine(lines0) match {
-      case Some(sc) => alignToSchema(updates0, sc, evolve = false, table)._1
-      case None => updates0
+    // (read under that schema) union cleanly with the upsert rows
+    val upserts = schemaLine(lines0) match {
+      case Some(sc) => alignToSchema(upserts0, sc, evolve = false, table)._1
+      case None => upserts0
     }
-    val keyType = updates.schema(key).dataType
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    val keyType = upserts.schema(key).dataType
     val isString = keyType == StringType
-    require(isString ||
-      Set[org.apache.spark.sql.types.DataType](
-        ByteType, ShortType, IntegerType, LongType).contains(keyType),
-      s"upsert key must be integral or string, got $keyType")
-    val norm = if (isString) updates
-      else updates.withColumn(key, col(key).cast(LongType))
-    // the update-key projection drives the bounds agg AND every retry's
-    // anti-join — materialize it ONCE instead of re-deriving `updates`
-    // (often an expensive upstream frame) per consumer. NOT distinct:
-    // left_anti ignores duplicate build keys, and dropping the
-    // distinct saves a whole shuffle per upsert
-    val updKeys = norm.select(col(key)).where(col(key).isNotNull).persist()
-    val b = updKeys.agg(smin(col(key)), smax(col(key))).head()
-    if (b.isNullAt(0)) {
-      updKeys.unpersist()
-      // no non-null keys: pure insert (or nothing at all). With a txn
-      // the watermark must still advance — the batch WAS processed —
-      // so route through the idempotent append.
-      return txn match {
-        case Some((w, e)) => appendIdempotent(spark, updates, table, w, e)
-        case None =>
-          if (updates.isEmpty) latest(spark, table)._1
-          else append(spark, updates, table)
-      }
+    require(isString || integral(keyType),
+      s"$op key must be integral or string, got $keyType")
+    deletes0.foreach { d =>
+      val dt = d.schema(key).dataType
+      require(if (isString) dt == StringType else integral(dt),
+        s"$op delete key $dt does not match the upsert key $keyType")
     }
-    val (lo, hi) = (b.get(0), b.get(1))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val newFiles = stage(spark, updates, table, cluster = true)
-    try occCommit(spark, table, "upsert", owned = newFiles) { (v, lines) =>
-      // replay re-check per attempt: a racing instance of the same
-      // writer may have committed this epoch while we retried
-      if (txn.exists { case (w, e) => txnMap(lines).get(w).exists(_ >= e) })
-        Done(v, discard = true)
-      else {
-        val files = dataFiles(lines)
-        val affected = files.filter(n =>
-          fileIntersects(conf, new Path(table, n), key, lo, hi, isString))
-        // delete-aware snapshot read (NOT a raw parquet read): a
-        // pending merge-on-read layer may hide rows of the affected
-        // files, and a rewrite that copied them forward would give
-        // them a fresh name/higher file version that escapes both
-        // layer types — silently resurrecting deleted rows. ONE lazy
-        // frame shared by the survivor rewrite and the CDC staging
-        // (resolution work per snapshot version is cached, but the
-        // plan/setup cost isn't free either).
-        lazy val existing =
-          if (affected.isEmpty) null
-          else snapRead(spark, table, affected, lines)
-        val rewritten =
-          if (affected.isEmpty) Nil
-          else {
-            val survivors = existing.join(updKeys, Seq(key), "left_anti")
-            stage(spark, stampFieldIds(survivors, schemaLine(lines)), table)
+    def norm(df: DataFrame, isUpsert: Boolean): DataFrame =
+      df.select((if (isString) col(key) else col(key).cast(LongType)).as(key),
+        lit(isUpsert).as("__vt_up"))
+    // the key projection of both sides drives the one bounds/count job
+    // AND every attempt's anti-join — materialize it ONCE instead of
+    // re-deriving the inputs (often expensive upstream frames) per
+    // consumer. NOT distinct: left_anti ignores duplicate build keys,
+    // and dropping the distinct saves a whole shuffle per merge. Upsert
+    // rows with null keys stay in (they count as rows to insert).
+    val tagged = deletes0.foldLeft(norm(upserts, isUpsert = true)) {
+      (u, d) => u.unionByName(norm(d, isUpsert = false)
+        .where(col(key).isNotNull))
+    }.persist()
+    try {
+      val b = tagged.agg(smin(col(key)), smax(col(key)),
+        count(when(col("__vt_up"), lit(1)))).head()
+      val bounds = if (b.isNullAt(0)) None else Some((b.get(0), b.get(1)))
+      val hasUpserts = b.getLong(2) > 0
+      if (bounds.isEmpty && !hasUpserts && txn.isEmpty && setProps.isEmpty)
+        return v0
+      val keys = tagged.where(col(key).isNotNull)
+      val allKeys = keys.select(col(key))
+      val updKeys = keys.where(col("__vt_up")).select(col(key))
+      val conf = spark.sparkContext.hadoopConfiguration
+      // no non-null key: a pure insert (or a watermark/property-only
+      // commit), recorded as the append it is
+      val opName = if (bounds.isEmpty) "append" else op
+      occCommit(spark, table, opName) { (v, lines) =>
+        // replay re-check per attempt: a racing instance of the same
+        // writer may have committed this epoch while we retried
+        if (committed(lines, txn)) Done(v)
+        else {
+          val files = dataFiles(lines)
+          val affected = bounds.toSeq.flatMap { case (lo, hi) =>
+            files.filter(n => fileIntersects(conf, new Path(table, n), key,
+              lo, hi, isString))
           }
-        val cdc = stageCdcIfEnabled(spark, table, lines, {
-          // write-time rows give EXACT pre/post pairing (the derivation
-          // fallback can only say delete+insert): replaced rows are
-          // update_preimage, their new versions update_postimage,
-          // unmatched update rows plain inserts
-          import org.apache.spark.sql.functions.lit
-          if (affected.isEmpty)
-            updates.withColumn(ChangeTypeCol, lit("insert"))
-          else {
-            val pre = existing.join(updKeys, Seq(key), "left_semi")
-            val preKeys = pre.select(col(key))
-            pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(updates.join(preKeys, Seq(key), "left_semi")
-                .withColumn(ChangeTypeCol, lit("update_postimage")))
-              .unionByName(updates.join(preKeys, Seq(key), "left_anti")
-                .withColumn(ChangeTypeCol, lit("insert")))
+          // delete-aware snapshot read (NOT a raw parquet read): a
+          // pending merge-on-read layer may hide rows of the affected
+          // files, and a rewrite that copied them forward would give
+          // them a fresh name/higher file version that escapes both
+          // layer types — silently resurrecting deleted rows. ONE lazy
+          // frame shared by the survivor rewrite and the CDC staging
+          // (resolution work per snapshot version is cached, but the
+          // plan/setup cost isn't free either).
+          lazy val existing = snapRead(spark, table, affected, lines)
+          // ONE write per attempt: the affected files' survivors together
+          // with the upsert rows. A file whose every row was replaced or
+          // deleted leaves nothing, and an empty write stages an empty
+          // file: leave it out of the snapshot.
+          val added =
+            if (affected.isEmpty)
+              if (hasUpserts) stage(spark, upserts, table, cluster = true)
+              else Nil
+            else stage(spark, stampFieldIds(
+              existing.join(allKeys, Seq(key), "left_anti")
+                .unionByName(upserts, allowMissingColumns = true),
+              schemaLine(lines)), table, cluster = true).filter { n =>
+              val p = new Path(table, n)
+              val blocks = try readParquetFooter(conf, p).getBlocks.size
+                catch { case _: Exception => 1 }
+              if (blocks == 0) fs(spark, table).delete(p, false)
+              blocks > 0
+            }
+          // a pure insert needs no CDC file (the feed reads the added
+          // files as inserts), and neither does a merge that touched no
+          // file and added no row
+          val cdc =
+            if (bounds.isEmpty || (affected.isEmpty && !hasUpserts)) Nil
+            else stageCdcIfEnabled(spark, table, lines, {
+              // write-time rows give EXACT pre/post pairing (the
+              // derivation fallback can only say delete+insert):
+              // replaced rows are update_preimage, their new versions
+              // update_postimage, merged-away rows delete, unmatched
+              // upsert rows plain inserts
+              def tag(df: DataFrame, t: String) =
+                df.withColumn(ChangeTypeCol, lit(t))
+              if (affected.isEmpty) tag(upserts, "insert")
+              else {
+                val pre = existing.join(allKeys, Seq(key), "left_semi")
+                val preKeys = pre.select(col(key))
+                val preimages =
+                  if (deletes0.isEmpty) tag(pre, "update_preimage")
+                  else tag(pre.join(updKeys, Seq(key), "left_semi"),
+                      "update_preimage")
+                    .unionByName(tag(pre.join(updKeys, Seq(key),
+                      "left_anti"), "delete"))
+                preimages
+                  .unionByName(tag(upserts.join(preKeys, Seq(key),
+                    "left_semi"), "update_postimage"))
+                  .unionByName(tag(upserts.join(preKeys, Seq(key),
+                    "left_anti"), "insert"))
+              }
+            })
+          // WRITE-WRITE conflict detection (Delta's ConcurrentAppend
+          // rule): a file appended between our snapshot and our commit
+          // may hold rows with keys this merge replaces or deletes —
+          // rebasing over it would leave them live. Rebase only appends
+          // whose footer key range is DISJOINT from the merged range;
+          // otherwise retry from the new snapshot (the re-run anti-joins
+          // them too). The rewritten files escape any delete layer
+          // committed AFTER our snapshot read (fresh names, higher file
+          // version), so a changed layer forces a retry like a
+          // conflicting append. Sustained intersecting appends
+          // legitimately starve an optimistic merge — Delta's
+          // ConcurrentAppendException: the caller backs off. Without a
+          // key there is nothing to conflict with: rebase.
+          val rule = bounds match {
+            case None => Rebase
+            case Some((lo, hi)) => Recheck { (_, latest) =>
+              val files2 = dataFiles(latest)
+              !files2.filterNot(files.contains).exists(n => fileIntersects(
+                conf, new Path(table, n), key, lo, hi, isString)) &&
+                affected.forall(files2.contains) &&
+                deleteLayer(latest) == deleteLayer(lines)
+            }
           }
-        })
-        // WRITE-WRITE conflict detection (Delta's ConcurrentAppend rule):
-        // a file appended between our snapshot and our commit may hold
-        // rows with keys this upsert replaces — rebasing over it would
-        // leave both versions live. Rebase only appends whose footer key
-        // range is DISJOINT from the update range; otherwise retry from
-        // the new snapshot (the re-run anti-joins them too). The
-        // rewritten files escape any delete layer committed AFTER our
-        // snapshot read (fresh names, higher file version), so a changed
-        // layer forces a retry like a conflicting append. Sustained
-        // intersecting appends legitimately starve an optimistic upsert
-        // — Delta's ConcurrentAppendException: the caller backs off.
-        Commit(Recheck { (_, latest) =>
-            val files2 = dataFiles(latest)
-            !files2.filterNot(files.contains).exists(n => fileIntersects(
-              conf, new Path(table, n), key, lo, hi, isString)) &&
-              affected.forall(files2.contains) &&
-              deleteLayer(latest) == deleteLayer(lines)
-          },
-          base => metaLines(base, "upsert", txn = txn) ++
-            cdc.map(CdcPrefix + _) ++
-            dataFiles(base).filterNot(affected.contains) ++ rewritten ++
-            newFiles,
-          staged = rewritten ++ cdc)
+          Commit(rule,
+            base => metaLines(base, opName, txn = txn,
+                newProps = if (setProps.isEmpty) None
+                  else Some(propMap(base) ++ setProps)) ++
+              cdc.map(CdcPrefix + _) ++
+              dataFiles(base).filterNot(affected.contains) ++ added,
+            staged = added ++ cdc)
+        }
       }
-    } finally updKeys.unpersist()
+    } finally { tagged.unpersist(); () }
   }
 
   /** Row-level UPDATE: SET `assignments` on rows matching `predicate`
@@ -3250,20 +3341,13 @@ object VersionedTable {
     require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
     keyCols.foreach(c => require(!c.exists(_.isWhitespace),
       s"key column name '$c' must not contain whitespace (manifest format)"))
-    txn.foreach { case (w, _) =>
-      require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
-        "writerId must be non-empty, no spaces")
-    }
+    txn.foreach { case (w, _) => requireWriterId(w) }
     val snapCols = read(spark, table).columns.toSet
     keyCols.foreach(c => require(snapCols.contains(c),
       s"delete key column '$c' is not a column of $table"))
     // replay check BEFORE staging anything
-    txn match {
-      case Some((w, e))
-          if txnMap(latestRaw(spark, table)._2).get(w).exists(_ >= e) =>
-        return latest(spark, table)._1
-      case _ =>
-    }
+    val (v0, lines0) = latestRaw(spark, table)
+    if (committed(lines0, txn)) return v0
     val clean = keys.na.drop("any", keyCols).dropDuplicates(keyCols)
     val noKeys = clean.isEmpty
     if (noKeys && txn.isEmpty) return latest(spark, table)._1
@@ -3272,8 +3356,7 @@ object VersionedTable {
     occCommit(spark, table, "deleteByKeys", owned = staged) { (v, lines) =>
       // replay re-check per attempt (racing instance of the same
       // restarted query)
-      if (txn.exists { case (w, e) => txnMap(lines).get(w).exists(_ >= e) })
-        Done(v, discard = true)
+      if (committed(lines, txn)) Done(v, discard = true)
       else {
         // CDF property on: record the exact rows this layer hides (the
         // VISIBLE rows matching the keys) — costs one bounded scan, only

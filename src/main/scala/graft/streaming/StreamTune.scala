@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.execution.streaming.{AvailableNowTrigger, OneTimeTrigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Feed-sized shuffle/state partitioning for streaming queries (r16,
   * guide §2.2: derive partitioning from the input, never a constant).
@@ -23,7 +24,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * state-store row operations cost ~two orders more per byte than a
   * shuffle copy — the r16 sweep in OPTIMIZATION_r16.md), capped at the
   * session's default parallelism so a cluster-scale feed keeps exactly
-  * today's width.
+  * today's width. An unknown feed size (0 bytes) gets that cap too.
   *
   * [[pinnedStart]] sets the conf only for the query being started and
   * restores it immediately after `start()` returns — safe because the
@@ -33,24 +34,46 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamTune {
 
-  /** Sum of `.parquet` bytes under `path` (recursive) — the feed-size
-    * estimate for file-shipped fixtures and versioned tables alike.
+  /** Sum of `.parquet` bytes under `path` (recursive), resolved through
+    * the session's Hadoop FileSystem — the feed-size estimate for
+    * file-shipped fixtures and versioned tables alike, on any scheme.
+    * 0 when the path is missing or unreadable (size unknown).
     */
-  def dirParquetBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else if (f.getName.endsWith(".parquet")) f.length() else 0L
-    walk(new java.io.File(path))
+  def dirParquetBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(p, true)
+      var n = 0L
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.getPath.getName.endsWith(".parquet")) n += f.getLen
+      }
+      n
+    } catch { case _: java.io.IOException => 0L }
   }
 
+  /** Feed-sized width: ~`graft.stream.statePartitionBytes` per
+    * partition, at least 1, at most the session's default parallelism —
+    * which is also the width of an unknown (0-byte) feed.
+    */
   def partitionsFor(spark: SparkSession, feedBytes: Long): Int = {
+    val cap = spark.sparkContext.defaultParallelism.toLong
     val target = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(
         spark.conf.get("graft.stream.statePartitionBytes", "1MB"))
-    val byBytes = math.ceil(feedBytes.toDouble / target).toLong
-    math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, byBytes)).toInt
+    val byBytes =
+      if (feedBytes <= 0) cap else math.ceil(feedBytes.toDouble / target).toLong
+    math.max(1L, math.min(cap, byBytes)).toInt
+  }
+
+  /** Does `trigger` end the query once the available input is consumed?
+    * Only such a run can be sized from its feed: a continuous one would
+    * keep its start-time width after the feed grew.
+    */
+  def bounded(trigger: Trigger): Boolean = trigger match {
+    case AvailableNowTrigger | OneTimeTrigger => true
+    case _ => false
   }
 
   /** Run `start` (a `writeStream...start()` call) with

@@ -77,10 +77,10 @@ object VersionedSink {
     * (writerId, batchId) watermark, so crash-replayed delete batches
     * are no-ops and empty batches still advance the watermark. Pair
     * with a periodic [[VersionedTable.compact]] to materialize
-    * accumulated layers. A full CDC stream (upserts + deletes) splits
-    * into two foreachBatch sinks with DISTINCT writerIds, or applies
-    * both inside one foreachBatch: upsert first, then deleteByKeys with
-    * the batch's tombstone keys (its layer is newer, so it wins).
+    * accumulated layers. A full CDC stream (upserts + deletes) applies
+    * both inside one foreachBatch with [[VersionedTable.merge]]: one
+    * copy-on-write commit per batch, no delete layer left behind (see
+    * [[startReplicateCDF]]).
     */
   def deleteExactlyOnce(table: String,
       writerId: String): (Dataset[Row], Long) => Unit =
@@ -172,10 +172,10 @@ object VersionedSink {
     * [[VersionedTable.readChangesCDF]] and applies it to `dst` —
     * inserts/update-postimages upsert by `key`, deletes remove by key —
     * so UPDATE / MERGE / DELETE / merge-on-read commits on the source
-    * need NO resync. Exactly-once with zero external state: the upsert
-    * and delete sub-applies each carry their own txn watermark
-    * (`writerId#u` / `writerId#d`) at epoch = source version, so a
-    * crash between them resumes precisely where it stopped. `transform`
+    * need NO resync. Exactly-once with zero external state: upserts and
+    * deletes land in ONE [[VersionedTable.merge]] commit carrying the
+    * `writerId` txn watermark at epoch = source version, so a crash
+    * leaves either the whole range applied or none of it. `transform`
     * maps the CDF frame (still carrying `_change_type`) before apply —
     * filter/project but keep the column. Returns the source version now
     * reflected in `dst`.
@@ -188,35 +188,57 @@ object VersionedSink {
   def replicateCDF(spark: org.apache.spark.sql.SparkSession, src: String,
       dst: String, writerId: String, key: String,
       transform: DataFrame => DataFrame = identity): Long = {
-    import org.apache.spark.sql.functions.{col, row_number}
-    val from = math.min(
-      VersionedTable.lastCommittedEpoch(spark, dst, writerId + "#u")
-        .getOrElse(0L),
-      VersionedTable.lastCommittedEpoch(spark, dst, writerId + "#d")
-        .getOrElse(0L))
+    val from = appliedEpoch(spark, dst, writerId).getOrElse(0L)
     val (srcV, _) = VersionedTable.latest(spark, src)
     if (srcV <= from) return from
     val cdf = transform(
       VersionedTable.readChangesCDF(spark, src, from, srcV))
-    // fold to each key's LAST action in the range (commit order; within
-    // a commit an update's postimage beats its preimage)
+    applyLast(spark, lastChangePerKey(cdf, key), dst, writerId, key, srcV)
+    srcV
+  }
+
+  /** The source version `writerId` has applied to `dst`: its watermark,
+    * else — for a mirror last written by the two-commit apply — the
+    * lower of the legacy `writerId#u` / `writerId#d` ones (a range
+    * counts only once both its upserts and its deletes landed).
+    */
+  private def appliedEpoch(spark: org.apache.spark.sql.SparkSession,
+      dst: String, writerId: String): Option[Long] = {
+    def epoch(w: String) = VersionedTable.lastCommittedEpoch(spark, dst, w)
+    epoch(writerId).orElse(
+      for (u <- epoch(writerId + "#u"); d <- epoch(writerId + "#d"))
+        yield math.min(u, d))
+  }
+
+  /** Each key's LAST action in a CDF frame (commit order; within a
+    * commit an update's postimage beats its preimage).
+    */
+  private def lastChangePerKey(cdf: DataFrame, key: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, row_number}
     val rank = org.apache.spark.sql.expressions.Window
       .partitionBy(col(key))
       .orderBy(col("_commit_version").desc,
         // postimage/insert sorts before preimage/delete at equal version
         col("_change_type").isin("insert", "update_postimage").desc)
-    val last = cdf.withColumn("__rn", row_number().over(rank))
+    cdf.withColumn("__rn", row_number().over(rank))
       .where(col("__rn") === 1).drop("__rn")
+  }
+
+  /** Apply last-change-per-key rows to `dst` as ONE keyed merge commit
+    * at `epoch`: inserts/postimages upsert, deletes remove.
+    */
+  private def applyLast(spark: org.apache.spark.sql.SparkSession,
+      last: DataFrame, dst: String, writerId: String, key: String,
+      epoch: Long): Unit = {
+    import org.apache.spark.sql.functions.col
     val ups = last
       .where(col("_change_type").isin("insert", "update_postimage"))
       .drop("_change_type", "_commit_version")
     val dels = last.where(col("_change_type") === "delete")
       .select(col(key))
-    VersionedTable.upsert(spark, ups, dst, key,
-      txn = Some((writerId + "#u", srcV)))
-    VersionedTable.deleteByKeys(spark, dst, dels,
-      txn = Some((writerId + "#d", srcV)))
-    srcV
+    VersionedTable.merge(spark, dst, key, ups, dels,
+      txn = Some((writerId, epoch)))
+    ()
   }
 
   /** STREAMING keyed replication: the change-data-feed source piped
@@ -227,56 +249,51 @@ object VersionedSink {
     * watermarks (not the checkpoint) de-duplicate replays — the same
     * contract as every sink here. `src` must have
     * `graft.enableChangeDataFeed=true` so row-level commits stream as
-    * typed changes.
+    * typed changes. Each batch is one destination commit.
+    *
+    * A bounded run (`AvailableNow`/`Once`) pins a feed-sized shuffle
+    * width for the mirror's per-batch window/merge shuffles (see
+    * [[StreamTune]]), sized from the SOURCE table's bytes — the upper
+    * bound of what a full resync batch carries. A continuous trigger
+    * keeps the session width: the stream freezes its width into the
+    * checkpoint, and a start-time size would outlive the source's growth.
     */
   def startReplicateCDF(spark: org.apache.spark.sql.SparkSession,
       src: String, dst: String, writerId: String, key: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    // feed-sized shuffle width for the mirror's per-batch window/merge
-    // shuffles (r16, see StreamTune): sized from the SOURCE table's
-    // bytes — the upper bound of what a full resync batch carries
-    StreamTune.pinnedStart(spark, StreamTune.dirParquetBytes(src)) {
-      startReplicateCDFUnpinned(spark, src, dst, writerId, key,
-        checkpoint, trigger)
-    }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    def start = startReplicateCDFUnpinned(spark, src, dst, writerId, key,
+      checkpoint, trigger)
+    if (StreamTune.bounded(trigger))
+      StreamTune.pinnedStart(spark, StreamTune.dirParquetBytes(spark, src))(
+        start)
+    else start
+  }
 
   private def startReplicateCDFUnpinned(
       spark: org.apache.spark.sql.SparkSession,
       src: String, dst: String, writerId: String, key: String,
       checkpoint: String, trigger: Trigger): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, row_number}
+    import org.apache.spark.sql.functions.{col, max}
     spark.readStream.format("graft-table")
       .option("readChangeFeed", "true").load(src)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
         // ONE computation of the batch per trigger: the deduped
-        // last-change-per-key frame persists, and the emptiness probe,
-        // apply epoch (its max _commit_version equals the batch's —
-        // the key changed at the newest commit keeps that version),
-        // upserts and deletes all derive from it
-        val rank = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(key))
-          .orderBy(col("_commit_version").desc,
-            col("_change_type").isin("insert", "update_postimage").desc)
-        val last = batch.withColumn("__rn", row_number().over(rank))
-          .where(col("__rn") === 1).drop("__rn")
+        // last-change-per-key frame persists, and the apply epoch (its
+        // max _commit_version equals the batch's — the key changed at
+        // the newest commit keeps that version; null means an empty
+        // batch), upserts and deletes all derive from it
+        val s = batch.sparkSession
+        val last = lastChangePerKey(batch.toDF(), key)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          if (!last.isEmpty) {
-            val epoch = last.agg(
-              org.apache.spark.sql.functions.max(col("_commit_version")))
-              .head().getLong(0)
-            val ups = last
-              .where(col("_change_type").isin("insert", "update_postimage"))
-              .drop("_change_type", "_commit_version")
-            val dels = last.where(col("_change_type") === "delete")
-              .select(col(key))
-            graft.sources.VersionedTable.upsert(batch.sparkSession, ups,
-              dst, key, txn = Some((writerId + "#u", epoch)))
-            graft.sources.VersionedTable.deleteByKeys(batch.sparkSession,
-              dst, dels, txn = Some((writerId + "#d", epoch)))
-          }
+          val top = last.agg(max(col("_commit_version"))).head()
+          // the merge re-checks its own watermark; this also honors the
+          // legacy #u/#d pair of a mirror written by the two-commit apply
+          if (!top.isNullAt(0) &&
+              !appliedEpoch(s, dst, writerId).exists(_ >= top.getLong(0)))
+            applyLast(s, last, dst, writerId, key, top.getLong(0))
         } finally { last.unpersist(false); () }
         ()
       }

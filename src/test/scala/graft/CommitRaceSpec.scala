@@ -15,7 +15,8 @@ import graft.sources.VersionedTable
   * documented conflict rule's outcome — rebase (keep the raced commit,
   * commit over it), rebase-if (compact/upsert: rebase in one attempt
   * over a raced append they cannot conflict with, retry on a raced
-  * layer), retry / rescan (re-run over the raced snapshot, so the op
+  * layer; merge also retries on a raced append inside its key range),
+  * retry / rescan (re-run over the raced snapshot, so the op
   * also applies to the raced rows), abort (SQL DML throws
   * ConcurrentModificationException). A racer that hits EVERY attempt
   * exhausts the 20 attempts. No case leaves an orphaned staged file.
@@ -147,6 +148,13 @@ class CommitRaceSpec extends SparkTestBase {
         (10L, "r")),
       afterLayer = Seq((1L, "a"), (2L, "B"), (3L, "c"), (4L, "d")),
       attemptsAppend = 1),
+    // key range [2, 12] covers the raced append's key 10: a retry, whose
+    // re-run over the raced snapshot keeps (10,r)
+    Op("merge", "rebase-if",
+      t => VersionedTable.merge(spark, t, "k", Seq((2L, "B")).toDF("k", "v"),
+        Seq(3L, 12L).toDF("k")),
+      afterAppend = Seq((1L, "a"), (2L, "B"), (4L, "d"), (10L, "r")),
+      afterLayer = Seq((1L, "a"), (2L, "B"), (4L, "d"))),
     Op("delete", "retry",
       t => VersionedTable.delete(spark, t, col("v") === "r" || col("k") === 1L),
       afterAppend = seed.filterNot(_._1 == 1L),

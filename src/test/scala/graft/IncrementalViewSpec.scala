@@ -545,14 +545,95 @@ class IncrementalViewSpec extends SparkTestBase {
     val after = view(mv)
     assert(after.exists(r => r._1 == "a" && r._2 == 1L))
     // crash-retry: recomputation against the already-applied state
-    // yields merged rows = 1 + (-2) <= 0 — group 'a' looks dead. The
-    // unconditional (possibly-empty) delete of the first run advanced
-    // the graft-mv-delete watermark, so the spurious delete is skipped.
+    // would yield merged rows = 1 + (-2) <= 0 — group 'a' would look
+    // dead. The first run's one commit advanced the view's watermark to
+    // the epoch, so the retry folds nothing and deletes nothing.
     VersionedTable.alterProperties(spark, mv, Map(
       IncrementalView.SourceVersionProperty -> stampBefore))
     IncrementalView.refresh(spark, mv)
     assert(view(mv) === after)
     assert(view(mv) === direct(src))
+  }
+
+  /** (version, source stamp, `graft-mv` txn epoch) of each view
+    * manifest, read raw.
+    */
+  private def stampsAndEpochs(mv: String)
+      : Seq[(Long, Option[Long], Option[Long])] =
+    VersionedTable.versions(spark, mv).map { v =>
+      val lines = Files.readAllLines(
+        java.nio.file.Paths.get(mv, "_commits", f"v$v%08d"))
+      def valueOf(prefix: String): Option[Long] = {
+        val it = lines.iterator()
+        var out = Option.empty[Long]
+        while (it.hasNext) {
+          val l = it.next()
+          if (l.startsWith(prefix)) out = Some(l.drop(prefix.length).trim.toLong)
+        }
+        out
+      }
+      (v, valueOf(s"#prop ${IncrementalView.SourceVersionProperty} "),
+        valueOf("#txn graft-mv "))
+    }
+
+  test("one refresh is one view commit; every refreshed version's " +
+      "source stamp equals its mv txn epoch") {
+    val root = tmp()
+    val src = mkSource(root)
+    val mv = root + "/mv"
+    VersionedTable.append(spark,
+      Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "g", "v"), src)
+    IncrementalView.create(spark, src, mv, Seq("g"), Seq("v"))
+    val created = VersionedTable.versions(spark, mv).size
+    def refreshAddsOneVersion(): Unit = {
+      val n0 = VersionedTable.versions(spark, mv).size
+      assert(IncrementalView.refresh(spark, mv) > 0L)
+      assert(VersionedTable.versions(spark, mv).size === n0 + 1)
+      assert(view(mv) === direct(src))
+    }
+    // a new group, a replaced row and an emptied group in one window
+    VersionedTable.append(spark, Seq((3L, "c", 3.0)).toDF("id", "g", "v"),
+      src)
+    VersionedTable.upsert(spark, Seq((1L, "a", 5.0)).toDF("id", "g", "v"),
+      src, "id")
+    VersionedTable.delete(spark, src, col("g") === "b")
+    refreshAddsOneVersion()
+    assert(!view(mv).exists(_._1 == "b"))
+    // a window with no row change: the commit carries watermark + stamp
+    VersionedTable.compact(spark, src, numFiles = 1)
+    refreshAddsOneVersion()
+    val refreshed = stampsAndEpochs(mv).drop(created)
+    assert(refreshed.size === 2)
+    refreshed.foreach { case (v, stamp, epoch) =>
+      assert(epoch.isDefined && stamp === epoch, s"view v$v")
+    }
+    assert(refreshed.last._2 === Some(VersionedTable.latest(spark, src)._1))
+    // dead groups vanish in the rewrite: no delete layer on the view
+    assert(!VersionedTable.hasPendingEqualityDeletes(spark, mv))
+  }
+
+  test("a view left between the two-commit apply's upsert and delete " +
+      "resumes without folding the window twice") {
+    val root = tmp()
+    val src = mkSource(root)
+    val mv = root + "/mv"
+    VersionedTable.append(spark,
+      Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "g", "v"), src)
+    IncrementalView.create(spark, src, mv, Seq("g"), Seq("v"))
+    VersionedTable.append(spark, Seq((3L, "a", 4.0)).toDF("id", "g", "v"),
+      src)
+    val cur = VersionedTable.latest(spark, src)._1
+    // that apply's first commit: group a's folded state under the
+    // legacy writer id; the crash lost the delete and the stamp
+    val fresh = root + "/fresh"
+    IncrementalView.create(spark, src, fresh, Seq("g"), Seq("v"))
+    VersionedTable.upsert(spark,
+      VersionedTable.read(spark, fresh).where(col("g") === "a"), mv,
+      IncrementalView.KeyCol, txn = Some(("graft-mv-upsert", cur)))
+    assert(IncrementalView.refresh(spark, mv) === 1L)
+    assert(view(mv) === direct(src))
+    assert(VersionedTable.tableProperties(spark, mv)(
+      IncrementalView.SourceVersionProperty) === cur.toString)
   }
 
   test("synthetic key separator inside a key VALUE cannot collide " +

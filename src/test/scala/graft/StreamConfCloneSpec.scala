@@ -41,10 +41,69 @@ class StreamConfCloneSpec extends SparkTestBase {
 
   test("partitionsFor: feed-sized, floored at 1, capped at parallelism") {
     val f = graft.streaming.StreamTune.partitionsFor _
-    assert(f(spark, 0L) === 1)
+    // 0 bytes is an unknown feed size: the session parallelism
+    assert(f(spark, 0L) === spark.sparkContext.defaultParallelism)
     assert(f(spark, 1L) === 1)
     assert(f(spark, (2.5 * (1 << 20)).toLong) === 3)
     assert(f(spark, Long.MaxValue / 4) ===
       spark.sparkContext.defaultParallelism)
+  }
+
+  test("dirParquetBytes resolves through the Hadoop FileSystem: a file: " +
+      "URI sizes like the bare path; an empty or missing directory is " +
+      "unknown and gets the session parallelism") {
+    import graft.streaming.StreamTune
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_tune").toString
+    (1 to 100).map(i => (i.toLong, i % 7)).toDF("id", "k")
+      .coalesce(1).write.parquet(root + "/in")
+    val want = new java.io.File(root + "/in").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(want > 0L)
+    assert(StreamTune.dirParquetBytes(spark, root + "/in") === want)
+    assert(StreamTune.dirParquetBytes(spark, "file:" + root + "/in") === want)
+    assert(StreamTune.dirParquetBytes(spark, root) === want) // recursive
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(root, "empty"))
+    val empty = StreamTune.dirParquetBytes(spark, "file:" + root + "/empty")
+    assert(empty === 0L)
+    assert(StreamTune.dirParquetBytes(spark, root + "/missing") === 0L)
+    assert(StreamTune.partitionsFor(spark, empty) ===
+      spark.sparkContext.defaultParallelism)
+  }
+
+  test("startReplicateCDF: a ProcessingTime mirror keeps the session " +
+      "width; an AvailableNow run is feed-sized") {
+    import graft.sources.VersionedTable
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_tune_mirror").toString
+    val src = root + "/src"
+    VersionedTable.append(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
+      src)
+    VersionedTable.alterProperties(spark, src,
+      Map(VersionedTable.CdcProperty -> "true"))
+    /** The shuffle width the stream froze into its first offset entry. */
+    def frozenWidth(ckpt: String): Int = {
+      val log = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(ckpt, "offsets", "0")), "UTF-8")
+      "\"spark.sql.shuffle.partitions\":\"(\\d+)\"".r
+        .findFirstMatchIn(log).get.group(1).toInt
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      val q = graft.streaming.VersionedSink.startReplicateCDF(spark, src,
+        root + "/dst", "mirror", "k", root + "/ck",
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      try q.processAllAvailable() finally q.stop()
+      assert(frozenWidth(root + "/ck") === 3)
+      val q2 = graft.streaming.VersionedSink.startReplicateCDF(spark, src,
+        root + "/dst2", "mirror", "k", root + "/ck2")
+      q2.awaitTermination(120000)
+      assert(frozenWidth(root + "/ck2") === 1) // a kilobyte-scale feed
+      assert(spark.conf.get(key) === "3")
+      assert(VersionedTable.read(spark, root + "/dst").count() === 2L)
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -169,6 +169,85 @@ class VersionedSinkSpec extends SparkTestBase {
     assert(snapshot(dst) === snapshot(src))
   }
 
+  test("replicateCDF: a range with updates and deletes is one " +
+      "destination commit, with no delete layer; a replay is a no-op") {
+    val base = Files.createTempDirectory("repl1").toString
+    val src = s"$base/src"
+    val dst = s"$base/dst"
+    def snapshot(t: String) = VersionedTable.read(spark, t)
+      .orderBy("k").as[(Long, String)].collect().toSeq
+    VersionedTable.append(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), src)
+    VersionedTable.alterProperties(spark, src,
+      Map(VersionedTable.CdcProperty -> "true"))
+    VersionedSink.replicateCDF(spark, src, dst, "mirror", "k")
+    VersionedTable.update(spark, src, col("k") === 2L, Map("v" -> lit("B")))
+    VersionedTable.deleteByKeys(spark, src, Seq(3L).toDF("k"))
+    VersionedTable.append(spark, Seq((4L, "d")).toDF("k", "v"), src)
+    val v0 = VersionedTable.latest(spark, dst)._1
+    val srcV = VersionedSink.replicateCDF(spark, src, dst, "mirror", "k")
+    assert(VersionedTable.latest(spark, dst)._1 === v0 + 1)
+    assert(snapshot(dst) === Seq((1L, "a"), (2L, "B"), (4L, "d")))
+    assert(!VersionedTable.hasPendingEqualityDeletes(spark, dst))
+    assert(VersionedTable.lastCommittedEpoch(spark, dst, "mirror") ===
+      Some(srcV))
+    assert(VersionedSink.replicateCDF(spark, src, dst, "mirror", "k") === srcV)
+    assert(VersionedTable.latest(spark, dst)._1 === v0 + 1)
+  }
+
+  test("replicateCDF: a mirror left by the two-commit apply with its " +
+      "#u watermark past #d resumes without losing the deletes") {
+    val base = Files.createTempDirectory("repl2").toString
+    val src = s"$base/src"
+    val dst = s"$base/dst"
+    def snapshot(t: String) = VersionedTable.read(spark, t)
+      .orderBy("k").as[(Long, String)].collect().toSeq
+    VersionedTable.append(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), src)
+    VersionedTable.alterProperties(spark, src,
+      Map(VersionedTable.CdcProperty -> "true"))
+    val v1 = VersionedTable.latest(spark, src)._1
+    // the mirror as the upsert + deleteByKeys pair left it at v1
+    VersionedTable.upsert(spark, VersionedTable.read(spark, src), dst, "k",
+      txn = Some(("mirror#u", v1)))
+    VersionedTable.deleteByKeys(spark, dst, Seq.empty[Long].toDF("k"),
+      txn = Some(("mirror#d", v1)))
+    // a range with an update and a delete, of which only the upsert
+    // landed before the crash
+    VersionedTable.update(spark, src, col("k") === 2L, Map("v" -> lit("B")))
+    VersionedTable.deleteByKeys(spark, src, Seq(3L).toDF("k"))
+    val v2 = VersionedTable.latest(spark, src)._1
+    VersionedTable.upsert(spark, Seq((2L, "B")).toDF("k", "v"), dst, "k",
+      txn = Some(("mirror#u", v2)))
+    assert(snapshot(dst).contains((3L, "c")))
+    assert(VersionedSink.replicateCDF(spark, src, dst, "mirror", "k") === v2)
+    assert(snapshot(dst) === snapshot(src))
+    assert(snapshot(dst) === Seq((1L, "a"), (2L, "B")))
+    assert(VersionedTable.lastCommittedEpoch(spark, dst, "mirror") === Some(v2))
+  }
+
+  test("merge with the change data feed on: replaced rows are update " +
+      "pre/postimages, merged-away keys are deletes") {
+    val t = Files.createTempDirectory("merge_cdf").toString + "/t"
+    VersionedTable.append(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), t)
+    VersionedTable.alterProperties(spark, t,
+      Map(VersionedTable.CdcProperty -> "true"))
+    val v0 = VersionedTable.latest(spark, t)._1
+    val v = VersionedTable.merge(spark, t, "k",
+      Seq((1L, "A"), (9L, "i")).toDF("k", "v"), Seq(3L, 7L).toDF("k"))
+    assert(v === v0 + 1)
+    assert(!VersionedTable.hasPendingEqualityDeletes(spark, t))
+    val cdf = VersionedTable.readChangesCDF(spark, t, fromVersion = v0)
+      .select("k", "v", "_change_type", "_commit_version")
+      .as[(Long, String, String, Long)].collect().toSet
+    assert(cdf === Set(
+      (1L, "a", "update_preimage", v), (1L, "A", "update_postimage", v),
+      (9L, "i", "insert", v), (3L, "c", "delete", v)))
+    assert(VersionedTable.read(spark, t).orderBy("k").as[(Long, String)]
+      .collect().toSeq === Seq((1L, "A"), (2L, "b"), (9L, "i")))
+  }
+
   test("upsertExactlyOnce: CDC apply — merge per batch, replay-safe") {
     val t = Files.createTempDirectory("vsink_cdc").toString + "/t"
     val sink = VersionedSink.upsertExactlyOnce(t, "k", "cdc")
