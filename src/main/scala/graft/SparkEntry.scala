@@ -1155,45 +1155,28 @@ object SparkEntry {
     rm(new java.io.File(path))
   }
 
-  /** Ship each frame as ONE parquet file under `root/src` (mtime
-    * ordered) and return a file stream that delivers them one batch per
-    * trigger — the generic half of [[streamTwinSource]] for feeds that
-    * need no watermark markers (foreachBatch appenders: AnnFeed,
-    * SketchFeed). */
-  private def fileStreamBatches(s: SparkSession, root: String,
-      batches: Seq[DataFrame]): DataFrame = {
+  /** Write `df` as ONE parquet file `dir/name.parquet` with
+    * modification time `mtime`: a file stream delivers files in mtime
+    * order, so a fixture's batch order is its shipping order. The
+    * temporary write directory is removed. */
+  private def shipParquet(df: DataFrame, dir: String, name: String,
+      mtime: Long): Unit = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val src = root + "/src"
-    JFiles.createDirectories(JPaths.get(src))
-    batches.zipWithIndex.foreach { case (df, i) =>
-      val tmp = root + s"/b${i}_tmp"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      JFiles.move(part.toPath, JPaths.get(src, s"b$i.parquet"))
-      JPaths.get(src, s"b$i.parquet").toFile
-        .setLastModified(1000000L * (i + 1))
-      rmTree(tmp)
-    }
-    s.readStream.schema(batches.head.schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
+    val tmp = s"${dir}_${name}_tmp"
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val dst = JPaths.get(dir, name + ".parquet")
+    JFiles.createDirectories(dst.getParent)
+    JFiles.move(part.toPath, dst)
+    dst.toFile.setLastModified(mtime)
+    rmTree(tmp)
   }
 
   private def streamTwinSource(s: SparkSession, ev: DataFrame,
       tag: String): (String, DataFrame) = {
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val root = JFiles.createTempDirectory(s"graft_$tag").toString
+    val root = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
     val src = root + "/src"
-    JFiles.createDirectories(JPaths.get(src))
-    def shipOne(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = root + "/" + name + "_tmp"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      JFiles.move(part.toPath, JPaths.get(src, name + ".parquet"))
-      JPaths.get(src, name + ".parquet").toFile.setLastModified(mtime)
-      ()
-    }
     val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
     def marker(eid: Long, offMs: Long): DataFrame = {
       import s.implicits._
@@ -1209,7 +1192,7 @@ object SparkEntry {
     // on the watermark move) then fires every event-time timeout and
     // emits the sealed rows. Replaces the (data, marker, marker)
     // 3-file protocol: 4 micro-batches → 2, one shipped file per twin.
-    shipOne(ev.unionByName(marker(-1L, 48L * 3600 * 1000)),
+    shipParquet(ev.unionByName(marker(-1L, 48L * 3600 * 1000)), src,
       "b1", 1000000L)
     val stream = s.readStream.schema(StructType(Seq(
         StructField("user_id", LongType),
@@ -1279,18 +1262,9 @@ object SparkEntry {
     */
   private def fileStream(s: SparkSession, root: String, sub: String,
       batches: Seq[DataFrame]): DataFrame = {
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
     val src = root + "/" + sub
-    JFiles.createDirectories(JPaths.get(src))
     batches.zipWithIndex.foreach { case (df, i) =>
-      val tmp = root + s"/${sub}_tmp$i"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      JFiles.move(part.toPath, JPaths.get(src, s"b$i.parquet"))
-      JPaths.get(src, s"b$i.parquet").toFile
-        .setLastModified(1000000L * (i + 1))
-      ()
+      shipParquet(df, src, s"b$i", 1000000L * (i + 1))
     }
     s.readStream.schema(batches.head.schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
@@ -1505,25 +1479,14 @@ object SparkEntry {
     // min-earlier-id — the duplicates batch is deduped against the
     // PERSISTED index built by batch one, hash-provably. ----
     "nd1_stream_gate" -> ((s, dir) => {
-      import java.nio.file.{Files => JFiles, Paths => JPaths}
-      val root = JFiles.createTempDirectory("graft_nd1").toString
+      val root = java.nio.file.Files.createTempDirectory("graft_nd1").toString
       val src = root + "/src"
-      JFiles.createDirectories(JPaths.get(src))
-      def shipOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = root + "/" + name + "_tmp"
-        df.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        JFiles.move(part.toPath, JPaths.get(src, name + ".parquet"))
-        JPaths.get(src, name + ".parquet").toFile.setLastModified(mtime)
-        ()
-      }
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .where(size(TextAnalysis.tokens(col("text"))) >= 3)
       val dups = d.select((col("doc_id") + 1000000L).as("doc_id"),
         col("text"))
-      shipOne(d, "b1", 1000000L)
-      shipOne(dups, "b2", 2000000L)
+      shipParquet(d, src, "b1", 1000000L)
+      shipParquet(dups, src, "b2", 2000000L)
       val stream = s.readStream.schema(StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType))))
         .option("maxFilesPerTrigger", 1).parquet(src)
@@ -1820,7 +1783,7 @@ object SparkEntry {
       val idxDir = root + "/idx"
       AnnIndex.build(s, emb.where(col("vec_id") % 2 === 0),
         "vec_id", "embedding", idxDir, nlist = 16, iters = 3)
-      val stream = fileStreamBatches(s, root, Seq(
+      val stream = fileStream(s, root, "src", Seq(
         emb.where(col("vec_id") % 4 === 1),
         emb.where(col("vec_id") % 4 === 3)))
       val fq = graft.streaming.StreamTune.pinnedStart(s,
@@ -2128,7 +2091,7 @@ object SparkEntry {
       val root = java.nio.file.Files
         .createTempDirectory("graft_sk1").toString
       val table = root + "/sketches"
-      val stream = fileStreamBatches(s, root, Seq(
+      val stream = fileStream(s, root, "src", Seq(
         ev.where(col("event_id") % 2 === 0).drop("event_id"),
         ev.where(col("event_id") % 2 === 1).drop("event_id")))
       val fq = graft.streaming.StreamTune.pinnedStart(s,
@@ -2160,7 +2123,7 @@ object SparkEntry {
       val root = java.nio.file.Files
         .createTempDirectory("graft_sk2").toString
       val table = root + "/sketches"
-      val stream = fileStreamBatches(s, root, Seq(
+      val stream = fileStream(s, root, "src", Seq(
         ev.where(col("event_id") % 2 === 0).drop("event_id"),
         ev.where(col("event_id") % 2 === 1).drop("event_id")))
       val fq = graft.streaming.StreamTune.pinnedStart(s,
@@ -4667,20 +4630,14 @@ object SparkEntry {
     // fully hash-oracled against the dc2 SQL restricted to the train
     // split plus the dc1 threshold predicate.
     "dc4_stream_score" -> ((s, dir) => {
-      import java.nio.file.{Files => JFiles, Paths => JPaths}
-      val root = JFiles.createTempDirectory("graft_dc4").toString
+      val root = java.nio.file.Files.createTempDirectory("graft_dc4").toString
       val src = root + "/src"
-      JFiles.createDirectories(JPaths.get(src))
       val docs = t(s, dir, "documents")
       graft.streaming.DecontaminateFeed.indexBench(s,
         docs.where(col("doc_id") < 50), "text", root + "/idx", n = 3)
       val train = docs.where(col("doc_id") >= 50)
         .select(col("doc_id"), col("text"))
-      val tmp = root + "/b1_tmp"
-      train.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      JFiles.move(part.toPath, JPaths.get(src, "b1.parquet"))
+      shipParquet(train, src, "b1", 1000000L)
       val stream = s.readStream.schema(StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType))))
         .parquet(src)

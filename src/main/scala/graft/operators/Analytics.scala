@@ -692,11 +692,13 @@ object Analytics {
     }.collect().toMap
     val nParts = internal.getNumPartitions
     val axes = partTotals.keys.map(_._2).toSeq.distinct
-    // offset of (partition i, axis ax) = total of ax in partitions < i
-    val offsets: Map[(Int, Int), Long] = (for {
-      ax <- axes; i <- 0 until nParts
-    } yield ((i, ax), (0 until i)
-      .map(j => partTotals.getOrElse((j, ax), 0L)).sum)).toMap
+    // offset of (partition i, axis ax) = total of ax in partitions < i,
+    // one running sum per axis
+    val offsets: Map[(Int, Int), Long] = axes.flatMap { ax =>
+      (0 until nParts).scanLeft(0L)((acc, j) =>
+        acc + partTotals.getOrElse((j, ax), 0L))
+        .zipWithIndex.take(nParts).map { case (s, i) => ((i, ax), s) }
+    }.toMap
     // job 2 (same RDD instance — shuffle files reused, identical
     // boundaries): running before-count per axis within each partition
     val schema = StructType(sorted.schema.fields :+

@@ -981,51 +981,67 @@ private[sources] class GraftTableScan(path: String, dataSchema: StructType,
       "versionAsOf pins one batch snapshot — a stream tails the " +
         "changefeed; use option(\"startingVersion\", ...) semantics via " +
         "the checkpoint instead")
-    new MicroBatchStream
-      with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-      // AvailableNow pins the target version at query start; the wrapped
-      // latestOffset serves the pin so the query drains exactly the data
-      // committed before the trigger and stops
-      @volatile private var pinned: Option[Long] = None
-      // admission control: cap how many table versions one micro-batch
-      // may span, so a backfill from version 0 of a long-lived table
-      // becomes a sequence of bounded batches instead of one giant one
-      // (each still exactly-once — offsets advance per processed batch)
-      private val maxVersions =
-        options.get("maxversionspertrigger").map(_.toLong)
-      override def prepareForTriggerAvailableNow(): Unit =
-        pinned = Some(VersionedTable.latest(spark, path)._1)
-      override def initialOffset(): Offset =
-        VersionOffset(options.getOrElse("startingversion", "0").toLong)
-      override def latestOffset(): Offset =
-        VersionOffset(pinned.getOrElse(VersionedTable.latest(spark, path)._1))
-      override def latestOffset(start: Offset,
-          limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-          : Offset = {
-        val target = pinned.getOrElse(VersionedTable.latest(spark, path)._1)
-        val from = start.asInstanceOf[VersionOffset].version
-        VersionOffset(maxVersions match {
-          case Some(m) => math.min(from + m, target)
-          case None => target
-        })
-      }
-      override def reportLatestOffset(): Offset =
-        VersionOffset(VersionedTable.latest(spark, path)._1)
-      override def deserializeOffset(json: String): Offset =
-        VersionOffset.fromJson(json)
-      override def planInputPartitions(start: Offset,
-          end: Offset): Array[InputPartition] =
-        plan(start.asInstanceOf[VersionOffset].version,
-          end.asInstanceOf[VersionOffset].version)
-      override def createReaderFactory(): PartitionReaderFactory =
-        readerFactory
-      override def commit(end: Offset): Unit = ()
-      override def stop(): Unit = ()
-    }
+    new VersionStream(path,
+      options.getOrElse("startingversion", "0").toLong,
+      options.get("maxversionspertrigger").map(_.toLong),
+      plan, () => readerFactory)
   }
 }
 
-/** The CDF scan: file-served typed changes. Output order is
+/** The micro-batch stream of both changefeed scans (appended rows and
+  * CDF): committed manifest versions are the offsets, and
+  * `plan(from, to)` plans the commits in `(from, to]`. AvailableNow
+  * pins the target version at query start, so the query drains exactly
+  * the data committed before the trigger and stops. `maxVersions`
+  * (option `maxVersionsPerTrigger`) is admission control: it caps how
+  * many table versions one micro-batch may span, so a backfill from
+  * version 0 of a long-lived table becomes a sequence of bounded
+  * batches instead of one giant one (each still exactly-once — offsets
+  * advance per processed batch).
+  */
+private[sources] class VersionStream(path: String, startingVersion: Long,
+    maxVersions: Option[Long],
+    plan: (Long, Long) => Array[InputPartition],
+    readerFactory: () => PartitionReaderFactory)
+  extends MicroBatchStream
+  with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+
+  @volatile private var pinned: Option[Long] = None
+  private def latestVersion: Long =
+    VersionedTable.latest(SparkSession.active, path)._1
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinned = Some(latestVersion)
+  override def initialOffset(): Offset = VersionOffset(startingVersion)
+  override def latestOffset(): Offset =
+    VersionOffset(pinned.getOrElse(latestVersion))
+  override def latestOffset(start: Offset,
+      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
+      : Offset = {
+    val target = pinned.getOrElse(latestVersion)
+    val from = start.asInstanceOf[VersionOffset].version
+    VersionOffset(maxVersions match {
+      case Some(m) => math.min(from + m, target)
+      case None => target
+    })
+  }
+  override def reportLatestOffset(): Offset = VersionOffset(latestVersion)
+  override def deserializeOffset(json: String): Offset =
+    VersionOffset.fromJson(json)
+  override def planInputPartitions(start: Offset,
+      end: Offset): Array[InputPartition] =
+    plan(start.asInstanceOf[VersionOffset].version,
+      end.asInstanceOf[VersionOffset].version)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory()
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
+/** The CDF scan: file-served typed changes, planned by
+  * [[VersionedTable.cdfFilesBetween]] over the commit log's one walk
+  * (the appended-rows scan plans by
+  * [[VersionedTable.changedFilesBetween]] over the same walk), streamed
+  * by the shared [[VersionStream]]. Output order is
   * (data..., _change_type, _commit_version) from BOTH partition kinds —
   * append partitions read data columns and append (type, version) as
   * partition values; CDC partitions read (data..., _change_type)
@@ -1094,41 +1110,10 @@ private[sources] class GraftCdfScan(path: String, dataSchema: StructType,
 
   override def toMicroBatchStream(checkpointLocation: String)
       : MicroBatchStream =
-    new MicroBatchStream
-      with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-      @volatile private var pinned: Option[Long] = None
-      private val maxVersions =
-        Option(options.get("maxversionspertrigger")).map(_.toLong)
-      override def prepareForTriggerAvailableNow(): Unit =
-        pinned = Some(VersionedTable.latest(spark, path)._1)
-      override def initialOffset(): Offset =
-        VersionOffset(Option(options.get("startingversion"))
-          .map(_.toLong).getOrElse(0L))
-      override def latestOffset(): Offset =
-        VersionOffset(pinned.getOrElse(VersionedTable.latest(spark, path)._1))
-      override def latestOffset(start: Offset,
-          limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-          : Offset = {
-        val target = pinned.getOrElse(VersionedTable.latest(spark, path)._1)
-        val from = start.asInstanceOf[VersionOffset].version
-        VersionOffset(maxVersions match {
-          case Some(m) => math.min(from + m, target)
-          case None => target
-        })
-      }
-      override def reportLatestOffset(): Offset =
-        VersionOffset(VersionedTable.latest(spark, path)._1)
-      override def deserializeOffset(json: String): Offset =
-        VersionOffset.fromJson(json)
-      override def planInputPartitions(start: Offset,
-          end: Offset): Array[InputPartition] =
-        plan(start.asInstanceOf[VersionOffset].version,
-          end.asInstanceOf[VersionOffset].version)
-      override def createReaderFactory(): PartitionReaderFactory =
-        dispatchFactory
-      override def commit(end: Offset): Unit = ()
-      override def stop(): Unit = ()
-    }
+    new VersionStream(path,
+      Option(options.get("startingversion")).map(_.toLong).getOrElse(0L),
+      Option(options.get("maxversionspertrigger")).map(_.toLong),
+      plan, () => dispatchFactory)
 }
 
 /** Streaming offset = committed manifest version. */

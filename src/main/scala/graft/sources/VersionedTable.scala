@@ -424,14 +424,6 @@ object VersionedTable {
     }
   }
 
-  /** Range-cluster `df` on the table's declared cluster columns. No-op
-    * without the property; a column absent from the frame (pre-schema
-    * tables can append narrower frames) skips clustering rather than
-    * failing the write — the layout is an optimization, never a gate.
-    * No explicit partition count: AQE coalesces the range exchange, so
-    * a small append stages one tight file while a large one fans out
-    * to balanced ranges.
-    */
   /** The table's cluster columns resolved to `df`'s actual column names
     * — Nil when clustering is undeclared or any column is absent (then
     * the layout cannot apply and no sort may be claimed).
@@ -445,6 +437,12 @@ object VersionedTable {
   /** Range-cluster `df` on `cols` (see [[stage]]'s `cluster`); also used
     * by the catalog's CTAS/RTAS writes, where the declared layout is
     * known but its property commit necessarily lands AFTER the data.
+    * No-op without cluster columns; a column absent from the frame
+    * (pre-schema tables can append narrower frames) skips clustering
+    * rather than failing the write — the layout is an optimization,
+    * never a gate. No explicit partition count: AQE coalesces the range
+    * exchange, so a small append stages one tight file while a large
+    * one fans out to balanced ranges.
     */
   private[sources] def clusterFrame(df: DataFrame, cols: Seq[String])
       : DataFrame = {
@@ -718,8 +716,9 @@ object VersionedTable {
   // Manifests are IMMUTABLE once published (written exactly once via an
   // atomic no-overwrite primitive), so their contents cache for the
   // driver's lifetime: multi-action jobs (append→upsert→delete→compact→
-  // changefeed) re-walk the chain per action, and fileVersions walks
-  // EVERY version — each walk is pure cache hits after the first. LRU-
+  // changefeed) re-walk the chain per action ([[logCommits]]), and
+  // fileVersions walks EVERY version — each walk is pure cache hits
+  // after the first. LRU-
   // bounded; the only paths that can re-bind a (table, version) key to
   // new content — DROP TABLE / RENAME / CTAS-abort re-creating a dir —
   // must call [[invalidateCache]].
@@ -1057,9 +1056,6 @@ object VersionedTable {
     lines
   }
 
-  private def readManifest(f: FileSystem, table: String, v: Long): Seq[String] =
-    readManifestRaw(f, table, v).filterNot(_.startsWith("#"))
-
   /** writerId -> highest committed epoch, from manifest `lines`. */
   private def txnMap(lines: Seq[String]): Map[String, Long] =
     lines.collect { case l if l.startsWith(TxnPrefix) =>
@@ -1105,20 +1101,62 @@ object VersionedTable {
     */
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
+    logCommits(spark, table, 0L, Long.MaxValue, feed = None)
+      .map(c => (c.version, c.op, c.added.size, c.removed.size, txnMap(c.raw)))
+      .toDF("version", "op", "files_added", "files_removed", "txns")
+  }
+
+  /** One commit as the log's readers see it: its raw manifest and the
+    * manifest before it (the previous RETAINED one; empty before the
+    * first), with the file delta, op marker, delete-layer change and
+    * CDC files derived once. Each reader applies only its own rule.
+    */
+  private final case class LogCommit(version: Long, raw: Seq[String],
+      prevRaw: Seq[String]) {
+    lazy val files: Seq[String] = dataFiles(raw)
+    lazy val prevFiles: Seq[String] = dataFiles(prevRaw)
+    lazy val added: Seq[String] = files.filterNot(prevFiles.toSet)
+    lazy val removed: Seq[String] = prevFiles.filterNot(files.toSet)
+    /** The `#op` marker; None for a pre-marker manifest. */
+    lazy val op: Option[String] = raw.collectFirst {
+      case l if l.startsWith(OpPrefix) => l.drop(OpPrefix.length)
+    }
+    lazy val layerChanged: Boolean = deleteLayer(raw) != deleteLayer(prevRaw)
+    lazy val cdc: Seq[String] = cdcLines(raw)
+  }
+
+  /** THE walk over the commit log, shared by every reader of it
+    * ([[history]], [[fileVersions]], [[opsInRange]], the appended-rows
+    * feed and both CDF feeds): the commits in `(fromVersion,
+    * min(toVersion, latest)]`, ascending, from one listing of `_commits`.
+    * A feed (`feed` names it in the error) needs every manifest from
+    * `fromVersion` on and throws when one was vacuumed — a feed never
+    * returns partial changes, so vacuum retention must cover consumer
+    * lag. Other readers (`feed = None`) walk the retained manifests.
+    */
+  private def logCommits(spark: SparkSession, table: String,
+      fromVersion: Long, toVersion: Long,
+      feed: Option[String]): Seq[LogCommit] = {
     val f = fs(spark, table)
-    val vs = versions(spark, table)
-    val rows = vs.foldLeft(
-      (Set.empty[String], List.empty[(Long, Option[String], Int, Int, Map[String, Long])])) {
-      case ((prev, acc), v) =>
-        val raw = readManifestRaw(f, table, v)
-        val cur = raw.filterNot(_.startsWith("#")).toSet
-        val op = raw.collectFirst {
-          case l if l.startsWith(OpPrefix) => l.drop(OpPrefix.length)
-        }
-        val row = (v, op, (cur -- prev).size, (prev -- cur).size, txnMap(raw))
-        (cur, row :: acc)
-    }._2.reverse
-    rows.toDF("version", "op", "files_added", "files_removed", "txns")
+    val retained = versions(spark, table)
+    val kept = retained.toSet
+    val hi = math.min(toVersion, retained.lastOption.getOrElse(0L))
+    val need = (math.max(fromVersion, 0L) to hi).filter(_ >= 1)
+    feed.foreach { name =>
+      val missing = need.filterNot(kept)
+      if (missing.nonEmpty)
+        throw new NoSuchElementException(
+          s"$name ($fromVersion, $toVersion] of $table needs vacuumed " +
+            s"manifest(s) ${missing.mkString(", ")} — retention must cover " +
+            "consumer lag")
+    }
+    var prev = Seq.empty[String]
+    need.filter(kept).flatMap { v =>
+      val raw = readManifestRaw(f, table, v)
+      val c = LogCommit(v, raw, prev)
+      prev = raw
+      if (v > fromVersion) Some(c) else None
+    }
   }
 
   /** The table's DECLARED schema at the latest version (None for
@@ -1377,13 +1415,20 @@ object VersionedTable {
     * time-travel scan). Throws like [[read(spark:org\.apache\.spark\.sql\.SparkSession,table:String,version:Long)* read(version)]] if vacuumed/absent.
     */
   private[sources] def filesAt(spark: SparkSession, table: String,
+      version: Long): Seq[String] =
+    dataFiles(manifestOf(spark, table, version))
+
+  /** The raw manifest of `version`; throws if it was vacuumed or never
+    * committed.
+    */
+  private def manifestOf(spark: SparkSession, table: String,
       version: Long): Seq[String] = {
     val f = fs(spark, table)
     if (!f.exists(commitPath(table, version)))
       throw new NoSuchElementException(
         s"version $version of $table does not exist (vacuumed or never " +
           s"committed); available: ${versions(spark, table).mkString(", ")}")
-    readManifest(f, table, version)
+    readManifestRaw(f, table, version)
   }
 
   /** (version, commitTimeMillis) per retained commit, ascending — the
@@ -1396,28 +1441,22 @@ object VersionedTable {
       v -> f.getFileStatus(commitPath(table, v)).getModificationTime)
   }
 
-  /** All committed versions, ascending; empty for a new table. */
-  /** Op markers of the retained commits in `(fromVersion, toVersion]` —
+  /** Op markers of the commits in `(fromVersion, toVersion]` —
     * manifest metadata only, no data files touched. Lets an incremental
     * consumer decide from the LOG whether a CDF window can contain
     * non-insert rows (every op `append`/`compact`/`schema`/`properties`/
     * `set-default` contributes nothing or only inserts) instead of
-    * paying a derivation scan to probe the rows themselves.
+    * paying a derivation scan to probe the rows themselves. A vacuumed
+    * or not yet committed version is UNKNOWN (None), never skipped — a
+    * caller like insertOnlyRange must not certify a window whose commits
+    * it cannot see.
     */
   def opsInRange(spark: SparkSession, table: String, fromVersion: Long,
       toVersion: Long): Seq[Option[String]] = {
-    val f = fs(spark, table)
+    val ops = logCommits(spark, table, fromVersion, toVersion, feed = None)
+      .map(c => c.version -> c.op).toMap
     ((math.max(fromVersion, 0L) + 1) to toVersion)
-      .filter(_ >= 1)
-      .map { v =>
-        // a vacuumed manifest is UNKNOWN (None), never skipped — a
-        // caller like insertOnlyRange must not certify a window whose
-        // commits it cannot see
-        if (!f.exists(commitPath(table, v))) None
-        else readManifestRaw(f, table, v).collectFirst {
-          case l if l.startsWith(OpPrefix) => l.drop(OpPrefix.length)
-        }
-      }
+      .map(v => ops.get(v).flatten)
   }
 
   /** Whether every retained commit in `(fromVersion, toVersion]` is one
@@ -1433,6 +1472,7 @@ object VersionedTable {
       .forall(_.exists(safe.contains))
   }
 
+  /** All committed versions, ascending; empty for a new table. */
   def versions(spark: SparkSession, table: String): Seq[Long] = {
     val f = fs(spark, table)
     val dir = new Path(s"$table/$CommitsDir")
@@ -1594,7 +1634,6 @@ object VersionedTable {
     }
   }
 
-  /** Stage `df` as new data files and return their table-relative names. */
   /** Spark's written part-file names carry the task partition index
     * (`part-00007-<uuid>...`); after `repartition(n, col)` that index
     * IS the bucket id. None = unexpected name shape (stage falls back
@@ -1606,6 +1645,7 @@ object VersionedTable {
     case _ => None
   }
 
+  /** Stage `df` as new data files and return their table-relative names. */
   private def stage(spark: SparkSession, df00: DataFrame,
       table: String, prefix: String = "part-",
       cluster: Boolean = false, sortedBy: Seq[String] = Nil,
@@ -1876,18 +1916,77 @@ object VersionedTable {
     * data files for exactly this reason).
     */
   def read(spark: SparkSession, table: String, version: Long): DataFrame = {
-    val f = fs(spark, table)
-    if (!f.exists(commitPath(table, version)))
-      throw new NoSuchElementException(
-        s"version $version of $table does not exist (vacuumed or never " +
-          s"committed); available: ${versions(spark, table).mkString(", ")}")
     // each snapshot reads under the schema it was COMMITTED with — time
     // travel to before an ADD COLUMN does not show the later column, and
     // only the delete layer pending AT that version applies
-    val raw = readManifestRaw(f, table, version)
-    readFilesDeleteAware(spark, table, raw.filterNot(_.startsWith("#")),
+    val raw = manifestOf(spark, table, version)
+    readFilesDeleteAware(spark, table, dataFiles(raw),
       schemaLine(raw), delLines(raw), keepFileCol = false,
       posDels = delPosLines(raw))
+  }
+
+  /** Table-relative files ADDED by each append commit in
+    * `(fromVersion, min(toVersion, latest)]` — the appended-rows feed's
+    * rule over [[logCommits]], shared by [[readChanges]] and the
+    * streaming source. Commits with removals are compaction rewrites and
+    * contribute nothing. Throws if any needed manifest was vacuumed (see
+    * [[readChanges]]).
+    */
+  def changedFilesBetween(spark: SparkSession, table: String,
+      fromVersion: Long, toVersion: Long = Long.MaxValue,
+      ignoreRowLevel: Boolean = false): Seq[(Long, Seq[String])] =
+    logCommits(spark, table, fromVersion, toVersion, Some("changefeed"))
+      .flatMap { c =>
+        // a merge-on-read delete is STRUCTURALLY empty (no data file
+        // added or removed — the change hides in a #del metadata line),
+        // so the structural dichotomy below would silently skip it; route
+        // it to the row-level guard by op marker instead. EXCEPT: a
+        // delete-mor commit that added NO layer line either (an empty CDC
+        // batch whose only effect is advancing a #txn watermark) changed
+        // no rows and is a genuine changefeed no-op.
+        val isMor = c.op.contains("delete-mor") && c.layerChanged
+        // a restore can be structurally add-only (re-referencing files a
+        // past rewrite removed) while still changing rows via its layer
+        // swap — never let it pass as a pure append
+        if (c.removed.isEmpty && !isMor && !c.op.contains("restore")) {
+          // pure append (also an upsert/delete that touched no existing
+          // file — its additions ARE genuinely new rows)
+          if (c.added.isEmpty) None else Some(c.version -> c.added)
+        } else c.op match {
+          // compaction, materializeFieldIds (a "schema" op WITH
+          // replacements — same rows, id-stamped files), or a pre-marker
+          // manifest: pure rewrite, no row change
+          case Some("compact") | Some("schema") | None => None
+          case Some(rowOp) =>
+            // an upsert/delete changed rows inside rewritten files — an
+            // appended-rows feed CANNOT represent that. Fail loudly (the
+            // consumer must resync from a snapshot) unless it explicitly
+            // opted into skipping row-level commits — Delta's
+            // ignoreChanges contract.
+            if (ignoreRowLevel) None
+            else throw new UnsupportedOperationException(
+              s"changefeed hit row-level '$rowOp' commit v${c.version} of " +
+                s"$table: an appended-rows feed cannot represent " +
+                "updates/deletes — resync from a snapshot, or opt in to " +
+                "skipping them (ignoreRowLevel / option " +
+                "ignoreRowLevelChanges)")
+        }
+      }
+
+  /** file name -> version of the commit that introduced it: the earliest
+    * EXISTING manifest naming it (exact provenance unless that history
+    * was vacuumed, in which case the file attributes to the earliest
+    * retained manifest). Drives the batch `_commit_version` metadata
+    * column.
+    */
+  def fileVersions(spark: SparkSession, table: String): Map[String, Long] = {
+    val out = scala.collection.mutable.HashMap.empty[String, Long]
+    // a file's earliest manifest is one that ADDS it (the manifest
+    // before names it not); a later re-add keeps the first version
+    logCommits(spark, table, 0L, Long.MaxValue, feed = None).foreach { c =>
+      c.added.foreach(n => if (!out.contains(n)) out(n) = c.version)
+    }
+    out.toMap
   }
 
   /** Incremental changefeed: the rows ADDED by commits in
@@ -1899,100 +1998,17 @@ object VersionedTable {
     * data per tick, never rescanning the table — at 100 TB the
     * incremental read costs what the increment costs.
     *
-    * Commit classification is structural: in this protocol a commit
-    * either only adds files (append — its added files ARE the change) or
-    * replaces files (compaction — a pure rewrite, NO data change; its
-    * outputs are skipped). Appends that race a compaction land in their
-    * own later commits, so the dichotomy is total.
+    * Commit classification is structural ([[changedFilesBetween]]): in
+    * this protocol a commit either only adds files (append — its added
+    * files ARE the change) or replaces files (compaction — a pure
+    * rewrite, NO data change; its outputs are skipped). Appends that
+    * race a compaction land in their own later commits, so the
+    * dichotomy is total.
     *
     * Like Delta's change feed, this needs the manifests in the range to
     * still exist: vacuum retention must cover consumer lag, else this
     * throws (never silently returns partial changes).
     */
-  /** Table-relative files ADDED by each append commit in
-    * `(fromVersion, min(toVersion, latest)]` — the manifest-diff core
-    * shared by [[readChanges]] and the streaming source. Commits with
-    * removals are compaction rewrites and contribute nothing. Throws if
-    * any needed manifest was vacuumed (see [[readChanges]]).
-    */
-  def changedFilesBetween(spark: SparkSession, table: String,
-      fromVersion: Long, toVersion: Long = Long.MaxValue,
-      ignoreRowLevel: Boolean = false): Seq[(Long, Seq[String])] = {
-    val f = fs(spark, table)
-    val (vMax, _) = latest(spark, table)
-    val hi = math.min(toVersion, vMax)
-    val need = (math.max(fromVersion, 0L) to hi).filter(_ >= 1)
-    val missing = need.filterNot(v => f.exists(commitPath(table, v)))
-    if (missing.nonEmpty)
-      throw new NoSuchElementException(
-        s"changefeed ($fromVersion, $toVersion] of $table needs vacuumed " +
-          s"manifest(s) ${missing.mkString(", ")} — retention must cover " +
-          "consumer lag")
-    val manifests: Map[Long, Seq[String]] =
-      need.map(v => v -> readManifestRaw(f, table, v)).toMap + (0L -> Seq.empty)
-    need.filter(_ > fromVersion).flatMap { v =>
-      val raw = manifests(v)
-      val cur = raw.filterNot(_.startsWith("#"))
-      val prev = manifests(v - 1).filterNot(_.startsWith("#")).toSet
-      val removed = prev -- cur
-      // a merge-on-read delete is STRUCTURALLY empty (no data file added
-      // or removed — the change hides in a #del metadata line), so the
-      // structural dichotomy below would silently skip it; route it to
-      // the row-level guard by op marker instead. EXCEPT: a delete-mor
-      // commit that added NO layer line either (an empty CDC batch whose
-      // only effect is advancing a #txn watermark) changed no rows and
-      // is a genuine changefeed no-op.
-      val isMor = raw.exists(_.startsWith(OpPrefix + "delete-mor")) &&
-        deleteLayer(raw) != deleteLayer(manifests(v - 1))
-      // a restore can be structurally add-only (re-referencing files a
-      // past rewrite removed) while still changing rows via its layer
-      // swap — never let it pass as a pure append
-      val isRestore = raw.exists(_.startsWith(OpPrefix + "restore"))
-      if (removed.isEmpty && !isMor && !isRestore) {
-        // pure append (also an upsert/delete that touched no existing
-        // file — its additions ARE genuinely new rows)
-        val adds = cur.filterNot(prev)
-        if (adds.isEmpty) None else Some(v -> adds)
-      } else raw.collectFirst {
-        case l if l.startsWith(OpPrefix) => l.drop(OpPrefix.length)
-      } match {
-        // compaction, materializeFieldIds (a "schema" op WITH
-        // replacements — same rows, id-stamped files), or a pre-marker
-        // manifest: pure rewrite, no row change
-        case Some("compact") | Some("schema") | None => None
-        case Some(rowOp) =>
-          // an upsert/delete changed rows inside rewritten files — an
-          // appended-rows feed CANNOT represent that. Fail loudly (the
-          // consumer must resync from a snapshot) unless it explicitly
-          // opted into skipping row-level commits — Delta's
-          // ignoreChanges contract.
-          if (ignoreRowLevel) None
-          else throw new UnsupportedOperationException(
-            s"changefeed hit row-level '$rowOp' commit v$v of $table: " +
-              "an appended-rows feed cannot represent updates/deletes — " +
-              "resync from a snapshot, or opt in to skipping them " +
-              "(ignoreRowLevel / option ignoreRowLevelChanges)")
-      }
-    }
-  }
-
-  /** file name -> version of the commit that introduced it: the earliest
-    * EXISTING manifest naming it (exact provenance unless that history
-    * was vacuumed, in which case the file attributes to the earliest
-    * retained manifest). Drives the batch `_commit_version` metadata
-    * column.
-    */
-  def fileVersions(spark: SparkSession, table: String): Map[String, Long] = {
-    val f = fs(spark, table)
-    val out = scala.collection.mutable.HashMap.empty[String, Long]
-    versions(spark, table).foreach { v =>
-      readManifest(f, table, v).foreach { n =>
-        if (!out.contains(n)) out(n) = v
-      }
-    }
-    out.toMap
-  }
-
   def readChanges(spark: SparkSession, table: String, fromVersion: Long,
       toVersion: Long = Long.MaxValue,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -2005,24 +2021,46 @@ object VersionedTable {
     // retained in range) schema — an append-only superset — keeps the
     // unioned feed consistent, old batches null-filled
     val declared = schema.orElse(tableSchema(spark, table))
-    if (added.isEmpty) {
-      val base = declared.orElse {
-        val (_, files) = latest(spark, table)
-        if (files.nonEmpty)
-          Some(spark.read.parquet(s"$table/${files.head}").schema)
-        else None
-      }.getOrElse(throw new IllegalArgumentException(
+    if (added.isEmpty)
+      emptyFeed(spark, table, declared,
         s"no changes in ($fromVersion, $toVersion] and no schema available " +
-          s"for empty changefeed of $table — pass schema="))
-      readFiles(spark, table, Nil, Some(base))
+          s"for empty changefeed of $table — pass schema=")
         .withColumn("_commit_version", lit(0L).cast("long"))
-        .where(lit(false))
-    } else {
+    else
       added.map { case (v, files) =>
         readFiles(spark, table, files, declared)
           .withColumn("_commit_version", lit(v))
       }.reduce(_ unionByName _)
-    }
+  }
+
+  /** The zero-row frame of a feed with no changes: under `declared`, or
+    * else the schema of the latest snapshot's first file; throws
+    * `noSchema` when there is neither.
+    */
+  private def emptyFeed(spark: SparkSession, table: String,
+      declared: Option[org.apache.spark.sql.types.StructType],
+      noSchema: => String): DataFrame = {
+    val base = declared.orElse {
+      latest(spark, table)._2.headOption
+        .map(n => spark.read.parquet(s"$table/$n").schema)
+    }.getOrElse(throw new IllegalArgumentException(noSchema))
+    readFiles(spark, table, Nil, Some(base))
+      .where(org.apache.spark.sql.functions.lit(false))
+  }
+
+  /** The CDF feeds' shared first rule for a commit: REPLACE TABLE throws
+    * (the feed's schema changed mid-range, which a single-schema feed
+    * cannot represent); a pure rewrite (compact, materializeFieldIds, a
+    * pre-marker manifest that removed files and wrote no CDC file) is
+    * skipped (true).
+    */
+  private def cdfSkips(c: LogCommit, table: String): Boolean = {
+    if (c.op.contains("replace-table"))
+      throw new UnsupportedOperationException(
+        s"CDF hit REPLACE TABLE at v${c.version} of $table: the feed's " +
+          "schema changed — resync from a snapshot")
+    c.op.contains("compact") || c.op.contains("schema") ||
+      (c.op.isEmpty && c.removed.nonEmpty && c.cdc.isEmpty)
   }
 
   /** FILE-level CDF planning for the DSv2 feed: `(version, file,
@@ -2038,50 +2076,22 @@ object VersionedTable {
     */
   private[sources] def cdfFilesBetween(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long = Long.MaxValue,
-      ignoreRowLevel: Boolean = false): Seq[(Long, String, Boolean)] = {
-    val f = fs(spark, table)
-    val (vMax, _) = latest(spark, table)
-    val hi = math.min(toVersion, vMax)
-    val need = (math.max(fromVersion, 0L) to hi).filter(_ >= 1)
-    val missing = need.filterNot(v => f.exists(commitPath(table, v)))
-    if (missing.nonEmpty)
-      throw new NoSuchElementException(
-        s"CDF ($fromVersion, $toVersion] of $table needs vacuumed " +
-          s"manifest(s) ${missing.mkString(", ")} — retention must cover " +
-          "consumer lag")
-    val raws: Map[Long, Seq[String]] =
-      need.map(v => v -> readManifestRaw(f, table, v)).toMap +
-        (0L -> Seq.empty[String])
-    need.filter(_ > fromVersion).flatMap { v =>
-      val raw = raws(v)
-      val prevRaw = raws(v - 1)
-      val cur = raw.filterNot(_.startsWith("#"))
-      val prev = prevRaw.filterNot(_.startsWith("#")).toSet
-      val removed = prev -- cur
-      val added = cur.filterNot(prev)
-      val op = raw.collectFirst {
-        case l if l.startsWith(OpPrefix) => l.drop(OpPrefix.length)
+      ignoreRowLevel: Boolean = false): Seq[(Long, String, Boolean)] =
+    logCommits(spark, table, fromVersion, toVersion, Some("CDF"))
+      .flatMap { c =>
+        val v = c.version
+        if (cdfSkips(c, table)) Nil
+        else if (c.cdc.nonEmpty) c.cdc.map(n => (v, n, true))
+        else if (c.removed.isEmpty && !c.layerChanged)
+          c.added.map(n => (v, n, false))
+        else if (ignoreRowLevel) Nil
+        else throw new UnsupportedOperationException(
+          s"CDF hit row-level '${c.op.getOrElse("?")}' commit v$v of " +
+            s"$table with no CDC file — set table property " +
+            s"$CdcProperty=true before row-level commits (so they write " +
+            "their changes), or resync from a snapshot / opt in to " +
+            "skipping them (ignoreRowLevelChanges)")
       }
-      val layerChanged = deleteLayer(raw) != deleteLayer(prevRaw)
-      val cdc = cdcLines(raw)
-      if (op.contains("replace-table"))
-        throw new UnsupportedOperationException(
-          s"CDF hit REPLACE TABLE at v$v of $table: the feed's schema " +
-            "changed — resync from a snapshot")
-      if (op.contains("compact") || op.contains("schema") ||
-          (op.isEmpty && removed.nonEmpty && cdc.isEmpty)) Nil
-      else if (cdc.nonEmpty) cdc.map(n => (v, n, true))
-      else if (removed.isEmpty && !layerChanged)
-        added.map(n => (v, n, false))
-      else if (ignoreRowLevel) Nil
-      else throw new UnsupportedOperationException(
-        s"CDF hit row-level '${op.getOrElse("?")}' commit v$v of $table " +
-          "with no CDC file — set table property " +
-          s"$CdcProperty=true before row-level commits (so they write " +
-          "their changes), or resync from a snapshot / opt in to " +
-          "skipping them (ignoreRowLevelChanges)")
-    }
-  }
 
   /** TRUE change-data-feed: every commit in `(fromVersion, toVersion]`
     * as row-level changes tagged `_change_type` (insert /
@@ -2089,7 +2099,9 @@ object VersionedTable {
     * the Delta CDF shape, so an incremental consumer survives
     * UPDATE / MERGE / DELETE / merge-on-read commits without a resync
     * (unlike [[readChanges]], the appended-rows feed that fails loudly
-    * on them).
+    * on them). Commits come from [[logCommits]], like every reader of
+    * the log; REPLACE TABLE and pure rewrites follow [[cdfSkips]], like
+    * the DSv2 feed ([[cdfFilesBetween]]).
     *
     * Derivation is bounded by each commit's TOUCHED files, never the
     * table: a copy-on-write commit diffs its removed files (read under
@@ -2113,72 +2125,46 @@ object VersionedTable {
       schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val f = fs(spark, table)
-    val (vMax, _) = latest(spark, table)
-    val hi = math.min(toVersion, vMax)
-    val need = (math.max(fromVersion, 0L) to hi).filter(_ >= 1)
-    val missing = need.filterNot(v => f.exists(commitPath(table, v)))
-    if (missing.nonEmpty)
-      throw new NoSuchElementException(
-        s"CDF ($fromVersion, $toVersion] of $table needs vacuumed " +
-          s"manifest(s) ${missing.mkString(", ")} — retention must cover " +
-          "consumer lag")
-    val raws: Map[Long, Seq[String]] =
-      need.map(v => v -> readManifestRaw(f, table, v)).toMap +
-        (0L -> Seq.empty[String])
+    val commits = logCommits(spark, table, fromVersion, toVersion, Some("CDF"))
     val declared = schema.orElse(tableSchema(spark, table))
     def tag(df: DataFrame, tpe: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(tpe))
         .withColumn("_commit_version", lit(v))
-    val parts = need.filter(_ > fromVersion).flatMap { v =>
-      val raw = raws(v)
-      val prevRaw = raws(v - 1)
-      val cur = raw.filterNot(_.startsWith("#"))
-      val prev = prevRaw.filterNot(_.startsWith("#"))
-      val removed = prev.filterNot(cur.contains)
-      val added = cur.filterNot(prev.contains)
-      val op = raw.collectFirst {
-        case l if l.startsWith(OpPrefix) => l.drop(OpPrefix.length)
-      }
-      val layerChanged = deleteLayer(raw) != deleteLayer(prevRaw)
-      if (op.contains("replace-table"))
-        throw new UnsupportedOperationException(
-          s"CDF hit REPLACE TABLE at v$v of $table: the feed's schema " +
-            "changed — resync from a snapshot")
-      val cdc = cdcLines(raw)
-      if (op.contains("compact") || op.contains("schema") ||
-          (op.isEmpty && removed.nonEmpty && cdc.isEmpty))
-        None // pure rewrite (compact / materializeFieldIds / pre-marker)
-      else if (cdc.nonEmpty) {
+    val parts = commits.flatMap { c =>
+      val v = c.version
+      if (cdfSkips(c, table)) None
+      else if (c.cdc.nonEmpty) {
         // the commit WROTE its exact changes (CDF property on): read
         // them — no derivation, precise update pre/post pairing
         import org.apache.spark.sql.types.{StringType, StructField, StructType}
         val sc = declared.map(d =>
           StructType(d.fields :+ StructField(ChangeTypeCol, StringType)))
-        Some(readFiles(spark, table, cdc, sc)
+        Some(readFiles(spark, table, c.cdc, sc)
           .withColumn("_commit_version", lit(v)))
       }
-      else if (removed.isEmpty && added.isEmpty && !layerChanged) None
-      else if (removed.isEmpty && !layerChanged)
-        Some(tag(readFiles(spark, table, added, declared), "insert", v))
+      else if (c.removed.isEmpty && c.added.isEmpty && !c.layerChanged) None
+      else if (c.removed.isEmpty && !c.layerChanged)
+        Some(tag(readFiles(spark, table, c.added, declared), "insert", v))
       else {
         // row-level commit: diff only the touched rows
         val (candPrev, candCur) =
-          if (op.contains("restore") && layerChanged)
+          if (c.op.contains("restore") && c.layerChanged)
             // a restore that also changed the delete layers can alter
             // rows of RETAINED files — diff the full snapshots
-            (prev, cur)
-          else if (removed.nonEmpty || added.nonEmpty) (removed, added)
+            (c.prevFiles, c.files)
+          else if (c.removed.nonEmpty || c.added.nonEmpty)
+            (c.removed, c.added)
           else {
             // merge-on-read: candidates = files the NEW layer lines reach
-            val newDel = delLines(raw).toSet -- delLines(prevRaw).toSet
-            val newPos = delPosLines(raw).toSet -- delPosLines(prevRaw).toSet
-            val fv = fileVersions(spark, table)
+            val newDel = delLines(c.raw).toSet -- delLines(c.prevRaw).toSet
+            val newPos =
+              delPosLines(c.raw).toSet -- delPosLines(c.prevRaw).toSet
             val eqCand =
               if (newDel.isEmpty) Nil
               else {
+                val fv = fileVersions(spark, table)
                 val maxDv = newDel.map(_._2).max
-                cur.filter(n => fv.getOrElse(n, Long.MaxValue) <= maxDv)
+                c.files.filter(n => fv.getOrElse(n, Long.MaxValue) <= maxDv)
               }
             val posCand =
               if (newPos.isEmpty) Nil
@@ -2186,18 +2172,18 @@ object VersionedTable {
                 .parquet(newPos.toSeq.map(n => s"$table/$n"): _*)
                 .select("__vt_file")
                 .distinct().collect().map(_.getString(0)).toSeq
-                .filter(cur.contains)
+                .filter(c.files.contains)
             val cand = (eqCand ++ posCand).distinct
             (cand, cand)
           }
         val pre = readFilesDeleteAware(spark, table, candPrev, declared,
-          delLines(prevRaw), keepFileCol = false,
-          posDels = delPosLines(prevRaw))
+          delLines(c.prevRaw), keepFileCol = false,
+          posDels = delPosLines(c.prevRaw))
         val post = readFilesDeleteAware(spark, table, candCur, declared,
-          delLines(raw), keepFileCol = false, posDels = delPosLines(raw))
+          delLines(c.raw), keepFileCol = false, posDels = delPosLines(c.raw))
         val preD = pre.exceptAll(post)
         val postD = post.exceptAll(pre)
-        op match {
+        c.op match {
           case Some("update") =>
             Some(tag(preD, "update_preimage", v)
               .unionByName(tag(postD, "update_postimage", v)))
@@ -2208,18 +2194,11 @@ object VersionedTable {
         }
       }
     }
-    if (parts.isEmpty) {
-      val base = declared.orElse {
-        val (_, files) = latest(spark, table)
-        if (files.nonEmpty)
-          Some(spark.read.parquet(s"$table/${files.head}").schema)
-        else None
-      }.getOrElse(throw new IllegalArgumentException(
+    if (parts.isEmpty)
+      tag(emptyFeed(spark, table, declared,
         s"no changes in ($fromVersion, $toVersion] and no schema " +
-          s"available for empty CDF of $table — pass schema="))
-      tag(readFiles(spark, table, Nil, Some(base)), "insert", 0L)
-        .where(lit(false))
-    } else parts.reduce(_ unionByName _)
+          s"available for empty CDF of $table — pass schema="), "insert", 0L)
+    else parts.reduce(_ unionByName _)
   }
 
   /** Internal snapshot read for rewrite paths (compact/upsert/update/
@@ -2428,24 +2407,6 @@ object VersionedTable {
     }
   }
 
-  /** Compact the current snapshot into `numFiles` files. The commit
-    * REPLACES exactly the input snapshot's files; appends that raced in
-    * between are rebased over on retry — never lost, never duplicated.
-    * Returns the committed version (or -1 if the table was empty).
-    * Also MATERIALIZES any pending merge-on-read delete layer: the
-    * rewrite reads through the anti-join, so the compacted files
-    * physically lack the deleted rows and the `#del` lines drop from
-    * the manifest (read overhead back to zero).
-    *
-    * `zorderDims` (+ `zorderBits`) optionally re-CLUSTERS while
-    * compacting: rows are range-partitioned and sorted on the Morton
-    * interleave of the given integral bucket columns (see
-    * [[graft.functions.GraftFunctions.ZValue]]), so the compacted files
-    * carry tight parquet min/max ranges in every clustered dimension —
-    * compaction is exactly when a versioned lake re-sorts for data
-    * skipping (Delta OPTIMIZE ZORDER BY's shape), and the OCC commit
-    * protocol is unchanged.
-    */
   /** Byte-targeted compaction — at 100 TB you size output FILES, not
     * their count: numFiles = ceil(snapshot bytes / target). The output
     * size is an estimate by input bytes (the Delta OPTIMIZE heuristic:
@@ -2484,6 +2445,24 @@ object VersionedTable {
     compact(spark, table, n, zorderDims, zorderBits)
   }
 
+  /** Compact the current snapshot into `numFiles` files. The commit
+    * REPLACES exactly the input snapshot's files; appends that raced in
+    * between are rebased over on retry — never lost, never duplicated.
+    * Returns the committed version (or -1 if the table was empty).
+    * Also MATERIALIZES any pending merge-on-read delete layer: the
+    * rewrite reads through the anti-join, so the compacted files
+    * physically lack the deleted rows and the `#del` lines drop from
+    * the manifest (read overhead back to zero).
+    *
+    * `zorderDims` (+ `zorderBits`) optionally re-CLUSTERS while
+    * compacting: rows are range-partitioned and sorted on the Morton
+    * interleave of the given integral bucket columns (see
+    * [[graft.functions.GraftFunctions.ZValue]]), so the compacted files
+    * carry tight parquet min/max ranges in every clustered dimension —
+    * compaction is exactly when a versioned lake re-sorts for data
+    * skipping (Delta OPTIMIZE ZORDER BY's shape), and the OCC commit
+    * protocol is unchanged.
+    */
   def compact(spark: SparkSession, table: String, numFiles: Int,
       zorderDims: Seq[org.apache.spark.sql.Column] = Nil,
       zorderBits: Int = 16,
@@ -2524,11 +2503,11 @@ object VersionedTable {
               .sortWithinPartitions("__graft_z")
               .drop("__graft_z")
           }
-        val compacted = stage(spark,
+        val compacted = rowFiles(spark, table, lines, stage(spark,
           stampFieldIds(clustered, schemaLine(lines)), table,
           // z-order interleaving is NOT a lexicographic sort — only the
           // preserved range layout may claim the sorted-file marker
-          sortedBy = if (rangeSorted) clusterCols else Nil)
+          sortedBy = if (rangeSorted) clusterCols else Nil), others = Nil)
         // valid only while EVERY input file is still live (another
         // compactor replacing them would make our commit duplicate rows)
         // AND the pending delete layer is unchanged — a deleteByKeys/
@@ -2792,6 +2771,31 @@ object VersionedTable {
     require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
       "writerId must be non-empty, no spaces")
 
+  /** The `staged` files of a rewrite that hold rows. A rewrite whose
+    * survivors are empty still stages a file with no row group; such
+    * files are deleted and left out of the snapshot, where every later
+    * scan and footer check would pay for them. A table without a
+    * declared schema keeps one when no file in `others` (the snapshot's
+    * files the rewrite keeps) remains: the data files are its only
+    * schema.
+    */
+  private def rowFiles(spark: SparkSession, table: String,
+      lines: Seq[String], staged: Seq[String],
+      others: Seq[String]): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val empty = staged.filter { n =>
+      try readParquetFooter(conf, new Path(table, n)).getBlocks.isEmpty
+      catch { case _: Exception => false }
+    }
+    val keep =
+      if (empty.size == staged.size && others.isEmpty &&
+          schemaLine(lines).isEmpty) empty.take(1)
+      else Nil
+    val drop = empty.filterNot(keep.contains)
+    drop.foreach(n => fs(spark, table).delete(new Path(table, n), false))
+    staged.filterNot(drop.contains)
+  }
+
   /** The one body of [[upsert]] and [[merge]] (`deletes0` None: upsert,
     * whose commits keep their `upsert` op marker).
     */
@@ -2868,23 +2872,16 @@ object VersionedTable {
           // plan/setup cost isn't free either).
           lazy val existing = snapRead(spark, table, affected, lines)
           // ONE write per attempt: the affected files' survivors together
-          // with the upsert rows. A file whose every row was replaced or
-          // deleted leaves nothing, and an empty write stages an empty
-          // file: leave it out of the snapshot.
+          // with the upsert rows
           val added =
             if (affected.isEmpty)
               if (hasUpserts) stage(spark, upserts, table, cluster = true)
               else Nil
-            else stage(spark, stampFieldIds(
+            else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
               existing.join(allKeys, Seq(key), "left_anti")
                 .unionByName(upserts, allowMissingColumns = true),
-              schemaLine(lines)), table, cluster = true).filter { n =>
-              val p = new Path(table, n)
-              val blocks = try readParquetFooter(conf, p).getBlocks.size
-                catch { case _: Exception => 1 }
-              if (blocks == 0) fs(spark, table).delete(p, false)
-              blocks > 0
-            }
+              schemaLine(lines)), table, cluster = true),
+              others = files.filterNot(affected.contains))
           // a pure insert needs no CDC file (the feed reads the added
           // files as inserts), and neither does a merge that touched no
           // file and added no row
@@ -3028,9 +3025,10 @@ object VersionedTable {
           predicate)
       val rewritten =
         if (affected.isEmpty) Nil
-        else stage(spark, stampFieldIds(snapRead(spark, table, affected, lines)
-          .where(not(coalesce(predicate, lit(false)))), schemaLine(lines)),
-          table)
+        else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
+          snapRead(spark, table, affected, lines)
+            .where(not(coalesce(predicate, lit(false)))), schemaLine(lines)),
+          table), others = files.filterNot(affected.contains) ++ newFiles)
       val cdc = stageCdcIfEnabled(spark, table, lines, {
         val inserts = df.withColumn(ChangeTypeCol, lit("insert"))
         if (affected.isEmpty) inserts
@@ -3282,8 +3280,9 @@ object VersionedTable {
       else {
         val survivors = snapRead(spark, table, affected, lines)
           .where(not(coalesce(predicate, lit(false))))
-        val rewritten = stage(spark,
-          stampFieldIds(survivors, schemaLine(lines)), table)
+        val rewritten = rowFiles(spark, table, lines, stage(spark,
+          stampFieldIds(survivors, schemaLine(lines)), table),
+          others = files.filterNot(affected.contains))
         val cdc = stageCdcIfEnabled(spark, table, lines,
           snapRead(spark, table, affected, lines)
             .where(coalesce(predicate, lit(false)))
@@ -3303,15 +3302,6 @@ object VersionedTable {
     }
   }
 
-  /** Delete data files referenced by NO manifest version >= `keepFrom`
-    * (older-snapshot readers must be done first — the usual vacuum
-    * contract), plus manifests < keepFrom. `retentionMs` is the file-age
-    * guard that makes vacuum safe alongside in-flight writers: their
-    * staged-but-uncommitted files look unreferenced but are NEW — only
-    * unreferenced files older than the window are reaped (the same
-    * contract as Delta's retention check; default 7 days). Pass 0 only
-    * when no writer can be in flight.
-    */
   /** Merge-on-read DELETE by key: the CDC shape — `keys` is a frame
     * whose columns name the equality key(s) and whose rows are the keys
     * to delete. NOTHING is rewritten: the keys are staged as a small
@@ -3329,8 +3319,8 @@ object VersionedTable {
     * parquet reader cannot apply joins — the same reader-protocol gate
     * as Delta's deletion vectors); compact first, or read through this
     * API.
-    */
-  /** @param txn optional (writerId, epoch) idempotence watermark — the
+    *
+    * @param txn optional (writerId, epoch) idempotence watermark — the
     *   exactly-once contract of [[appendIdempotent]] for CDC delete
     *   streams: a replayed epoch is a no-op, and an empty batch still
     *   advances the watermark (the batch WAS processed).
@@ -4027,6 +4017,15 @@ object VersionedTable {
     }
   }
 
+  /** Delete data files referenced by NO manifest version >= `keepFrom`
+    * (older-snapshot readers must be done first — the usual vacuum
+    * contract), plus manifests < keepFrom. `retentionMs` is the file-age
+    * guard that makes vacuum safe alongside in-flight writers: their
+    * staged-but-uncommitted files look unreferenced but are NEW — only
+    * unreferenced files older than the window are reaped (the same
+    * contract as Delta's retention check; default 7 days). Pass 0 only
+    * when no writer can be in flight.
+    */
   def vacuum(spark: SparkSession, table: String, keepFrom: Long,
       retentionMs: Long = 7L * 24 * 3600 * 1000): Int = {
     val f = fs(spark, table)
@@ -4050,14 +4049,9 @@ object VersionedTable {
       .filter(v => v >= 1 && v <= vMax).toSet
     val referenced = ((lo to vMax) ++ tagged.filter(_ < lo))
       .toSeq.sorted.flatMap { v =>
-      val p = commitPath(table, v)
-      if (!f.exists(p)) Nil
+      if (!f.exists(commitPath(table, v))) Nil
       else {
-        val data = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        val in = f.open(p)
-        try in.readFully(data) finally in.close()
-        val lines = new String(data, "UTF-8").split("\n")
-          .filter(_.nonEmpty).toSeq
+        val lines = readManifestRaw(f, table, v)
         // data files are bare lines; merge-on-read delete files and CDC
         // files are referenced from inside #del/#delpos/#cdc metadata
         // lines — all must survive while any retained manifest names them

@@ -76,17 +76,24 @@ object StreamTune {
     case _ => false
   }
 
+  private val sessionLocks =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, AnyRef]())
+
   /** Run `start` (a `writeStream...start()` call) with
     * `spark.sql.shuffle.partitions` pinned to [[partitionsFor]] the
     * given feed size; the session default is restored before
     * returning (the started query keeps the pinned value — its session
-    * clone is synchronous inside `start()`).
+    * clone is synchronous inside `start()`). Pinned starts on one
+    * session run one at a time: interleaved, one query would clone the
+    * other's width and the session would be left at it.
     */
   def pinnedStart(spark: SparkSession, feedBytes: Long)(
-      start: => StreamingQuery): StreamingQuery = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, partitionsFor(spark, feedBytes).toString)
-    try start finally spark.conf.set(key, prev)
-  }
+      start: => StreamingQuery): StreamingQuery =
+    sessionLocks.computeIfAbsent(spark, _ => new Object).synchronized {
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, partitionsFor(spark, feedBytes).toString)
+      try start finally spark.conf.set(key, prev)
+    }
 }

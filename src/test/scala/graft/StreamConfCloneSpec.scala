@@ -106,4 +106,55 @@ class StreamConfCloneSpec extends SparkTestBase {
       assert(VersionedTable.read(spark, root + "/dst").count() === 2L)
     } finally spark.conf.set(key, prev)
   }
+
+  test("pinnedStart serializes per session: two racing pinned starts " +
+      "each keep their own width and the session keeps its own") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import graft.streaming.StreamTune
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_tune_race").toString
+    (1 to 100).map(i => (i.toLong, i % 7)).toDF("id", "k")
+      .coalesce(1).write.parquet(root + "/in")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val widths = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def startQuery(name: String): org.apache.spark.sql.streaming.StreamingQuery =
+      spark.readStream.schema("id LONG, k INT").parquet(root + "/in")
+        .writeStream.foreachBatch {
+          (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
+            widths.put(name, b.sparkSession.conf.get(key))
+            ()
+        }.option("checkpointLocation", s"$root/ck_$name").start()
+    val narrowInside = new CountDownLatch(1)
+    val wideInside = new CountDownLatch(1)
+    val wideBytes = 3L << 20
+    assert(StreamTune.partitionsFor(spark, 1L) === 1)
+    assert(StreamTune.partitionsFor(spark, wideBytes) === 3)
+    // the narrow start holds its window open until the wide start gets
+    // inside its own (or 2 s pass): unserialized, the wide pin lands
+    // between the narrow pin and the narrow query's session clone
+    val narrow = new Thread(() => {
+      val q = StreamTune.pinnedStart(spark, 1L) {
+        narrowInside.countDown()
+        wideInside.await(2, TimeUnit.SECONDS)
+        startQuery("narrow")
+      }
+      try q.processAllAvailable() finally q.stop()
+    })
+    val wide = new Thread(() => {
+      narrowInside.await()
+      val q = StreamTune.pinnedStart(spark, wideBytes) {
+        wideInside.countDown()
+        startQuery("wide")
+      }
+      try q.processAllAvailable() finally q.stop()
+    })
+    try {
+      narrow.start(); wide.start()
+      narrow.join(120000); wide.join(120000)
+      assert(widths.get("narrow") === "1")
+      assert(widths.get("wide") === "3")
+      assert(spark.conf.get(key) === prev)
+    } finally spark.conf.set(key, prev)
+  }
 }

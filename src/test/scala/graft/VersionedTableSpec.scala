@@ -27,6 +27,35 @@ class VersionedTableSpec extends SparkTestBase {
     assert(rows(t) === Set((1, "a"), (2, "b"), (3, "c")))
   }
 
+  test("a rewrite whose survivors are empty commits no file without " +
+      "row groups; a schema-less table keeps one for its schema") {
+    import org.apache.spark.sql.functions.col
+    val conf = spark.sparkContext.hadoopConfiguration
+    def emptyFiles(t: String): Seq[String] =
+      VersionedTable.latest(spark, t)._2.filter(n =>
+        VersionedTable.readParquetFooter(conf,
+          new org.apache.hadoop.fs.Path(t, n)).getBlocks.isEmpty)
+    val t = Files.createTempDirectory("vt_empty").toString + "/t"
+    VersionedTable.append(spark, Seq((1, "a")).toDF("k", "v").coalesce(1), t)
+    VersionedTable.append(spark, Seq((2, "b")).toDF("k", "v").coalesce(1), t)
+    VersionedTable.append(spark, Seq((3, "c")).toDF("k", "v").coalesce(1), t)
+    VersionedTable.delete(spark, t, col("k") === 1)
+    assert(emptyFiles(t) === Nil)
+    assert(VersionedTable.latest(spark, t)._2.size === 2)
+    VersionedTable.replaceWhere(spark, Seq((4, "d")).toDF("k", "v").coalesce(1), t,
+      col("k") === 2)
+    assert(emptyFiles(t) === Nil)
+    assert(VersionedTable.latest(spark, t)._2.size === 2)
+    assert(rows(t) === Set((3, "c"), (4, "d")))
+    // the last rows of a schema-less table: one empty file stays, so the
+    // snapshot still reads with its columns
+    VersionedTable.delete(spark, t, col("k") >= 3)
+    assert(VersionedTable.latest(spark, t)._2.size === 1)
+    assert(emptyFiles(t).size === 1)
+    assert(VersionedTable.read(spark, t).columns.toSeq === Seq("k", "v"))
+    assert(rows(t) === Set.empty)
+  }
+
   test("append racing a compaction is never lost") {
     val t = Files.createTempDirectory("vt2").toString + "/t"
     for (i <- 1 to 5)
