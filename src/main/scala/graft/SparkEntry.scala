@@ -1258,7 +1258,8 @@ object SparkEntry {
   /** Ship each batch as ONE mtime-ordered parquet file under
     * `root/sub/` and open it as a maxFilesPerTrigger=1 file stream —
     * the nd1 harness generalized so a STREAM-STREAM join can feed two
-    * sides from one root (each side's batch i lands in micro-batch i).
+    * sides from one root (each side's batch i lands in micro-batch i),
+    * and the feed of the foreachBatch appenders (AnnFeed, SketchFeed).
     */
   private def fileStream(s: SparkSession, root: String, sub: String,
       batches: Seq[DataFrame]): DataFrame = {
