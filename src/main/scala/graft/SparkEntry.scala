@@ -887,18 +887,18 @@ object SparkEntry {
         new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
       val root = java.nio.file.Files
         .createTempDirectory("graft_j2s").toString
-      // marker rides in the data batch (see streamTwinSource): the
-      // no-data flush batch replaces the two marker micro-batches
+      // each side's marker rides in its data batch (see
+      // streamTwinSource); the no-data batch after it flushes the state
       val lStream = fileStream(s, root, "left",
-        Seq(ev.unionByName(markerLike(ev, "ts", far(0)))))
+        Seq(ev.unionByName(markerLike(ev, far(0)))))
       val rStream = fileStream(s, root, "right",
-        Seq(quotes.unionByName(markerLike(quotes, "ts", far(0)))))
+        Seq(quotes.unionByName(markerLike(quotes, far(0)))))
       val out = graft.streaming.StreamAsOf.backward(s,
         lStream, "user_id", "ts", "payload",
         rStream, "user_id", "ts", "value", watermark = "1 hour")
-      runStreamTwinFiltered(s, root, out.toDF()
+      runStreamTwin(s, root, out.toDF()
         .select(col("key").as("user_id"), col("payload"),
-          col("asof_value")), col("user_id") >= 0)
+          col("asof_value")))
         .where(col("asof_value").isNotNull) // inner: the j2 contract
         .select(col("payload").cast(LongType).as("event_id"),
           col("user_id"), col("asof_value").as("asof_price"))
@@ -926,12 +926,12 @@ object SparkEntry {
         new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
       val root = java.nio.file.Files
         .createTempDirectory("graft_j1s").toString
-      // marker rides in the data batch (see streamTwinSource): the
-      // no-data flush batch replaces the two marker micro-batches
+      // each side's marker rides in its data batch (see
+      // streamTwinSource); the no-data batch after it flushes the state
       val pStream = fileStream(s, root, "points",
-        Seq(li.unionByName(markerLike(li, "p_ts", far(0)))))
+        Seq(li.unionByName(markerLike(li, far(0)))))
       val iStream = fileStream(s, root, "intervals",
-        Seq(o.unionByName(markerLike(o, "i_start", far(0)))))
+        Seq(o.unionByName(markerLike(o, far(0)))))
       val out = graft.streaming.StreamIntervalJoin.pointInInterval(
         pStream, "l_orderkey", "p_ts",
         iStream, "o_orderkey", "i_start", "i_end",
@@ -942,7 +942,7 @@ object SparkEntry {
       // sf0.1 — the per-batch file-commit overhead outweighed the
       // driver append (5.3 vs 3.6 s full-run); the file sink is for
       // the outer twins' 600-743k-row outputs
-      runStreamTwinFiltered(s, root, out, col("l_orderkey") >= 0)
+      runStreamTwin(s, root, out, col("l_orderkey") >= 0)
         .orderBy("l_orderkey", "l_linenumber", "o_totalprice")
     }),
 
@@ -973,12 +973,12 @@ object SparkEntry {
         new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
       val root = java.nio.file.Files
         .createTempDirectory("graft_j1so").toString
-      // marker rides in the data batch (see streamTwinSource): the
-      // no-data flush batch replaces the two marker micro-batches
+      // each side's marker rides in its data batch (see
+      // streamTwinSource); the no-data batch after it flushes the state
       val pStream = fileStream(s, root, "points",
-        Seq(li.unionByName(markerLike(li, "p_ts", far(0)))))
+        Seq(li.unionByName(markerLike(li, far(0)))))
       val iStream = fileStream(s, root, "intervals",
-        Seq(o.unionByName(markerLike(o, "i_start", far(0)))))
+        Seq(o.unionByName(markerLike(o, far(0)))))
       val out = graft.streaming.StreamIntervalJoin.pointInInterval(
         pStream, "l_orderkey", "p_ts",
         iStream, "o_orderkey", "i_start", "i_end",
@@ -986,7 +986,7 @@ object SparkEntry {
         select = Seq(col("p.l_orderkey"), col("p.l_linenumber"),
           col("i.o_totalprice")),
         joinType = "left_outer")
-      runStreamTwinFiltered(s, root, out, col("l_orderkey") >= 0,
+      runStreamTwin(s, root, out, col("l_orderkey") >= 0,
         fileSink = true)
         .orderBy(col("l_orderkey"), col("l_linenumber"),
           asc_nulls_first("o_totalprice"))
@@ -1015,12 +1015,12 @@ object SparkEntry {
         new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
       val root = java.nio.file.Files
         .createTempDirectory("graft_j1sf").toString
-      // marker rides in the data batch (see streamTwinSource): the
-      // no-data flush batch replaces the two marker micro-batches
+      // each side's marker rides in its data batch (see
+      // streamTwinSource); the no-data batch after it flushes the state
       val pStream = fileStream(s, root, "points",
-        Seq(li.unionByName(markerLike(li, "p_ts", far(0)))))
+        Seq(li.unionByName(markerLike(li, far(0)))))
       val iStream = fileStream(s, root, "intervals",
-        Seq(o.unionByName(markerLike(o, "i_start", far(0)))))
+        Seq(o.unionByName(markerLike(o, far(0)))))
       val out = graft.streaming.StreamIntervalJoin.pointInInterval(
         pStream, "l_orderkey", "p_ts",
         iStream, "o_orderkey", "i_start", "i_end",
@@ -1028,7 +1028,7 @@ object SparkEntry {
         select = Seq(col("p.l_orderkey"), col("p.l_linenumber"),
           col("i.o_orderkey"), col("i.o_totalprice")),
         joinType = "full_outer")
-      runStreamTwinFiltered(s, root, out,
+      runStreamTwin(s, root, out,
         coalesce(col("l_orderkey"), col("o_orderkey")) >= 0,
         fileSink = true)
         .orderBy(asc_nulls_first("l_orderkey"),
@@ -1133,16 +1133,6 @@ object SparkEntry {
     graft.sources.VersionedTable.read(s, tbl)
   }
 
-  /** The streaming-twin lifecycle shared by ts1s/ts2s/ts3s/ts8s: ship
-    * `ev` (user_id/event_id/ts/value) as ONE parquet batch plus two
-    * far-future neutral marker batches (sentinel user −1, value 50.0)
-    * whose event times advance the watermark past every data row and
-    * fire the event-time timeouts, so the whole data range seals.
-    * Returns (root, source): a file stream delivering the three
-    * batches in mtime order, one per trigger. Filter `user_id >= 0`
-    * on the emitted rows (a single neutral marker observation can
-    * never alarm, but it must not enter the hash either).
-    */
   /** Recursive delete of a lifecycle query's temp root — every
     * stream-twin/feed entry reclaims its shipped batches, checkpoints,
     * and lake tables before returning (the [[runStreamTwin]] contract:
@@ -1173,50 +1163,43 @@ object SparkEntry {
     rmTree(tmp)
   }
 
-  private def streamTwinSource(s: SparkSession, ev: DataFrame,
-      tag: String): (String, DataFrame) = {
+  /** The feed of the single-stream twins (ts1s/ts2s/ts3s/ts8s/ts17s/
+    * a23s/w2s): the events table as `user_id`/`event_id` longs, `ts`
+    * and `value` (the measure as a double unless the twin passes its
+    * own), rows with a null key or event_id dropped, plus the twin's
+    * own `keep` filter. It ships as ONE [[fileStream]] batch with a
+    * far-future [[markerLike]] row riding in it: the watermark is
+    * computed from a batch's max event time at batch END, so the one
+    * file both delivers every real row (processed under the previous
+    * watermark, nothing dropped) and advances the watermark past all
+    * real event time; the engine's automatic no-data batch then fires
+    * every event-time timeout and emits the sealed rows. Returns
+    * (root, stream) for [[runStreamTwin]].
+    */
+  private def streamTwinSource(s: SparkSession, dir: String, tag: String,
+      keep: Column = lit(true),
+      value: Column = col("value").cast("double")): (String, DataFrame) = {
+    val ev = t(s, dir, "events")
+      .where(col("user_id").isNotNull && col("event_id").isNotNull && keep)
+      .select(col("user_id").cast(LongType).as("user_id"),
+        col("event_id").cast(LongType).as("event_id"),
+        col("ts"), value.as("value"))
     val root = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
-    val src = root + "/src"
     val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
-    def marker(eid: Long, offMs: Long): DataFrame = {
-      import s.implicits._
-      Seq((-1L, eid, new java.sql.Timestamp(maxTs.getTime + offMs), 50.0))
-        .toDF("user_id", "event_id", "ts", "value")
-    }
-    // r16 (guide §1.2 step 1: fewer passes/batches): the far-future
-    // marker rides IN the data batch — the watermark is computed from
-    // a batch's max event time at batch END, so one shipped file both
-    // delivers every real row (processed under the previous watermark,
-    // nothing dropped) and advances the watermark past all real event
-    // time; the engine's automatic no-data batch (shouldRunAnotherBatch
-    // on the watermark move) then fires every event-time timeout and
-    // emits the sealed rows. Replaces the (data, marker, marker)
-    // 3-file protocol: 4 micro-batches → 2, one shipped file per twin.
-    shipParquet(ev.unionByName(marker(-1L, 48L * 3600 * 1000)), src,
-      "b1", 1000000L)
-    val stream = s.readStream.schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("event_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    (root, stream)
+    val far = new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)
+    (root, fileStream(s, root, "src",
+      Seq(ev.unionByName(markerLike(ev, far)))))
   }
 
-  /** Run a streaming twin to completion through a memory sink and
-    * return the sealed non-marker rows (see [[streamTwinSource]]).
-    * Per-invocation state is RECLAIMED before returning: the sealed
-    * rows move to a localCheckpoint, then the memory-sink view drops
-    * and the temp root (shipped batches + stream checkpoint) deletes —
-    * without this, every bench rep of every twin leaks a full
-    * events-table copy on disk and a sealed result set in driver
-    * memory for the JVM's lifetime. */
-  private def runStreamTwin(s: SparkSession, root: String,
-      out: DataFrame): DataFrame =
-    runStreamTwinFiltered(s, root, out, col("user_id") >= 0)
-
-  /** [[runStreamTwin]] with a caller-chosen seal filter (the stream-
-    * stream twins key on other columns than `user_id`).
+  /** Run a streaming twin to completion and return its sealed rows: the
+    * ones passing `seal`, which drops the −1 marker keys (the stream-
+    * stream twins key on other columns than `user_id`). Per-invocation
+    * state is RECLAIMED before returning: the sealed rows move to a
+    * localCheckpoint, then the memory-sink view drops and the temp root
+    * (shipped batches + stream checkpoint) deletes — without this,
+    * every bench rep of every twin leaks a full events-table copy on
+    * disk and a sealed result set in driver memory for the JVM's
+    * lifetime.
     *
     * `fileSink = true` routes the output through a distributed parquet
     * FileStreamSink + read-back instead of the driver-side memory sink
@@ -1228,8 +1211,8 @@ object SparkEntry {
     * scoped to the j1* trio it wins 18.0 → 14.4 s, while the
     * small-output twins keep the cheaper memory sink.
     */
-  private def runStreamTwinFiltered(s: SparkSession, root: String,
-      out: DataFrame, seal: Column,
+  private def runStreamTwin(s: SparkSession, root: String,
+      out: DataFrame, seal: Column = col("user_id") >= 0,
       fileSink: Boolean = false): DataFrame = {
     val qn = java.nio.file.Paths.get(root).getFileName.toString
     // pin the stateful-shuffle width for THIS query only (streaming
@@ -1257,9 +1240,10 @@ object SparkEntry {
 
   /** Ship each batch as ONE mtime-ordered parquet file under
     * `root/sub/` and open it as a maxFilesPerTrigger=1 file stream —
-    * the nd1 harness generalized so a STREAM-STREAM join can feed two
-    * sides from one root (each side's batch i lands in micro-batch i),
-    * and the feed of the foreachBatch appenders (AnnFeed, SketchFeed).
+    * the one shipper of every stream twin (a STREAM-STREAM join feeds
+    * two sides from one root, each side's batch i landing in
+    * micro-batch i) and the feed of the foreachBatch appenders
+    * (AnnFeed, SketchFeed).
     */
   private def fileStream(s: SparkSession, root: String, sub: String,
       batches: Seq[DataFrame]): DataFrame = {
@@ -1272,12 +1256,12 @@ object SparkEntry {
   }
 
   /** One-row watermark-advancing marker with `df`'s exact schema:
-    * EVERY timestamp column = the given far-future time (`tsCol` names
-    * the watermark column but the others must not be null either — see
-    * below), numeric columns = −1 (the seal filter drops them),
-    * everything else null. Two of these per side push the shared
-    * watermark past all real event time and give the state store the
-    * extra micro-batch its event-time timeouts need to flush.
+    * EVERY timestamp column = the given far-future time, numeric
+    * columns = −1, everything else null. Riding in a twin's data batch,
+    * it pushes the watermark past all real event time, and the no-data
+    * batch that follows flushes the state store's event-time timeouts.
+    * A −1 value is neutral: the marker sits on its own −1 key, which
+    * the seal filter drops.
     *
     * Null-timestamp hazard (cost a day of round 15): a marker row
     * carrying NULL in a timestamp column that the stream-stream join
@@ -1290,8 +1274,7 @@ object SparkEntry {
     * marker rows; marker keys are −1 so they still join nothing real
     * and the seal filter still drops them.
     */
-  private def markerLike(df: DataFrame, tsCol: String,
-      ts: java.sql.Timestamp): DataFrame = {
+  private def markerLike(df: DataFrame, ts: java.sql.Timestamp): DataFrame = {
     val cols = df.schema.fields.map { f =>
       f.dataType match {
         case _: org.apache.spark.sql.types.TimestampType |
@@ -2228,18 +2211,14 @@ object SparkEntry {
 
     // ---- time series: the STREAMING CUSUM twin under the driver
     // oracle (the nd1 pattern: stream lifecycles are oracle-able).
-    // The events table streams as one data batch plus two far-future
-    // neutral marker batches that advance the watermark and fire the
-    // event-time timeouts, so every data row seals; the sealed alarms
-    // are then bit-equal to ts2's closed form by the CusumStream parity
-    // contract — the SAME type-pinned oracle SQL re-derives them.
+    // The events table streams as one data batch carrying a far-future
+    // neutral marker that advances the watermark; the no-data batch
+    // after it fires the event-time timeouts, so every data row seals
+    // (see streamTwinSource). The sealed alarms are then bit-equal to
+    // ts2's closed form by the CusumStream parity contract — the SAME
+    // type-pinned oracle SQL re-derives them.
     "ts2s_cusum_stream" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .where(col("user_id").isNotNull && col("event_id").isNotNull)
-        .select(col("user_id").cast(LongType).as("user_id"),
-          col("event_id").cast(LongType).as("event_id"),
-          col("ts"), col("value").cast("double").as("value"))
-      val (root, stream) = streamTwinSource(s, ev, "ts2s")
+      val (root, stream) = streamTwinSource(s, dir, "ts2s")
       val alarms = graft.streaming.CusumStream.alarms(s, stream,
         "ts", "value",
         target = new java.math.BigDecimal("50.00"),
@@ -2559,12 +2538,7 @@ object SparkEntry {
     // contract; the SAME oracle SQL re-derives them plus the stream's
     // typed-key observation contract.
     "ts17s_ph_stream" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .where(col("user_id").isNotNull && col("event_id").isNotNull)
-        .select(col("user_id").cast(LongType).as("user_id"),
-          col("event_id").cast(LongType).as("event_id"),
-          col("ts"), col("value").cast("double").as("value"))
-      val (root, stream) = streamTwinSource(s, ev, "ts17s")
+      val (root, stream) = streamTwinSource(s, dir, "ts17s")
       val alarms = graft.streaming.PageHinkleyStream.alarms(s, stream,
         "ts", "value", delta = 0.5,
         lambda = new java.math.BigDecimal("500.00"),
@@ -2757,18 +2731,13 @@ object SparkEntry {
         .orderBy("user_id", "ts", "event_id")),
 
     // ---- time series: the STREAMING Holt twin under the driver
-    // oracle (same lifecycle as ts2s: one data batch, two marker
-    // batches seal everything; HoltStream's IEEE steps are bit-equal
-    // to the batch fold, so ts8's recursive-CTE oracle re-derives the
-    // sealed points verbatim).
+    // oracle (same lifecycle as ts2s: one data batch with its marker
+    // seals everything; HoltStream's IEEE steps are bit-equal to the
+    // batch fold, so ts8's recursive-CTE oracle re-derives the sealed
+    // points verbatim).
     "ts8s_holt_stream" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .where(col("user_id").isNotNull && col("user_id") < 20 &&
-          col("event_id").isNotNull)
-        .select(col("user_id").cast(LongType).as("user_id"),
-          col("event_id").cast(LongType).as("event_id"),
-          col("ts"), col("value").cast("double").as("value"))
-      val (root, stream) = streamTwinSource(s, ev, "ts8s")
+      val (root, stream) = streamTwinSource(s, dir, "ts8s",
+        keep = col("user_id") < 20)
       val pts = graft.streaming.HoltStream.smoothed(s, stream,
         "ts", "value", alpha = 0.5, beta = 0.25, watermark = "1 hour")
       runStreamTwin(s, root, pts.toDF())
@@ -2868,12 +2837,7 @@ object SparkEntry {
     // makes the sealed alarms ts1's exact rows, so the oracle is ts1's
     // SQL plus the stream's typed-key filters).
     "ts1s_anomaly_stream" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .where(col("user_id").isNotNull && col("event_id").isNotNull)
-        .select(col("user_id").cast(LongType).as("user_id"),
-          col("event_id").cast(LongType).as("event_id"),
-          col("ts"), col("value").cast("double").as("value"))
-      val (root, stream) = streamTwinSource(s, ev, "ts1s")
+      val (root, stream) = streamTwinSource(s, dir, "ts1s")
       val alarms = graft.streaming.AnomalyStream.anomalies(s, stream,
         "ts", "value", lookback = 24, zThreshold = 3.0, minObs = 8,
         watermark = "1 hour")
@@ -2896,12 +2860,7 @@ object SparkEntry {
         .when(col("event_type") === "signup", 4.0)
         .when(col("event_type") === "view", 5.0)
         .otherwise(0.0)
-      val ev = t(s, dir, "events")
-        .where(col("user_id").isNotNull && col("event_id").isNotNull)
-        .select(col("user_id").cast(LongType).as("user_id"),
-          col("event_id").cast(LongType).as("event_id"),
-          col("ts"), code.as("value"))
-      val (root, stream) = streamTwinSource(s, ev, "a23s")
+      val (root, stream) = streamTwinSource(s, dir, "a23s", value = code)
       val closed = graft.streaming.Scd2Stream.closedVersions(s, stream,
         "ts", "event_id", "value", watermark = "1 hour")
       runStreamTwin(s, root, closed.toDF())
@@ -2912,18 +2871,13 @@ object SparkEntry {
 
     // ---- streaming: the SESSIONIZE twin under the driver oracle —
     // flatMapGroupsWithState + event-time timeout runs its full
-    // lifecycle (one data batch, two watermark-advancing markers seal
-    // every session) and the sealed session boundaries/counts must
+    // lifecycle (one data batch with its watermark-advancing marker
+    // seals every session) and the sealed session boundaries/counts must
     // equal a direct SQL gap-split. Bounds and counts are order-
     // independent, so the oracle needs no fold replay; the session
     // value totals are spec-pinned (SessionizeStreamSpec).
     "w2s_sessionize_stream" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .where(col("user_id").isNotNull && col("event_id").isNotNull)
-        .select(col("user_id").cast(LongType).as("user_id"),
-          col("event_id").cast(LongType).as("event_id"),
-          col("ts"), col("value").cast("double").as("value"))
-      val (root, stream) = streamTwinSource(s, ev, "w2s")
+      val (root, stream) = streamTwinSource(s, dir, "w2s")
       val sess = graft.streaming.Sessionize.sessions(s, stream,
         "ts", "value", gapSeconds = 1800, watermark = "1 hour")
       runStreamTwin(s, root, sess.toDF())
@@ -2937,12 +2891,7 @@ object SparkEntry {
     // step, so ts3's recursive-CTE oracle re-derives the sealed
     // points verbatim).
     "ts3s_ewma_stream" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .where(col("user_id").isNotNull && col("event_id").isNotNull)
-        .select(col("user_id").cast(LongType).as("user_id"),
-          col("event_id").cast(LongType).as("event_id"),
-          col("ts"), col("value").cast("double").as("value"))
-      val (root, stream) = streamTwinSource(s, ev, "ts3s")
+      val (root, stream) = streamTwinSource(s, dir, "ts3s")
       val pts = graft.streaming.EwmaStream.smoothed(s, stream,
         "ts", "value", alpha = 0.25, watermark = "1 hour")
       runStreamTwin(s, root, pts.toDF())

@@ -2287,11 +2287,6 @@ object GraftFunctions {
     // declaratively instead)
     reg.createOrReplaceTempFunction("graft_asof",
       es => graft.plans.GraftAsOfMarker(es.head, es(1)), "scala_udf")
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteAsOfJoin
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfStrategy
+    graft.plans.AsOfStrategy.setup(spark)
   }
 }

@@ -432,11 +432,7 @@ object AsOfJoin {
       return backward(left, right, leftTime, rightTime, Nil, valueCols, inner)
 
     val spark = left.sparkSession
-    // idempotent planner-strategy registration (also available via
-    // GraftExtensions.injectPlannerStrategy for declarative deployments)
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfStrategy
+    graft.plans.AsOfStrategy.setup(spark)
 
     val lPlan = GraftSqlShim.analyzed(left)
     val rPlan0 = GraftSqlShim.analyzed(right)

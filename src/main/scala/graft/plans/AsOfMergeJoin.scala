@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -53,9 +54,8 @@ case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinNode]] to [[AsOfMergeJoinExec]]. Register via
-  * `spark.experimental.extraStrategies` or `GraftExtensions`
-  * (injectPlannerStrategy).
+/** Plans [[AsOfJoinNode]] to [[AsOfMergeJoinExec]]. Install via
+  * [[AsOfStrategy.setup]] or `GraftExtensions` (injectPlannerStrategy).
   */
 object AsOfStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -63,6 +63,19 @@ object AsOfStrategy extends SparkStrategy {
       AsOfMergeJoinExec(lk, rk, lt, rt, ve, va, inner,
         planLater(l), planLater(r)) :: Nil
     case _ => Nil
+  }
+
+  /** The one imperative installer of the as-of surface: this strategy
+    * and the SQL rewrite rule ([[RewriteAsOfJoin]]), each added to
+    * `session` at most once. Sessions built with `GraftExtensions` get
+    * both injected declaratively instead.
+    */
+  def setup(session: SparkSession): Unit = {
+    val x = session.experimental
+    if (!x.extraOptimizations.contains(RewriteAsOfJoin))
+      x.extraOptimizations = x.extraOptimizations :+ RewriteAsOfJoin
+    if (!x.extraStrategies.contains(this))
+      x.extraStrategies = x.extraStrategies :+ this
   }
 }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, TimestampType}
   *     ON e.user_id = o.o_custkey AND graft_asof(e.ts, o.o_orderdate)
   *
   * and [[RewriteAsOfJoin]] (injected via `GraftExtensions` /
-  * `experimental.extraOptimizations`) rewrites the analyzed Join into
+  * [[AsOfStrategy.setup]]) rewrites the analyzed Join into
   * [[AsOfJoinNode]], planned by [[AsOfStrategy]] as the sort-merge as-of
   * operator. INNER join = matched rows only; LEFT join = unmatched left
   * rows keep nulls. Because the rewrite happens AFTER analysis, Catalyst's

@@ -1191,17 +1191,16 @@ object VersionedTable {
     require(set.nonEmpty || unset.nonEmpty, "nothing to change")
     requirePropChange(set, unset)
     occCommit(spark, table, "alterProperties") { (_, lines) =>
+      val files = lines.filterNot(_.startsWith("#"))
+      // tables born via plain append have no declared schema line — one
+      // footer read of a data file stands in, at most once per attempt
+      lazy val schema = schemaLine(lines).orElse(files.headOption.map(f =>
+        spark.read.parquet(s"$table/$f").schema))
       if (set.get(CdcProperty).exists(_.trim.equalsIgnoreCase("true")))
-        // tables born via plain append have no declared schema line —
-        // one footer read of a data file stands in (enable-time only)
-        requireNoReservedCdfColumns(schemaLine(lines).orElse(
-          lines.filterNot(_.startsWith("#")).headOption.map(f =>
-            spark.read.parquet(s"$table/$f").schema)),
+        requireNoReservedCdfColumns(schema,
           s"enable $CdcProperty on $table")
       set.get(ClusterByProperty).foreach(spec =>
-        validateClusterSpec(spec, schemaLine(lines).orElse(
-          lines.filterNot(_.startsWith("#")).headOption.map(f =>
-            spark.read.parquet(s"$table/$f").schema)), table))
+        validateClusterSpec(spec, schema, table))
       // bucketing is SET-ONCE (see BucketByProperty): a different spec
       // would silently re-interpret existing files' bucket names
       val curBucket = propMap(lines).get(BucketByProperty)
@@ -1213,20 +1212,15 @@ object VersionedTable {
           s"$BucketByProperty is ${curBucket.get} and cannot change — " +
             "bucket layout is fixed at declaration")
         val (c, _) = parseBucketSpec(spec).get
-        validateClusterSpec(c, schemaLine(lines).orElse(
-          lines.filterNot(_.startsWith("#")).headOption.map(f =>
-            spark.read.parquet(s"$table/$f").schema)), table,
-          prop = BucketByProperty)
+        validateClusterSpec(c, schema, table, prop = BucketByProperty)
       }
       require(!(unset.contains(BucketByProperty) && curBucket.isDefined),
         s"$BucketByProperty cannot be unset — bucket layout is fixed " +
           "at declaration")
       set.filter(_._1.startsWith(ConstraintPrefix)).foreach {
         case (k, sql) =>
-          val files = lines.filterNot(_.startsWith("#"))
           validateConstraint(spark, k.stripPrefix(ConstraintPrefix), sql,
-            schemaLine(lines).orElse(files.headOption.map(f =>
-              spark.read.parquet(s"$table/$f").schema)),
+            schema,
             if (files.isEmpty) None
             else Some(readFilesDeleteAware(spark, table, files,
               schemaLine(lines), delLines(lines), keepFileCol = false,
@@ -1930,13 +1924,14 @@ object VersionedTable {
     * rule over [[logCommits]], shared by [[readChanges]] and the
     * streaming source. Commits with removals are compaction rewrites and
     * contribute nothing. Throws if any needed manifest was vacuumed (see
-    * [[readChanges]]).
+    * [[readChanges]]) and at a REPLACE TABLE ([[requireNotReplaced]]).
     */
   def changedFilesBetween(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long = Long.MaxValue,
       ignoreRowLevel: Boolean = false): Seq[(Long, Seq[String])] =
     logCommits(spark, table, fromVersion, toVersion, Some("changefeed"))
       .flatMap { c =>
+        requireNotReplaced(c, table)
         // a merge-on-read delete is STRUCTURALLY empty (no data file
         // added or removed — the change hides in a #del metadata line),
         // so the structural dichotomy below would silently skip it; route
@@ -2048,17 +2043,24 @@ object VersionedTable {
       .where(org.apache.spark.sql.functions.lit(false))
   }
 
-  /** The CDF feeds' shared first rule for a commit: REPLACE TABLE throws
-    * (the feed's schema changed mid-range, which a single-schema feed
-    * cannot represent); a pure rewrite (compact, materializeFieldIds, a
-    * pre-marker manifest that removed files and wrote no CDC file) is
-    * skipped (true).
+  /** Every feed's first rule for a commit (appended rows and both CDF
+    * feeds): REPLACE TABLE throws, with or without the row-level opt-in —
+    * the feed's schema changed mid-range, which a single-schema feed
+    * cannot represent.
     */
-  private def cdfSkips(c: LogCommit, table: String): Boolean = {
+  private def requireNotReplaced(c: LogCommit, table: String): Unit =
     if (c.op.contains("replace-table"))
       throw new UnsupportedOperationException(
         s"CDF hit REPLACE TABLE at v${c.version} of $table: the feed's " +
           "schema changed — resync from a snapshot")
+
+  /** The CDF feeds' shared first rule for a commit: REPLACE TABLE throws
+    * ([[requireNotReplaced]]); a pure rewrite (compact,
+    * materializeFieldIds, a pre-marker manifest that removed files and
+    * wrote no CDC file) is skipped (true).
+    */
+  private def cdfSkips(c: LogCommit, table: String): Boolean = {
+    requireNotReplaced(c, table)
     c.op.contains("compact") || c.op.contains("schema") ||
       (c.op.isEmpty && c.removed.nonEmpty && c.cdc.isEmpty)
   }

@@ -3,14 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.LongType
 
 /** Streaming rolling z-score anomaly detection — the stateful
-  * counterpart of `Analytics.rollingZScoreAnomalies` (ts1), same
-  * discipline as [[Sessionize]]: per-key custom state via
-  * `flatMapGroupsWithState`, watermark-sealed emission.
+  * counterpart of `Analytics.rollingZScoreAnomalies` (ts1), folded by
+  * [[SealedSeries]].
   *
   * Parity contract with the batch operator: an event is scored against
   * the trailing `lookback` SEALED events of its key in (ts, event_id)
@@ -20,65 +16,27 @@ import org.apache.spark.sql.types.LongType
   * stream flags exactly the rows the batch query flags
   * (AnomalyStreamSpec pins stream == batch on the sealed range).
   *
-  * Sealing: an event is scored only once the watermark passes its
-  * timestamp — before that a within-watermark late event could still
-  * belong EARLIER in the trailing window and change the verdict.
-  * Events newer than the watermark wait in state (bounded by the
-  * watermark horizon); each is scored and emitted exactly once.
-  *
-  * Scale shape: one hash shuffle of narrow rows per micro-batch;
-  * state per key = pending events within the watermark horizon plus
-  * `lookback` sealed (ts, cents) pairs — independent of stream length.
+  * Per-key state: the last `lookback` sealed observations' cents —
+  * independent of stream length.
   */
 object AnomalyStream {
-
-  case class Event(user_id: Long, event_id: Long, ts: Timestamp,
-      value: Double)
-
-  /** Per-key state: not-yet-sealed events (micros, event_id, raw
-    * value — cents are derivable and recomputed at seal time) + the
-    * last `lookback` sealed observations as (micros, cents).
-    */
-  case class KeyState(pending: List[(Long, Long, Double)],
-      tail: List[(Long, Long)])
 
   case class Anomaly(user_id: Long, event_id: Long, ts: Timestamp,
       value: Double, z: Double)
 
-  import TimeCodec.{microsToTs, tsToMicros}
-
-  /** Round a double to exact cents — the value the batch path's
-    * non-ANSI CAST(v AS DECIMAL(18,2)) produces, or None where that
-    * cast yields null (NaN, ±Inf, |v| beyond DECIMAL(18,2)): such a
-    * row is EXCLUDED by both paths (the batch operator filters on the
-    * stabilized cast — the shared observation contract).
-    *
-    * Spark casts via the double's SHORTEST decimal representation
-    * (BigDecimal.valueOf), not its exact binary expansion: 2.675
-    * (binary 2.67499…) must round to 2.68, exactly as the engine does.
+  /** Score raw `x` against the trailing window's cents — the batch
+    * operator's exact z chain: s1/s2 accumulate as exact BigDecimals
+    * (cents can square past 2^63; the batch side is DECIMAL(38,4)) and
+    * convert to double in ONE correctly-rounded step each, exactly like
+    * the engine's decimal→double cast, before the fixed IEEE chain.
     */
-  private[streaming] def toCents(v: Double): Option[Long] = {
-    if (java.lang.Double.isNaN(v) || java.lang.Double.isInfinite(v))
-      return None
-    val c = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-    if (c.precision - c.scale > 16) None // DECIMAL(18,2) overflow
-    else Some(c.unscaledValue().longValueExact())
-  }
-
-  /** Score raw `x` against the trailing window — the batch operator's
-    * exact z chain: s1/s2 accumulate as exact BigDecimals (cents can
-    * square past 2^63; the batch side is DECIMAL(38,4)) and convert to
-    * double in ONE correctly-rounded step each, exactly like the
-    * engine's decimal→double cast, before the fixed IEEE chain.
-    */
-  private[streaming] def zOf(x: Double, tail: List[(Long, Long)],
+  private[streaming] def zOf(x: Double, tail: List[Long],
       minObs: Int): Option[Double] = {
     val n = tail.length
     if (n < minObs) return None
     var s1c = java.math.BigInteger.ZERO
     var s2c = java.math.BigInteger.ZERO
-    tail.foreach { case (_, c) =>
+    tail.foreach { c =>
       val b = java.math.BigInteger.valueOf(c)
       s1c = s1c.add(b)
       s2c = s2c.add(b.multiply(b))
@@ -91,18 +49,14 @@ object AnomalyStream {
 
   /** Detect anomalies on a stream. `events` must have `user_id`
     * (castable to long), `event_id` (long, the intra-timestamp
-    * tie-break), `timeCol` (timestamp), `valueCol` (double). Rows with
-    * null key/time/value are dropped, not job-fatal (a null measure
-    * carries no anomaly signal, unlike the sessionizer's sum where it
-    * counts 0).
+    * tie-break), `timeCol` (timestamp), `valueCol` (double). A null
+    * measure carries no anomaly signal, so its row is dropped (unlike
+    * the sessionizer's sum, where it counts 0).
     *
     * Batch-parity contract: bit-equal to
     * [[graft.operators.Analytics.rollingZScoreAnomalies]] over the
-    * watermark-sealed range for NON-NULL keys only — the stream drops
-    * null-keyed rows (they cannot enter a typed long key), while the
-    * batch window operator keeps a null key as its own partition (SQL
-    * `PARTITION BY` groups nulls). Filter null keys on the batch side
-    * before comparing.
+    * watermark-sealed range for NON-NULL keys only (see
+    * [[SealedSeries]]).
     */
   def anomalies(
       spark: SparkSession,
@@ -115,57 +69,14 @@ object AnomalyStream {
       watermark: String = "1 hour"): Dataset[Anomaly] = {
     require(lookback >= 1 && minObs >= 2 && zThreshold > 0,
       s"need lookback >= 1, minObs >= 2, zThreshold > 0")
-    import spark.implicits._
-
-    val typed = events
-      .withWatermark(timeCol, watermark)
-      .select(col("user_id").cast(LongType).as("user_id"),
-        col("event_id").cast(LongType).as("event_id"),
-        col(timeCol).as("ts"),
-        col(valueCol).cast("double").as("value"))
-      .where(col("user_id").isNotNull && col("event_id").isNotNull &&
-        col("ts").isNotNull && col("value").isNotNull)
-      .as[Event]
-
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeyState, Anomaly](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[KeyState]) =>
-          val st = state.getOption.getOrElse(KeyState(Nil, Nil))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // non-stabilizable values (NaN/Inf/out-of-range) are excluded
-          // by the shared observation contract — never enqueued, never
-          // window occupants, never job-fatal
-          val pending = st.pending ++ batch.flatMap(e =>
-            toCents(e.value).map(_ =>
-              (tsToMicros(e.ts), e.event_id, e.value)))
-          // seal events STRICTLY below the watermark; Spark's late-row
-          // filter only drops rows strictly older than the watermark,
-          // so a row landing exactly AT the watermark can still be
-          // admitted in a later batch — sealing at <= would have put
-          // the frontier past a row Spark can still deliver, breaking
-          // batch-parity on equal-timestamp boundary ties
-          val (ready, open) = pending.partition(_._1 < wmUs)
-          var tail = st.tail
-          val out = scala.collection.mutable.ListBuffer.empty[Anomaly]
-          ready.sortBy(e => (e._1, e._2)).foreach {
-            case (us, eid, x) =>
-              // x is the RAW value — the batch z chain subtracts the
-              // stabilized mean from the unquantized observation
-              zOf(x, tail, minObs).foreach { z =>
-                if (math.abs(z) > zThreshold)
-                  out += Anomaly(uid, eid, microsToTs(us), x, z)
-              }
-              // toCents is Some by construction (filtered at enqueue)
-              tail = (tail :+ ((us, toCents(x).get))).takeRight(lookback)
-          }
-          state.update(KeyState(open, tail))
-          // wake this key when the watermark passes its oldest pending
-          // event, so sealing does not wait for new data on the key
-          open.map(_._1).minOption.foreach(us =>
-            state.setTimeoutTimestamp(us / 1000L + 1L))
-          out.iterator
-      }
+    SealedSeries.fold(spark, events, timeCol, valueCol, watermark,
+      List.empty[Long]) { (tail, o) =>
+      // the RAW value is scored — the batch z chain subtracts the
+      // stabilized mean from the unquantized observation
+      val hit = zOf(o.value, tail, minObs).filter(z =>
+        math.abs(z) > zThreshold)
+      ((tail :+ o.cents).takeRight(lookback),
+        hit.map(Anomaly(o.user_id, o.event_id, o.ts, o.value, _)))
+    }
   }
 }

@@ -1,17 +1,12 @@
 package graft.streaming
 
+import java.math.BigInteger
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.LongType
 
 /** Streaming two-sided CUSUM change-point detection — the stateful
-  * counterpart of `Analytics.cusum` (ts2), same sealing discipline as
-  * [[AnomalyStream]]: per-key custom state via `flatMapGroupsWithState`,
-  * watermark-sealed emission, one hash shuffle of narrow rows per
-  * micro-batch.
+  * counterpart of `Analytics.cusum` (ts2), folded by [[SealedSeries]].
   *
   * Parity contract with the batch operator: the batch side computes the
   * floor-at-zero CUSUM recurrence in closed form (running deviation sum
@@ -21,34 +16,22 @@ import org.apache.spark.sql.types.LongType
   * alarm rows, their s_pos/s_neg decimals, and the side labels are
   * bit-equal to ts2 (CusumStreamSpec pins it). Unlike the z-score
   * detector, CUSUM state never re-reads a trailing window: per key it is
-  * FOUR exact numbers plus the not-yet-sealed events — O(1) in stream
-  * length, the property that lets one state store follow 100 TB/day.
-  *
-  * Observation contract (shared with ts2): rows with null key/time/value
-  * or a measure that does not stabilize to DECIMAL(18,2) are excluded.
-  * Null keys are dropped here (cannot enter a typed long key); filter
-  * them batch-side before comparing, as with [[AnomalyStream]].
+  * FOUR exact numbers — O(1) in stream length, the property that lets
+  * one state store follow 100 TB/day.
   */
 object CusumStream {
 
-  case class Event(user_id: Long, event_id: Long, ts: Timestamp,
-      value: Double)
-
-  /** Per-key state: not-yet-sealed events (micros, event_id, raw value)
-    * plus the CUSUM accumulators in exact cents — running deviation
-    * sums and their running minima (the closed form's prefix mins).
-    * Cents ride as strings: they are unbounded integers (DECIMAL(38,2)
-    * territory on the batch side) and a string field survives the
-    * encoder without precision negotiation.
+  /** The CUSUM accumulators in exact cents — running deviation sums and
+    * their running minima (the closed form's prefix mins). Cents ride as
+    * strings: they are unbounded integers (DECIMAL(38,2) territory on
+    * the batch side) and a string field survives the encoder without
+    * precision negotiation.
     */
-  case class KeyState(pending: List[(Long, Long, Double)],
-      wp: String, wn: String, minWp: String, minWn: String)
+  case class Sums(wp: String, wn: String, minWp: String, minWn: String)
 
   case class Alarm(user_id: Long, event_id: Long, ts: Timestamp,
       value: Double, s_pos: java.math.BigDecimal,
       s_neg: java.math.BigDecimal, side: String)
-
-  import TimeCodec.{microsToTs, tsToMicros}
 
   /** Emit alarms on a stream. `target`/`slack`/`threshold` carry scale
     * ≤ 2 (they meet DECIMAL(18,2) observations; a finer scale would
@@ -73,72 +56,31 @@ object CusumStream {
     require(threshold.signum > 0, s"threshold must be > 0, got $threshold")
     require(target.scale <= 2 && slack.scale <= 2 && threshold.scale <= 2,
       "target/slack/threshold must have scale <= 2 (cents-exact contract)")
-    import spark.implicits._
 
-    val kUpCents = target.add(slack).movePointRight(2).longValueExact()
-    val kDnCents = target.subtract(slack).movePointRight(2).longValueExact()
+    val kUp = BigInteger.valueOf(
+      target.add(slack).movePointRight(2).longValueExact())
+    val kDn = BigInteger.valueOf(
+      target.subtract(slack).movePointRight(2).longValueExact())
     val thCents = threshold.movePointRight(2).toBigIntegerExact
 
-    val typed = events
-      .withWatermark(timeCol, watermark)
-      .select(col("user_id").cast(LongType).as("user_id"),
-        col("event_id").cast(LongType).as("event_id"),
-        col(timeCol).as("ts"),
-        col(valueCol).cast("double").as("value"))
-      .where(col("user_id").isNotNull && col("event_id").isNotNull &&
-        col("ts").isNotNull && col("value").isNotNull)
-      .as[Event]
-
-    val zero = java.math.BigInteger.ZERO
-
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeyState, Alarm](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[KeyState]) =>
-          val st = state.getOption.getOrElse(
-            KeyState(Nil, "0", "0", "0", "0"))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // shared observation contract: only DECIMAL(18,2)-stabilizable
-          // values enter (AnomalyStream.toCents is the one quantizer)
-          val pending = st.pending ++ batch.flatMap(e =>
-            AnomalyStream.toCents(e.value).map(_ =>
-              (tsToMicros(e.ts), e.event_id, e.value)))
-          // seal STRICTLY below the watermark (the AnomalyStream
-          // boundary-tie discipline: Spark can still admit a row landing
-          // exactly AT the watermark)
-          val (ready, open) = pending.partition(_._1 < wmUs)
-          var wp = new java.math.BigInteger(st.wp)
-          var wn = new java.math.BigInteger(st.wn)
-          var minWp = new java.math.BigInteger(st.minWp)
-          var minWn = new java.math.BigInteger(st.minWn)
-          val out = scala.collection.mutable.ListBuffer.empty[Alarm]
-          ready.sortBy(e => (e._1, e._2)).foreach { case (us, eid, x) =>
-            val c = java.math.BigInteger.valueOf(
-              AnomalyStream.toCents(x).get) // Some by construction
-            wp = wp.add(c.subtract(
-              java.math.BigInteger.valueOf(kUpCents)))
-            wn = wn.add(java.math.BigInteger.valueOf(kDnCents).subtract(c))
-            if (wp.compareTo(minWp) < 0) minWp = wp
-            if (wn.compareTo(minWn) < 0) minWn = wn
-            // prefix min clamped at the virtual W_0 = 0 — minWp starts
-            // at 0 and only decreases, so min(minWp, 0) == minWp
-            val sPos = wp.subtract(minWp.min(zero))
-            val sNeg = wn.subtract(minWn.min(zero))
-            val hi = sPos.compareTo(thCents) > 0
-            val lo = sNeg.compareTo(thCents) > 0
-            if (hi || lo) {
-              val side = if (hi && lo) "both" else if (hi) "hi" else "lo"
-              out += Alarm(uid, eid, microsToTs(us), x,
-                new java.math.BigDecimal(sPos, 2),
-                new java.math.BigDecimal(sNeg, 2), side)
-            }
-          }
-          state.update(KeyState(open, wp.toString, wn.toString,
-            minWp.toString, minWn.toString))
-          open.map(_._1).minOption.foreach(us =>
-            state.setTimeoutTimestamp(us / 1000L + 1L))
-          out.iterator
-      }
+    SealedSeries.fold(spark, events, timeCol, valueCol, watermark,
+      Sums("0", "0", "0", "0")) { (acc, o) =>
+      val c = BigInteger.valueOf(o.cents)
+      val wp = new BigInteger(acc.wp).add(c.subtract(kUp))
+      val wn = new BigInteger(acc.wn).add(kDn.subtract(c))
+      // prefix min clamped at the virtual W_0 = 0 — the minima start at
+      // 0 and only decrease, so min(minW, 0) == minW
+      val minWp = wp.min(new BigInteger(acc.minWp))
+      val minWn = wn.min(new BigInteger(acc.minWn))
+      val sPos = wp.subtract(minWp)
+      val sNeg = wn.subtract(minWn)
+      val hi = sPos.compareTo(thCents) > 0
+      val lo = sNeg.compareTo(thCents) > 0
+      (Sums(wp.toString, wn.toString, minWp.toString, minWn.toString),
+        Option.when(hi || lo)(Alarm(o.user_id, o.event_id, o.ts, o.value,
+          new java.math.BigDecimal(sPos, 2),
+          new java.math.BigDecimal(sNeg, 2),
+          if (hi && lo) "both" else if (hi) "hi" else "lo")))
+    }
   }
 }

@@ -3,42 +3,22 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.LongType
 
 /** Streaming EWMA — the stateful counterpart of `Analytics.ewma` (ts3),
-  * same sealing discipline as [[AnomalyStream]]/[[CusumStream]]: per-key
-  * custom state via `flatMapGroupsWithState`, watermark-sealed emission,
-  * one hash shuffle of narrow rows per micro-batch.
+  * folded by [[SealedSeries]].
   *
   * Parity contract with the batch operator: the batch side folds
   * e₁ = x₁, e = α·x + (1−α)·e over the (ts, event_id)-ordered,
   * DECIMAL(18,2)-stabilized series; the stream applies the IDENTICAL
-  * IEEE step to rows sealed strictly below the watermark, carrying only
-  * the previous smoothed value — so the emitted `ewma` doubles are
-  * bit-equal to ts3 over the sealed range (EwmaStreamSpec pins it).
-  * Per-key state is ONE double plus the not-yet-sealed events — O(1) in
+  * IEEE step to sealed rows, carrying only the previous smoothed value —
+  * so the emitted `ewma` doubles are bit-equal to ts3 over the sealed
+  * range (EwmaStreamSpec pins it). Per-key state is ONE double — O(1) in
   * stream length.
-  *
-  * Observation contract (shared with ts3): rows with null key/time/value
-  * or a measure that does not stabilize to DECIMAL(18,2) are excluded.
-  * Null keys are dropped here (cannot enter a typed long key); filter
-  * them batch-side before comparing, as with [[AnomalyStream]].
   */
 object EwmaStream {
 
-  case class Event(user_id: Long, event_id: Long, ts: Timestamp,
-      value: Double)
-
-  /** Pending = (micros, event_id, cents); `prev`/`has` carry the fold. */
-  case class KeyState(pending: List[(Long, Long, Long)],
-      prev: Double, has: Boolean)
-
   case class Point(user_id: Long, event_id: Long, ts: Timestamp,
       value: Double, ewma: Double)
-
-  import TimeCodec.{microsToTs, tsToMicros}
 
   def smoothed(
       spark: SparkSession,
@@ -48,51 +28,17 @@ object EwmaStream {
       alpha: Double,
       watermark: String = "1 hour"): Dataset[Point] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    import spark.implicits._
 
     // computed ONCE, exactly as the batch plan's lit(1.0 - alpha)
     val oneMinus = 1.0 - alpha
 
-    val typed = events
-      .withWatermark(timeCol, watermark)
-      .select(col("user_id").cast(LongType).as("user_id"),
-        col("event_id").cast(LongType).as("event_id"),
-        col(timeCol).as("ts"),
-        col(valueCol).cast("double").as("value"))
-      .where(col("user_id").isNotNull && col("event_id").isNotNull &&
-        col("ts").isNotNull && col("value").isNotNull)
-      .as[Event]
-
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeyState, Point](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[KeyState]) =>
-          val st = state.getOption.getOrElse(KeyState(Nil, 0.0, false))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // shared observation contract: only DECIMAL(18,2)-stabilizable
-          // values enter (AnomalyStream.toCents is the one quantizer)
-          val pending = st.pending ++ batch.flatMap(e =>
-            AnomalyStream.toCents(e.value).map(c =>
-              (tsToMicros(e.ts), e.event_id, c)))
-          // seal STRICTLY below the watermark (boundary-tie discipline)
-          val (ready, open) = pending.partition(_._1 < wmUs)
-          var prev = st.prev
-          var has = st.has
-          val out = scala.collection.mutable.ListBuffer.empty[Point]
-          ready.sortBy(e => (e._1, e._2)).foreach { case (us, eid, c) =>
-            // cents → double is the same correctly-rounded value as the
-            // batch side's DECIMAL(18,2) → double cast
-            val x = c / 100.0
-            val e = if (has) alpha * x + oneMinus * prev else x
-            prev = e
-            has = true
-            out += Point(uid, eid, microsToTs(us), x, e)
-          }
-          state.update(KeyState(open, prev, has))
-          open.map(_._1).minOption.foreach(us =>
-            state.setTimeoutTimestamp(us / 1000L + 1L))
-          out.iterator
-      }
+    SealedSeries.fold(spark, events, timeCol, valueCol, watermark,
+      Option.empty[Double]) { (prev, o) =>
+      // cents → double is the same correctly-rounded value as the batch
+      // side's DECIMAL(18,2) → double cast
+      val x = o.cents / 100.0
+      val e = prev.fold(x)(p => alpha * x + oneMinus * p)
+      (Some(e), Some(Point(o.user_id, o.event_id, o.ts, x, e)))
+    }
   }
 }

@@ -3,14 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.LongType
 
 /** Streaming Holt double exponential smoothing — the stateful
   * counterpart of `Analytics.holt` (ts8), one more state double than
-  * [[EwmaStream]] (level AND trend), same sealing discipline: per-key
-  * `flatMapGroupsWithState`, emission strictly below the watermark.
+  * [[EwmaStream]] (level AND trend), folded by [[SealedSeries]].
   *
   * Parity contract with the batch operator: the batch side folds
   *   l₁ = x₁, b₁ = 0;
@@ -18,27 +14,13 @@ import org.apache.spark.sql.types.LongType
   * over the (ts, event_id)-ordered DECIMAL(18,2)-stabilized series; the
   * stream applies the IDENTICAL IEEE steps to sealed rows, so emitted
   * level/trend doubles are bit-equal to ts8 over the sealed range
-  * (HoltStreamSpec pins it). Per-key state is TWO doubles plus the
-  * not-yet-sealed events — O(1) in stream length.
-  *
-  * Observation contract (shared with ts8 via [[AnomalyStream.toCents]]):
-  * rows with null key/time/value or a non-stabilizing measure are
-  * excluded; null keys are dropped here (cannot enter a typed long
-  * key) — filter them batch-side before comparing.
+  * (HoltStreamSpec pins it). Per-key state is TWO doubles — O(1) in
+  * stream length.
   */
 object HoltStream {
 
-  case class Event(user_id: Long, event_id: Long, ts: Timestamp,
-      value: Double)
-
-  /** Pending = (micros, event_id, cents); level/trend carry the fold. */
-  case class KeyState(pending: List[(Long, Long, Long)],
-      level: Double, trend: Double, has: Boolean)
-
   case class Point(user_id: Long, event_id: Long, ts: Timestamp,
       value: Double, level: Double, trend: Double)
-
-  import TimeCodec.{microsToTs, tsToMicros}
 
   def smoothed(
       spark: SparkSession,
@@ -50,53 +32,21 @@ object HoltStream {
       watermark: String = "1 hour"): Dataset[Point] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(beta >= 0 && beta <= 1, s"beta must be in [0, 1], got $beta")
-    import spark.implicits._
 
     // computed ONCE, exactly as the batch plan's lit(1.0 - alpha/beta)
     val a1 = 1.0 - alpha
     val g1 = 1.0 - beta
 
-    val typed = events
-      .withWatermark(timeCol, watermark)
-      .select(col("user_id").cast(LongType).as("user_id"),
-        col("event_id").cast(LongType).as("event_id"),
-        col(timeCol).as("ts"),
-        col(valueCol).cast("double").as("value"))
-      .where(col("user_id").isNotNull && col("event_id").isNotNull &&
-        col("ts").isNotNull && col("value").isNotNull)
-      .as[Event]
-
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeyState, Point](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[KeyState]) =>
-          val st = state.getOption.getOrElse(KeyState(Nil, 0.0, 0.0, false))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val pending = st.pending ++ batch.flatMap(e =>
-            AnomalyStream.toCents(e.value).map(c =>
-              (tsToMicros(e.ts), e.event_id, c)))
-          // seal STRICTLY below the watermark (boundary-tie discipline)
-          val (ready, open) = pending.partition(_._1 < wmUs)
-          var level = st.level
-          var trend = st.trend
-          var has = st.has
-          val out = scala.collection.mutable.ListBuffer.empty[Point]
-          ready.sortBy(e => (e._1, e._2)).foreach { case (us, eid, c) =>
-            val x = c / 100.0
-            if (has) {
-              val nl = alpha * x + a1 * (level + trend)
-              val nb = beta * (nl - level) + g1 * trend
-              level = nl; trend = nb
-            } else {
-              level = x; trend = 0.0; has = true
-            }
-            out += Point(uid, eid, microsToTs(us), x, level, trend)
-          }
-          state.update(KeyState(open, level, trend, has))
-          open.map(_._1).minOption.foreach(us =>
-            state.setTimeoutTimestamp(us / 1000L + 1L))
-          out.iterator
+    // accumulator: (level, trend) once the first row sealed
+    SealedSeries.fold(spark, events, timeCol, valueCol, watermark,
+      Option.empty[(Double, Double)]) { (lt, o) =>
+      val x = o.cents / 100.0
+      val (level, trend) = lt.fold((x, 0.0)) { case (l, b) =>
+        val nl = alpha * x + a1 * (l + b)
+        (nl, beta * (nl - l) + g1 * b)
       }
+      (Some((level, trend)),
+        Some(Point(o.user_id, o.event_id, o.ts, x, level, trend)))
+    }
   }
 }

@@ -1,17 +1,14 @@
 package graft.streaming
 
+import java.math.{BigInteger, RoundingMode, BigDecimal => JBigDecimal}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.LongType
 
 /** Streaming two-sided Page–Hinkley drift detection — the stateful
   * counterpart of `Analytics.pageHinkley` (ts17), completing the
-  * detector-twin family (anomaly/CUSUM/EWMA/Holt/PH). Same sealing
-  * discipline as [[CusumStream]]: per-key custom state via
-  * `flatMapGroupsWithState`, watermark-sealed emission.
+  * detector-twin family (anomaly/CUSUM/EWMA/Holt/PH), folded by
+  * [[SealedSeries]].
   *
   * Parity contract with the batch operator: the batch side quantizes
   * each running-mean deviation g_t = x_t − S_t/t − δ to
@@ -22,33 +19,21 @@ import org.apache.spark.sql.types.LongType
   * the identical scale-12 quantization (HALF_UP, Spark's Decimal cast
   * rounding), and exact scale-12 running sums/minima — so sealed alarm
   * rows are bit-equal to ts17 (PageHinkleyStreamSpec pins it). Per-key
-  * state is FIVE exact numbers plus the not-yet-sealed events — O(1)
-  * in stream length.
-  *
-  * Observation contract (shared with ts17): rows with null
-  * key/time/value or a measure that does not stabilize to
-  * DECIMAL(18,2) are excluded; null keys cannot enter the typed long
-  * key (filter batch-side before comparing, as with [[CusumStream]]).
+  * state is FIVE exact numbers — O(1) in stream length.
   */
 object PageHinkleyStream {
 
-  case class Event(user_id: Long, event_id: Long, ts: Timestamp,
-      value: Double)
-
-  /** Per-key state: not-yet-sealed events plus the PH accumulators —
-    * cents sum / count for the running mean, and the scale-12 running
-    * deviation sums with their inclusive prefix minima ("" = no sealed
-    * row yet; the first M initializes its own min). Unbounded integers
-    * ride as strings (the [[CusumStream]] encoder discipline).
+  /** The PH accumulators — cents sum / count for the running mean, and
+    * the scale-12 running deviation sums with their inclusive prefix
+    * minima (None = no sealed row yet; the first M initializes its own
+    * min). Unbounded integers ride as strings (the [[CusumStream]]
+    * encoder discipline).
     */
-  case class KeyState(pending: List[(Long, Long, Double)],
-      sumCents: String, n: Long,
-      mp: String, mn: String, minMp: String, minMn: String)
+  case class Sums(sumCents: String, n: Long, mp: String, mn: String,
+      minMp: Option[String], minMn: Option[String])
 
   case class Alarm(user_id: Long, event_id: Long, ts: Timestamp,
       value: Double, ph_pos: Double, ph_neg: Double, side: String)
-
-  import TimeCodec.{microsToTs, tsToMicros}
 
   /** Emit drift alarms on a stream. `lambda` carries scale ≤ 2 and is
     * compared at the state's scale 12 exactly; `delta` is the batch
@@ -69,85 +54,40 @@ object PageHinkleyStream {
     require(lambda.signum > 0, s"lambda must be > 0, got $lambda")
     require(lambda.scale <= 2,
       "lambda must have scale <= 2 (compared exactly at scale 12)")
-    import spark.implicits._
 
     val lambda12 = lambda.movePointRight(12).toBigIntegerExact
+    // the batch side's exact quantization: double → scale-12 HALF_UP
+    // (Spark's Decimal cast rounding)
+    def q12(d: Double): BigInteger =
+      JBigDecimal.valueOf(d).setScale(12, RoundingMode.HALF_UP)
+        .unscaledValue()
+    def r6(d: Double): Double =
+      JBigDecimal.valueOf(d).setScale(6, RoundingMode.HALF_UP)
+        .doubleValue() + 0.0
 
-    val typed = events
-      .withWatermark(timeCol, watermark)
-      .select(col("user_id").cast(LongType).as("user_id"),
-        col("event_id").cast(LongType).as("event_id"),
-        col(timeCol).as("ts"),
-        col(valueCol).cast("double").as("value"))
-      .where(col("user_id").isNotNull && col("event_id").isNotNull &&
-        col("ts").isNotNull && col("value").isNotNull)
-      .as[Event]
-
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeyState, Alarm](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[KeyState]) =>
-          val st = state.getOption.getOrElse(
-            KeyState(Nil, "0", 0L, "0", "0", "", ""))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val pending = st.pending ++ batch.flatMap(e =>
-            AnomalyStream.toCents(e.value).map(_ =>
-              (tsToMicros(e.ts), e.event_id, e.value)))
-          val (ready, open) = pending.partition(_._1 < wmUs)
-          var sum = new java.math.BigInteger(st.sumCents)
-          var n = st.n
-          var mp = new java.math.BigInteger(st.mp)
-          var mn = new java.math.BigInteger(st.mn)
-          var minMp = if (st.minMp.isEmpty) null
-            else new java.math.BigInteger(st.minMp)
-          var minMn = if (st.minMn.isEmpty) null
-            else new java.math.BigInteger(st.minMn)
-          val out = scala.collection.mutable.ListBuffer.empty[Alarm]
-          // the batch side's exact quantization: double → scale-12
-          // HALF_UP (Spark's Decimal cast rounding)
-          def q12(d: Double): java.math.BigInteger =
-            java.math.BigDecimal.valueOf(d)
-              .setScale(12, java.math.RoundingMode.HALF_UP)
-              .unscaledValue()
-          def r6(d: Double): Double =
-            java.math.BigDecimal.valueOf(d)
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-              .doubleValue() + 0.0
-          ready.sortBy(e => (e._1, e._2)).foreach { case (us, eid, v) =>
-            val cents = AnomalyStream.toCents(v).get // Some by construction
-            sum = sum.add(java.math.BigInteger.valueOf(cents))
-            n += 1
-            // identical double chain to the batch plan: decimal→double
-            // casts are correctly rounded in both, then (x − mean) − δ
-            val x = new java.math.BigDecimal(
-              java.math.BigInteger.valueOf(cents), 2).doubleValue()
-            val mean = new java.math.BigDecimal(sum, 2).doubleValue() /
-              n.toDouble
-            mp = mp.add(q12(x - mean - delta))
-            mn = mn.add(q12(mean - x - delta))
-            // inclusive prefix min, NO virtual zero (the ts17 frame)
-            if (minMp == null || mp.compareTo(minMp) < 0) minMp = mp
-            if (minMn == null || mn.compareTo(minMn) < 0) minMn = mn
-            val php = mp.subtract(minMp)
-            val phn = mn.subtract(minMn)
-            val hi = php.compareTo(lambda12) > 0
-            val lo = phn.compareTo(lambda12) > 0
-            if (hi || lo) {
-              val side = if (hi && lo) "both" else if (hi) "hi" else "lo"
-              out += Alarm(uid, eid, microsToTs(us), v,
-                r6(new java.math.BigDecimal(php, 12).doubleValue()),
-                r6(new java.math.BigDecimal(phn, 12).doubleValue()),
-                side)
-            }
-          }
-          state.update(KeyState(open, sum.toString, n,
-            mp.toString, mn.toString,
-            if (minMp == null) "" else minMp.toString,
-            if (minMn == null) "" else minMn.toString))
-          open.map(_._1).minOption.foreach(us =>
-            state.setTimeoutTimestamp(us / 1000L + 1L))
-          out.iterator
-      }
+    SealedSeries.fold(spark, events, timeCol, valueCol, watermark,
+      Sums("0", 0L, "0", "0", None, None)) { (acc, o) =>
+      val sum = new BigInteger(acc.sumCents).add(BigInteger.valueOf(o.cents))
+      val n = acc.n + 1
+      // identical double chain to the batch plan: decimal→double casts
+      // are correctly rounded in both, then (x − mean) − δ
+      val x = new JBigDecimal(BigInteger.valueOf(o.cents), 2).doubleValue()
+      val mean = new JBigDecimal(sum, 2).doubleValue() / n.toDouble
+      val mp = new BigInteger(acc.mp).add(q12(x - mean - delta))
+      val mn = new BigInteger(acc.mn).add(q12(mean - x - delta))
+      // inclusive prefix min, NO virtual zero (the ts17 frame)
+      val minMp = acc.minMp.fold(mp)(m => mp.min(new BigInteger(m)))
+      val minMn = acc.minMn.fold(mn)(m => mn.min(new BigInteger(m)))
+      val php = mp.subtract(minMp)
+      val phn = mn.subtract(minMn)
+      val hi = php.compareTo(lambda12) > 0
+      val lo = phn.compareTo(lambda12) > 0
+      (Sums(sum.toString, n, mp.toString, mn.toString,
+        Some(minMp.toString), Some(minMn.toString)),
+        Option.when(hi || lo)(Alarm(o.user_id, o.event_id, o.ts, o.value,
+          r6(new JBigDecimal(php, 12).doubleValue()),
+          r6(new JBigDecimal(phn, 12).doubleValue()),
+          if (hi && lo) "both" else if (hi) "hi" else "lo")))
+    }
   }
 }
