@@ -35,12 +35,22 @@ class JobsSpec extends SparkTestBase {
       |2024-05-01 05:00:00,2024-05-01 05:00:00,2024-05-01 06:00:00,51000.10
       |""".stripMargin
 
+  /** A job's result is what a Spark count of its lake gives, with the
+    * writer's `_SUCCESS` and `.crc` side files in the folder.
+    */
+  private def assertLakeCount(n: Jobs.Result, lake: String): Unit = {
+    val names = new java.io.File(lake).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    assert(n === Some(spark.read.parquet(lake).count()))
+  }
+
   test("singleFolderElt: dirty rows vanish, dedup, archive, schema typed") {
     val src = tmp(); val arch = tmp(); val lake = tmp().resolve("lake").toString
     write(src, "load_1.csv", loadCsv)
     val n = Jobs.singleFolderElt(spark, src.toString, arch.toString, lake,
       loadCasts, dedup = true)
     assert(n === Some(3)) // 7 data rows: -1 null, -1 ts fail, -1 num fail, -1 dup
+    assertLakeCount(n, lake)
     val lakeDf = spark.read.parquet(lake)
     assert(lakeDf.schema("load").dataType === DecimalType(10, 2))
     assert(lakeDf.schema("interval_start").dataType === TimestampType)
@@ -71,12 +81,14 @@ class JobsSpec extends SparkTestBase {
     val n1 = Jobs.singleFolderElt(spark, src.toString, arch.toString, lake,
       loadCasts, dedup = true, dedupAgainstLake = true)
     assert(n1 === Some(3))
+    assertLakeCount(n1, lake)
     // the same file re-delivered after archive: without the guard this
     // would double the lake; with it, append is a no-op
     write(src, "load_1_redelivered.csv", loadCsv)
     val n2 = Jobs.singleFolderElt(spark, src.toString, arch.toString, lake,
       loadCasts, dedup = true, dedupAgainstLake = true)
     assert(n2 === Some(3))
+    assertLakeCount(n2, lake)
   }
 
   test("fmLoadMerge: distributed as-of replaces driver merge_asof") {
@@ -95,6 +107,7 @@ class JobsSpec extends SparkTestBase {
       fmArch.toString, loadArch.toString, lake)
     // 23:00 fm row has no load <= it => dropped (inner); other 3 match
     assert(n === Some(3))
+    assertLakeCount(n, lake)
     val out = spark.read.parquet(lake)
     import spark.implicits._
     val loads = out.select($"time".cast("string"), $"load".cast("string"))
@@ -124,6 +137,7 @@ class JobsSpec extends SparkTestBase {
     // LZ_WEST 00:15 and 00:30 inside closed interval; 00:31 outside;
     // LZ_NORTH has no prices; LZ_SOUTH price has no weather
     assert(n === Some(2))
+    assertLakeCount(n, lake)
     val out = spark.read.parquet(lake)
     assert(out.schema("Temperature").dataType === FloatType)
     assert(out.schema("Weather_Timestamp").dataType === TimestampType)
@@ -139,10 +153,12 @@ class JobsSpec extends SparkTestBase {
     write(src, "w_south.csv", header + "\n" + row("LZ_SOUTH", 80.0) + "\n")
     val n = Jobs.historicalWeatherUnion(spark, src.toString, lake)
     assert(n === Some(3))
+    assertLakeCount(n, lake)
     // overwrite (S5): re-running replaces, not appends
     write(src, "w_west2.csv", header + "\n" + row("LZ_WEST", 74.0) + "\n")
     val n2 = Jobs.historicalWeatherUnion(spark, src.toString, lake)
     assert(n2 === Some(4)) // 3 original files still there + 1 new, overwritten lake
+    assertLakeCount(n2, lake)
     import spark.implicits._
     val counts = spark.read.parquet(lake).groupBy("zone").count()
       .as[(String, Long)].collect().toMap
