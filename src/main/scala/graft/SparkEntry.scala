@@ -880,19 +880,8 @@ object SparkEntry {
         .select(col("o_custkey").cast(LongType).as("user_id"),
           col("o_orderdate").cast(TimestampType).as("ts"),
           col("best_price").cast(DoubleType).as("value"))
-      val maxT = ev.select(max(col("ts")).as("m")).unionAll(
-        quotes.select(max(col("ts")).as("m"))).agg(max(col("m")))
-        .head.getTimestamp(0)
-      def far(off: Long) =
-        new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_j2s").toString
-      // each side's marker rides in its data batch (see
-      // streamTwinSource); the no-data batch after it flushes the state
-      val lStream = fileStream(s, root, "left",
-        Seq(ev.unionByName(markerLike(ev, far(0)))))
-      val rStream = fileStream(s, root, "right",
-        Seq(quotes.unionByName(markerLike(quotes, far(0)))))
+      val (root, lStream, rStream) =
+        streamTwinPair(s, "j2s", ev, "ts", quotes, "ts")
       val out = graft.streaming.StreamAsOf.backward(s,
         lStream, "user_id", "ts", "payload",
         rStream, "user_id", "ts", "value", watermark = "1 hour")
@@ -919,19 +908,8 @@ object SparkEntry {
         col("o_orderdate").cast(TimestampType).as("i_start"),
         (col("o_orderdate") + expr("INTERVAL 30 DAYS"))
           .cast(TimestampType).as("i_end"))
-      val maxT = li.select(max(col("p_ts")).as("m")).unionAll(
-        o.select(max(col("i_end")).as("m"))).agg(max(col("m")))
-        .head.getTimestamp(0)
-      def far(off: Long) =
-        new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_j1s").toString
-      // each side's marker rides in its data batch (see
-      // streamTwinSource); the no-data batch after it flushes the state
-      val pStream = fileStream(s, root, "points",
-        Seq(li.unionByName(markerLike(li, far(0)))))
-      val iStream = fileStream(s, root, "intervals",
-        Seq(o.unionByName(markerLike(o, far(0)))))
+      val (root, pStream, iStream) =
+        streamTwinPair(s, "j1s", li, "p_ts", o, "i_end")
       val out = graft.streaming.StreamIntervalJoin.pointInInterval(
         pStream, "l_orderkey", "p_ts",
         iStream, "o_orderkey", "i_start", "i_end",
@@ -966,19 +944,8 @@ object SparkEntry {
         col("o_orderdate").cast(TimestampType).as("i_start"),
         (col("o_orderdate") + expr("INTERVAL 30 DAYS"))
           .cast(TimestampType).as("i_end"))
-      val maxT = li.select(max(col("p_ts")).as("m")).unionAll(
-        o.select(max(col("i_end")).as("m"))).agg(max(col("m")))
-        .head.getTimestamp(0)
-      def far(off: Long) =
-        new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_j1so").toString
-      // each side's marker rides in its data batch (see
-      // streamTwinSource); the no-data batch after it flushes the state
-      val pStream = fileStream(s, root, "points",
-        Seq(li.unionByName(markerLike(li, far(0)))))
-      val iStream = fileStream(s, root, "intervals",
-        Seq(o.unionByName(markerLike(o, far(0)))))
+      val (root, pStream, iStream) =
+        streamTwinPair(s, "j1so", li, "p_ts", o, "i_end")
       val out = graft.streaming.StreamIntervalJoin.pointInInterval(
         pStream, "l_orderkey", "p_ts",
         iStream, "o_orderkey", "i_start", "i_end",
@@ -1008,19 +975,8 @@ object SparkEntry {
         col("o_orderdate").cast(TimestampType).as("i_start"),
         (col("o_orderdate") + expr("INTERVAL 30 DAYS"))
           .cast(TimestampType).as("i_end"))
-      val maxT = li.select(max(col("p_ts")).as("m")).unionAll(
-        o.select(max(col("i_end")).as("m"))).agg(max(col("m")))
-        .head.getTimestamp(0)
-      def far(off: Long) =
-        new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000 + off)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_j1sf").toString
-      // each side's marker rides in its data batch (see
-      // streamTwinSource); the no-data batch after it flushes the state
-      val pStream = fileStream(s, root, "points",
-        Seq(li.unionByName(markerLike(li, far(0)))))
-      val iStream = fileStream(s, root, "intervals",
-        Seq(o.unionByName(markerLike(o, far(0)))))
+      val (root, pStream, iStream) =
+        streamTwinPair(s, "j1sf", li, "p_ts", o, "i_end")
       val out = graft.streaming.StreamIntervalJoin.pointInInterval(
         pStream, "l_orderkey", "p_ts",
         iStream, "o_orderkey", "i_start", "i_end",
@@ -1189,6 +1145,26 @@ object SparkEntry {
     val far = new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)
     (root, fileStream(s, root, "src",
       Seq(ev.unionByName(markerLike(ev, far)))))
+  }
+
+  /** The two feeds of the stream-stream twins (j2s/j1s/j1so/j1sf), the
+    * two-sided [[streamTwinSource]]: each side ships as ONE
+    * [[fileStream]] batch with a [[markerLike]] row riding in it, both
+    * markers at one far-future time past the latest `leftTime`/`rightTime`
+    * of either side, so the shared watermark seals every real row.
+    * Returns (root, left stream, right stream) for [[runStreamTwin]].
+    */
+  private def streamTwinPair(s: SparkSession, tag: String,
+      left: DataFrame, leftTime: String,
+      right: DataFrame, rightTime: String): (String, DataFrame, DataFrame) = {
+    val maxT = left.select(max(col(leftTime)).as("m")).unionAll(
+      right.select(max(col(rightTime)).as("m"))).agg(max(col("m")))
+      .head.getTimestamp(0)
+    val far = new java.sql.Timestamp(maxT.getTime + 48L * 3600 * 1000)
+    val root = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    def feed(sub: String, df: DataFrame) =
+      fileStream(s, root, sub, Seq(df.unionByName(markerLike(df, far))))
+    (root, feed("left", left), feed("right", right))
   }
 
   /** Run a streaming twin to completion and return its sealed rows: the

@@ -10,9 +10,11 @@ import graft.sources.{LakeReader, LakeWriter}
 
 /** The reference's six pipeline compositions (SURVEY.md §3), re-expressed
   * as lazy single-plan jobs: the reference re-scans its CSVs once per
-  * action (count/show/write — §3.1 note); here each job builds ONE plan,
-  * executes it with the write, and the only extra action is an optional
-  * row-count on the written result.
+  * action (count/show/write — §3.1 note); here each job builds ONE plan
+  * and executes it with the write. Nothing else starts a Spark job: the
+  * CSV header comes from one line read on the driver
+  * ([[LakeReader.csvFolderRaw]]) and the lake row count returned from
+  * the written files' parquet footers ([[LakeReader.parquetRows]]).
   *
   * Every job: guard (S3) → folder scan (S1) → snake_case rename (P1) →
   * casts (F1-F5, null-on-fail) → na.drop (P3) → [dedup (P4)] → parquet
@@ -55,7 +57,7 @@ object Jobs {
       else cleaned
     LakeWriter.append(toAppend, lakePath)
     LakeWriter.archiveFiles(spark, consumed, archiveDir)
-    Some(spark.read.parquet(lakePath).count())
+    Some(LakeReader.parquetRows(spark, lakePath, toAppend.schema))
   }
 
   private def lakeExists(spark: SparkSession, path: String): Boolean = {
@@ -101,7 +103,7 @@ object Jobs {
     LakeWriter.append(result, lakePath)
     LakeWriter.archiveFiles(spark, fmFiles, fmArchiveDir)
     LakeWriter.archiveFiles(spark, loadFiles, loadArchiveDir)
-    Some(spark.read.parquet(lakePath).count())
+    Some(LakeReader.parquetRows(spark, lakePath, result.schema))
   }
 
   /** SPP ⋈interval weather merge — `test_pyspark_merge_spp_weather.py`:
@@ -164,7 +166,7 @@ object Jobs {
     LakeWriter.append(result, lakePath)
     LakeWriter.archiveFiles(spark, sppFiles, sppArchiveDir)
     LakeWriter.archiveFiles(spark, weatherFiles, weatherArchiveDir)
-    Some(spark.read.parquet(lakePath).count())
+    Some(LakeReader.parquetRows(spark, lakePath, result.schema))
   }
 
   /** Historical-weather union — `mergeHistoricalWeather.py`: explicit
@@ -185,9 +187,8 @@ object Jobs {
     // are scanned ONCE regardless of sink count (the reference re-scans
     // per action, §3.1)
     LakeWriter.overwrite(cleaned, lakePath)
-    val written = spark.read.parquet(lakePath)
-    csvOutDir.foreach(LakeWriter.csvOverwrite(written, _))
-    Some(written.count())
+    csvOutDir.foreach(LakeWriter.csvOverwrite(spark.read.parquet(lakePath), _))
+    Some(LakeReader.parquetRows(spark, lakePath, cleaned.schema))
   }
 
   /** Shared cleaning tail: rename → cast (null-on-fail) → na.drop → dedup. */

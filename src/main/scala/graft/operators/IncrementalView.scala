@@ -557,11 +557,11 @@ object IncrementalView {
     * alternative was drop+recreate). The folded state is recomputed in
     * full from the source snapshot AS OF the view's stamped source
     * version, enriched at the new dim pin, and swapped in with ONE
-    * overwrite commit — by construction the result is identical to a
-    * from-scratch [[create]] at (source@stampedVersion,
-    * dim@newVersion), and every subsequent [[refresh]] /
-    * [[startMaintain]] delta joins the new pin (specOf re-reads the
-    * stamped properties). Defaults to the dimension's latest version.
+    * overwrite commit that also stamps the new dim version — by
+    * construction the result is identical to a from-scratch [[create]]
+    * at (source@stampedVersion, dim@newVersion), and every subsequent
+    * [[refresh]] / [[startMaintain]] delta joins the new pin (specOf
+    * re-reads the stamped properties). Defaults to the dimension's latest version.
     * Returns the version rebased onto (a no-op when already there).
     *
     * Scale shape: one source-snapshot scan + the dim join + one
@@ -584,9 +584,10 @@ object IncrementalView {
       parseSpecs(spec.approx), parseSpecs(spec.quantile),
       spec.quantileEps, parseSpecs(spec.theta), spec.thetaK,
       spec.scale, lit(1L))
-    VersionedTable.overwrite(spark, state, view)
-    VersionedTable.alterProperties(spark, view,
-      Map(DimVersionProperty -> newVer.toString))
+    // state and dim stamp in ONE commit: a crash between two commits
+    // would leave state folded at the new pin under the old stamp
+    VersionedTable.overwrite(spark, state, view,
+      setProps = Map(DimVersionProperty -> newVer.toString))
     newVer
   }
 

@@ -1,7 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFileLinesReader}
 import org.apache.spark.sql.types.StructType
 
 /** Source-side operators (SURVEY.md §2.1, S1-S3).
@@ -17,9 +22,44 @@ object LakeReader {
 
   /** S1 — CSV folder scan, header=true, all columns string (faithful form).
     * Ref `...load_latest...py:37`. One DataFrame over every file in `dir`.
+    *
+    * The header is resolved on the driver, without the one-row Spark job
+    * of `header=true` inference: [[headerLine]] reads the line that
+    * inference would take, Spark's CSV reader turns that one line (a
+    * local Dataset, no job) into the schema with its own quoting and
+    * duplicate/empty-name rules, and the folder is scanned under it. A
+    * folder with no non-blank line is left to Spark's inference.
     */
   def csvFolderRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("header", "true").csv(dir)
+    headerLine(spark, dir) match {
+      case Some(line) =>
+        val header = spark.read.option("header", "true")
+          .csv(spark.createDataset(Seq(line))(Encoders.STRING)).schema
+        spark.read.option("header", "true").schema(header).csv(dir)
+      case None => spark.read.option("header", "true").csv(dir)
+    }
+
+  /** The line Spark's CSV header inference takes from `dir`: the first
+    * line with a character other than a space, reading the file splits
+    * in the order Spark's own text scan of the folder plans them (file
+    * index order, largest split first), each through the reader that
+    * scan uses (its line-ending and byte-order-mark rules). Only the
+    * splits before the line are opened, usually one line of one file.
+    */
+  private def headerLine(spark: SparkSession, dir: String): Option[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    spark.read.text(dir).queryExecution.sparkPlan
+      .collectFirst { case s: FileSourceScanExec => s }.iterator
+      .flatMap(_.inputRDD.partitions)
+      .flatMap { case p: FilePartition => p.files }
+      .map { f =>
+        val lines = new HadoopFileLinesReader(f, conf)
+        try lines.find(t => (0 until t.getLength).exists(t.getBytes()(_) != ' '))
+          .map(_.toString)
+        finally lines.close()
+      }
+      .collectFirst { case Some(line) => line }
+  }
 
   /** S1 (engine upgrade) — schema'd CSV scan: no inference pass, columns
     * arrive typed; malformed fields null out (PERMISSIVE) which preserves
@@ -100,6 +140,29 @@ object LakeReader {
     */
   def evolvedTable(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(dir)
+
+  /** Rows of the parquet folder at `path`: the sum of the footer row
+    * counts of the files Spark's file index lists there — what
+    * `spark.read.parquet(path).count()` returns, read on the driver
+    * instead of by a schema-inference job and a count job. The folder is
+    * listed under `schema` (the rows' known schema) so no inference runs;
+    * empty files hold no rows, as Spark's scan skips them.
+    */
+  def parquetRows(spark: SparkSession, path: String, schema: StructType): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    spark.read.schema(schema).parquet(path).inputFiles.iterator
+      .map(f => fileRows(conf, new Path(new java.net.URI(f)))).sum
+  }
+
+  /** Rows of one parquet file, from its footer (0 for an empty file). */
+  private[graft] def fileRows(conf: Configuration, file: Path): Long = {
+    val in = HadoopInputFile.fromPath(file, conf)
+    if (in.getLength == 0) 0L
+    else {
+      val r = ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }
+  }
 
   /** S3 — source-emptiness guard, ref `check_folder_has_files`
     * (`...load_latest...py:27-34`). The reference's version only guards the

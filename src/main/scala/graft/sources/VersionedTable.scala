@@ -1251,6 +1251,22 @@ object VersionedTable {
     Set(CdcProperty, ClusterByProperty, BucketByProperty).contains(k) ||
       k.startsWith(ConstraintPrefix)
 
+  /** `set` may ride a data commit of `op`: well-formed, and none of the
+    * properties [[alterProperties]] validates.
+    */
+  private def requirePlainProps(set: Map[String, String], op: String): Unit = {
+    requirePropChange(set, Nil)
+    set.keys.foreach(k => require(!validatedProp(k),
+      s"$op cannot set $k — use alterProperties, which validates it"))
+  }
+
+  /** The property lines of a data commit over `base` that sets `set`
+    * (None: carry `base`'s unchanged).
+    */
+  private def withProps(base: Seq[String],
+      set: Map[String, String]): Option[Map[String, String]] =
+    if (set.isEmpty) None else Some(propMap(base) ++ set)
+
   /** Create an empty table with a declared schema: commit v1 with no
     * data files. The catalog / CTAS primitive — a table EXISTS once (and
     * only once) this manifest lands, atomically. Throws if any version
@@ -2012,10 +2028,10 @@ object VersionedTable {
     val added = changedFilesBetween(spark, table, fromVersion, toVersion,
       ignoreRowLevel)
     // a schema-evolved table's increments span files with different
-    // physical columns; reading them all under the declared (latest
-    // retained in range) schema — an append-only superset — keeps the
-    // unioned feed consistent, old batches null-filled
-    val declared = schema.orElse(tableSchema(spark, table))
+    // physical columns; reading them all under the schema declared at
+    // the window's end — an append-only superset of every schema in
+    // it — keeps the unioned feed consistent, old batches null-filled
+    val declared = schema.orElse(schemaAtEnd(spark, table, toVersion))
     if (added.isEmpty)
       emptyFeed(spark, table, declared,
         s"no changes in ($fromVersion, $toVersion] and no schema available " +
@@ -2026,6 +2042,17 @@ object VersionedTable {
         readFiles(spark, table, files, declared)
           .withColumn("_commit_version", lit(v))
       }.reduce(_ unionByName _)
+  }
+
+  /** The declared schema a feed window ending at `toVersion` reads
+    * under: the one declared at that version (the latest when the window
+    * runs past it). A later REPLACE TABLE's schema, whose field ids the
+    * window's files do not carry, never applies.
+    */
+  private def schemaAtEnd(spark: SparkSession, table: String,
+      toVersion: Long): Option[org.apache.spark.sql.types.StructType] = {
+    val (v, lines) = latestRaw(spark, table)
+    if (toVersion >= v) schemaLine(lines) else tableSchema(spark, table, toVersion)
   }
 
   /** The zero-row frame of a feed with no changes: under `declared`, or
@@ -2128,7 +2155,7 @@ object VersionedTable {
       : DataFrame = {
     import org.apache.spark.sql.functions.lit
     val commits = logCommits(spark, table, fromVersion, toVersion, Some("CDF"))
-    val declared = schema.orElse(tableSchema(spark, table))
+    val declared = schema.orElse(schemaAtEnd(spark, table, toVersion))
     def tag(df: DataFrame, tpe: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(tpe))
         .withColumn("_commit_version", lit(v))
@@ -2757,9 +2784,7 @@ object VersionedTable {
       upserts: DataFrame, deleteKeys: DataFrame,
       txn: Option[(String, Long)] = None,
       setProps: Map[String, String] = Map.empty): Long = {
-    requirePropChange(setProps, Nil)
-    setProps.keys.foreach(k => require(!validatedProp(k),
-      s"merge cannot set $k — use alterProperties, which validates it"))
+    requirePlainProps(setProps, "merge")
     keyedMerge(spark, table, key, upserts, Some(deleteKeys), txn, setProps,
       "merge")
   }
@@ -2797,6 +2822,9 @@ object VersionedTable {
     drop.foreach(n => fs(spark, table).delete(new Path(table, n), false))
     staged.filterNot(drop.contains)
   }
+
+  /** [[keyedMerge]]'s per-row flag: a merge key hits the affected row. */
+  private val HitCol = "__vt_hit"
 
   /** The one body of [[upsert]] and [[merge]] (`deletes0` None: upsert,
     * whose commits keep their `upsert` op marker).
@@ -2868,82 +2896,87 @@ object VersionedTable {
           // pending merge-on-read layer may hide rows of the affected
           // files, and a rewrite that copied them forward would give
           // them a fresh name/higher file version that escapes both
-          // layer types — silently resurrecting deleted rows. ONE lazy
-          // frame shared by the survivor rewrite and the CDC staging
-          // (resolution work per snapshot version is cached, but the
-          // plan/setup cost isn't free either).
-          lazy val existing = snapRead(spark, table, affected, lines)
-          // ONE write per attempt: the affected files' survivors together
-          // with the upsert rows
-          val added =
-            if (affected.isEmpty)
-              if (hasUpserts) stage(spark, upserts, table, cluster = true)
-              else Nil
-            else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
-              existing.join(allKeys, Seq(key), "left_anti")
-                .unionByName(upserts, allowMissingColumns = true),
-              schemaLine(lines)), table, cluster = true),
-              others = files.filterNot(affected.contains))
-          // a pure insert needs no CDC file (the feed reads the added
-          // files as inserts), and neither does a merge that touched no
-          // file and added no row
-          val cdc =
-            if (bounds.isEmpty || (affected.isEmpty && !hasUpserts)) Nil
-            else stageCdcIfEnabled(spark, table, lines, {
-              // write-time rows give EXACT pre/post pairing (the
-              // derivation fallback can only say delete+insert):
-              // replaced rows are update_preimage, their new versions
-              // update_postimage, merged-away rows delete, unmatched
-              // upsert rows plain inserts
-              def tag(df: DataFrame, t: String) =
-                df.withColumn(ChangeTypeCol, lit(t))
-              if (affected.isEmpty) tag(upserts, "insert")
-              else {
-                val pre = existing.join(allKeys, Seq(key), "left_semi")
-                val preKeys = pre.select(col(key))
-                val preimages =
-                  if (deletes0.isEmpty) tag(pre, "update_preimage")
-                  else tag(pre.join(updKeys, Seq(key), "left_semi"),
-                      "update_preimage")
-                    .unionByName(tag(pre.join(updKeys, Seq(key),
-                      "left_anti"), "delete"))
-                preimages
-                  .unionByName(tag(upserts.join(preKeys, Seq(key),
-                    "left_semi"), "update_postimage"))
-                  .unionByName(tag(upserts.join(preKeys, Seq(key),
-                    "left_anti"), "insert"))
-              }
-            })
-          // WRITE-WRITE conflict detection (Delta's ConcurrentAppend
-          // rule): a file appended between our snapshot and our commit
-          // may hold rows with keys this merge replaces or deletes —
-          // rebasing over it would leave them live. Rebase only appends
-          // whose footer key range is DISJOINT from the merged range;
-          // otherwise retry from the new snapshot (the re-run anti-joins
-          // them too). The rewritten files escape any delete layer
-          // committed AFTER our snapshot read (fresh names, higher file
-          // version), so a changed layer forces a retry like a
-          // conflicting append. Sustained intersecting appends
-          // legitimately starve an optimistic merge — Delta's
-          // ConcurrentAppendException: the caller backs off. Without a
-          // key there is nothing to conflict with: rebase.
-          val rule = bounds match {
-            case None => Rebase
-            case Some((lo, hi)) => Recheck { (_, latest) =>
-              val files2 = dataFiles(latest)
-              !files2.filterNot(files.contains).exists(n => fileIntersects(
-                conf, new Path(table, n), key, lo, hi, isString)) &&
-                affected.forall(files2.contains) &&
-                deleteLayer(latest) == deleteLayer(lines)
-            }
+          // layer types — silently resurrecting deleted rows. Each
+          // affected row is classified ONCE per attempt by whether a
+          // merge key hits it (an existence join: no row is duplicated
+          // and the scan's partitioning, so the rewritten file layout,
+          // is kept). The survivor rewrite and the CDC staging both read
+          // this one frame; with the change feed on it is persisted, so
+          // the affected files are scanned and their layers applied once.
+          val withCdc = bounds.nonEmpty && affected.nonEmpty &&
+            cdcEnabled(lines)
+          lazy val classified = {
+            val c = snapRead(spark, table, affected, lines)
+              .withColumn(HitCol, col(key).isin(allKeys))
+            if (withCdc) c.persist() else c
           }
-          Commit(rule,
-            base => metaLines(base, opName, txn = txn,
-                newProps = if (setProps.isEmpty) None
-                  else Some(propMap(base) ++ setProps)) ++
-              cdc.map(CdcPrefix + _) ++
-              dataFiles(base).filterNot(affected.contains) ++ added,
-            staged = added ++ cdc)
+          try {
+            // ONE write per attempt: the affected files' survivors together
+            // with the upsert rows
+            val added =
+              if (affected.isEmpty)
+                if (hasUpserts) stage(spark, upserts, table, cluster = true)
+                else Nil
+              else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
+                classified.where(!col(HitCol)).drop(HitCol)
+                  .unionByName(upserts, allowMissingColumns = true),
+                schemaLine(lines)), table, cluster = true),
+                others = files.filterNot(affected.contains))
+            // a pure insert needs no CDC file (the feed reads the added
+            // files as inserts), and neither does a merge that touched no
+            // file and added no row
+            val cdc =
+              if (bounds.isEmpty || (affected.isEmpty && !hasUpserts)) Nil
+              else stageCdcIfEnabled(spark, table, lines, {
+                // write-time rows give EXACT pre/post pairing (the
+                // derivation fallback can only say delete+insert): hit
+                // rows are update_preimage (delete when only a delete
+                // key hit them), upsert rows whose key hit a row are
+                // update_postimage, the other upsert rows plain inserts
+                if (affected.isEmpty)
+                  upserts.withColumn(ChangeTypeCol, lit("insert"))
+                else {
+                  val pre = classified.where(col(HitCol)).drop(HitCol)
+                  val preType =
+                    if (deletes0.isEmpty) lit("update_preimage")
+                    else when(col(key).isin(updKeys), "update_preimage")
+                      .otherwise("delete")
+                  pre.withColumn(ChangeTypeCol, preType)
+                    .unionByName(upserts.withColumn(ChangeTypeCol,
+                      when(col(key).isin(pre.select(col(key))),
+                        "update_postimage").otherwise("insert")))
+                }
+              })
+            // WRITE-WRITE conflict detection (Delta's ConcurrentAppend
+            // rule): a file appended between our snapshot and our commit
+            // may hold rows with keys this merge replaces or deletes —
+            // rebasing over it would leave them live. Rebase only appends
+            // whose footer key range is DISJOINT from the merged range;
+            // otherwise retry from the new snapshot (the re-run anti-joins
+            // them too). The rewritten files escape any delete layer
+            // committed AFTER our snapshot read (fresh names, higher file
+            // version), so a changed layer forces a retry like a
+            // conflicting append. Sustained intersecting appends
+            // legitimately starve an optimistic merge — Delta's
+            // ConcurrentAppendException: the caller backs off. Without a
+            // key there is nothing to conflict with: rebase.
+            val rule = bounds match {
+              case None => Rebase
+              case Some((lo, hi)) => Recheck { (_, latest) =>
+                val files2 = dataFiles(latest)
+                !files2.filterNot(files.contains).exists(n => fileIntersects(
+                  conf, new Path(table, n), key, lo, hi, isString)) &&
+                  affected.forall(files2.contains) &&
+                  deleteLayer(latest) == deleteLayer(lines)
+              }
+            }
+            Commit(rule,
+              base => metaLines(base, opName, txn = txn,
+                  newProps = withProps(base, setProps)) ++
+                cdc.map(CdcPrefix + _) ++
+                dataFiles(base).filterNot(affected.contains) ++ added,
+              staged = added ++ cdc)
+          } finally if (withCdc) { classified.unpersist(); () }
         }
       }
     } finally { tagged.unpersist(); () }
@@ -3054,10 +3087,14 @@ object VersionedTable {
     * time-travel until vacuum). Marked `#op overwrite`: like upsert and
     * delete, an appended-rows changefeed cannot represent it and fails
     * loudly unless the consumer opted into skipping row-level commits.
+    * `setProps` are stamped in the same commit — plain properties only,
+    * as in [[merge]].
     */
   def overwrite(spark: SparkSession, df: DataFrame, table: String,
       evolveSchema: Boolean = false,
-      sortedBy: Seq[String] = Nil): Long = {
+      sortedBy: Seq[String] = Nil,
+      setProps: Map[String, String] = Map.empty): Long = {
+    requirePlainProps(setProps, "overwrite")
     val lines0 = latestRaw(spark, table)._2
     val (aligned, extras) = schemaLine(lines0) match {
       case Some(sc) => alignToSchema(df, sc, evolveSchema, table)
@@ -3068,7 +3105,7 @@ object VersionedTable {
     occCommit(spark, table, "overwrite", owned = staged) { (_, _) =>
       Commit(Rebase, base =>
         metaLines(base, "overwrite", schemaLine(base).flatMap(widen(_, extras)),
-          dropDeletes = true) ++ staged)
+          dropDeletes = true, newProps = withProps(base, setProps)) ++ staged)
     }
   }
 
@@ -3334,17 +3371,28 @@ object VersionedTable {
     keyCols.foreach(c => require(!c.exists(_.isWhitespace),
       s"key column name '$c' must not contain whitespace (manifest format)"))
     txn.foreach { case (w, _) => requireWriterId(w) }
-    val snapCols = read(spark, table).columns.toSet
+    val (v0, lines0) = latestRaw(spark, table)
+    // the declared schema names the columns; only an undeclared table
+    // needs a (delete-aware) read plan to list them
+    val snapCols = schemaLine(lines0).map(_.fieldNames.toSet)
+      .getOrElse(read(spark, table).columns.toSet)
     keyCols.foreach(c => require(snapCols.contains(c),
       s"delete key column '$c' is not a column of $table"))
     // replay check BEFORE staging anything
-    val (v0, lines0) = latestRaw(spark, table)
     if (committed(lines0, txn)) return v0
     val clean = keys.na.drop("any", keyCols).dropDuplicates(keyCols)
-    val noKeys = clean.isEmpty
+    // the staged key files answer both later questions without
+    // re-deriving `clean` (and its dedup shuffle): whether there is any
+    // key (their footers) and which rows the layer hides (a semi-join
+    // against them)
+    val staged0 = stage(spark, clean, table, prefix = "del-")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val noKeys = staged0.forall(n =>
+      LakeReader.fileRows(conf, new Path(table, n)) == 0)
+    if (noKeys)
+      staged0.foreach(n => fs(spark, table).delete(new Path(table, n), false))
     if (noKeys && txn.isEmpty) return latest(spark, table)._1
-    val staged =
-      if (noKeys) Nil else stage(spark, clean, table, prefix = "del-")
+    val staged = if (noKeys) Nil else staged0
     occCommit(spark, table, "deleteByKeys", owned = staged) { (v, lines) =>
       // replay re-check per attempt (racing instance of the same
       // restarted query)
@@ -3357,7 +3405,8 @@ object VersionedTable {
           if (noKeys) Nil
           else stageCdcIfEnabled(spark, table, lines,
             snapRead(spark, table, dataFiles(lines), lines)
-              .join(clean, keyCols, "left_semi")
+              .join(readFiles(spark, table, staged, Some(clean.schema)),
+                keyCols, "left_semi")
               .withColumn(ChangeTypeCol,
                 org.apache.spark.sql.functions.lit("delete")))
         Commit(Rebase, base =>

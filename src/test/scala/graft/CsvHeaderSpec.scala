@@ -1,14 +1,19 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.sources.LakeReader
 
 /** `LakeReader.csvFolderRaw` resolves a folder's header the way Spark's
   * own `header=true` inference does: same schema, same rows, on folders
   * crafted around the rules of that inference (which file's line wins,
-  * what counts as blank, how names are made safe).
+  * what counts as blank, how names are made safe). Neither the header
+  * nor `LakeReader.parquetRows` starts a Spark job.
   */
 class CsvHeaderSpec extends SparkTestBase {
 
@@ -67,5 +72,46 @@ class CsvHeaderSpec extends SparkTestBase {
     test(s"csvFolderRaw header matches Spark's inference: $name") {
       assertParity(folder(files: _*))
     }
+  }
+
+  /** Spark jobs started while `body` runs. A sentinel job run after it
+    * marks where the listener's events for `body` end.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new AtomicInteger
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("graft.spec.sentinel") == "1")) sentinel.countDown()
+        else { seen.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.spec.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.sentinel", null)
+      assert(sentinel.await(60, TimeUnit.SECONDS))
+      seen.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("header resolution and the footer row count start no Spark job") {
+    val dir = folder("a.csv" -> "k,v\n1,2\n3,4\n", "b.csv" -> "k,v\n5,6\n")
+    var schema: org.apache.spark.sql.types.StructType = null
+    assert(jobsStartedBy {
+      schema = LakeReader.csvFolderRaw(spark, dir).schema
+    } === 0)
+    assert(schema.fieldNames.toSeq === Seq("k", "v"))
+    val lake = Files.createTempDirectory("graft_rows").resolve("lake").toString
+    LakeReader.csvFolderRaw(spark, dir).write.parquet(lake)
+    spark.read.parquet(lake).repartition(2).write.mode("append").parquet(lake)
+    var rows = -1L
+    assert(jobsStartedBy {
+      rows = LakeReader.parquetRows(spark, lake, schema)
+    } === 0)
+    assert(rows === 6 && rows === spark.read.parquet(lake).count())
   }
 }

@@ -861,6 +861,36 @@ class IncrementalViewSpec extends SparkTestBase {
       ("Zeta", 1L, 3.0)))
   }
 
+  test("rebaseDim lands the refolded state and the dim stamp in one " +
+      "view commit") {
+    val root = tmp()
+    val src = mkSource(root)
+    val dim = root + "/dim"
+    VersionedTable.create(spark, dim, StructType(Seq(
+      StructField("dk", StringType), StructField("dname", StringType))))
+    VersionedTable.append(spark,
+      Seq(("a", "Alpha"), ("b", "Beta")).toDF("dk", "dname"), dim)
+    VersionedTable.append(spark,
+      Seq((1L, "a", 10.0), (2L, "b", 5.0)).toDF("id", "g", "v"), src)
+    val view = root + "/mv"
+    IncrementalView.create(spark, src, view, Seq("dname"), Seq("v"),
+      dim = Some(dim), dimJoin = Seq(("g", "dk")))
+    VersionedTable.upsert(spark,
+      Seq(("a", "Alpha2")).toDF("dk", "dname"), dim, "dk")
+    val before = VersionedTable.latest(spark, view)._1
+    val newVer = IncrementalView.rebaseDim(spark, view)
+    assert(VersionedTable.latest(spark, view)._1 === before + 1)
+    val last = VersionedTable.history(spark, view)
+      .where($"version" === before + 1)
+      .select("op", "files_added").as[(String, Int)].collect().toSeq
+    assert(last.size === 1 && last.head._1 === "overwrite" &&
+      last.head._2 > 0)
+    assert(VersionedTable.tableProperties(spark, view)(
+      IncrementalView.DimVersionProperty) === newVer.toString)
+    assert(IncrementalView.read(spark, view).select("dname")
+      .as[String].collect().toSet === Set("Alpha2", "Beta"))
+  }
+
   test("rebaseDim refuses a dimension-less view") {
     val root = tmp()
     val src = mkSource(root)

@@ -201,6 +201,22 @@ class LogReaderParitySpec extends SparkTestBase {
     out.toSeq
   }
 
+  test("a feed window ending before a replaceTable reads under the " +
+      "schema declared at its end version") {
+    val t = Files.createTempDirectory("parity").toString + "/t"
+    VersionedTable.append(spark, kv((1L, "a"), (2L, "b")), t)             // 1
+    VersionedTable.alterProperties(spark, t,
+      Map(VersionedTable.CdcProperty -> "true"))                         // 2
+    VersionedTable.upsert(spark, kv((1L, "A")), t, "k")                   // 3
+    def windows(): Seq[String] = Seq(
+      rows(VersionedTable.readChanges(spark, t, 0L, 1L)),
+      rows(VersionedTable.readChangesCDF(spark, t, 0L, 1L)),
+      rows(VersionedTable.readChangesCDF(spark, t, 1L, 3L)))
+    val before = windows()
+    replaceA(t)                                                          // 4
+    assert(windows() === before)
+  }
+
   test("every commit-log reader's output and errors match the pinned " +
       "transcript over every window of three table histories") {
     def table(build: String => Unit): String = {
