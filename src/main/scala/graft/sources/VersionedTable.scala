@@ -2859,10 +2859,11 @@ object VersionedTable {
       df.select((if (isString) col(key) else col(key).cast(LongType)).as(key),
         lit(isUpsert).as("__vt_up"))
     // the key projection of both sides drives the one bounds/count job
-    // AND every attempt's anti-join — materialize it ONCE instead of
-    // re-deriving the inputs (often expensive upstream frames) per
-    // consumer. NOT distinct: left_anti ignores duplicate build keys,
-    // and dropping the distinct saves a whole shuffle per merge. Upsert
+    // AND every attempt's row classification — materialize it ONCE
+    // instead of re-deriving the inputs (often expensive upstream
+    // frames) per consumer. NOT distinct: an existence join ignores
+    // duplicate build keys, and dropping the distinct saves a whole
+    // shuffle per merge. Upsert
     // rows with null keys stay in (they count as rows to insert).
     val tagged = deletes0.foldLeft(norm(upserts, isUpsert = true)) {
       (u, d) => u.unionByName(norm(d, isUpsert = false)

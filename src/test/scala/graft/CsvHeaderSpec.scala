@@ -37,15 +37,15 @@ class CsvHeaderSpec extends SparkTestBase {
 
   private val cases: Seq[(String, Seq[(String, String)])] = Seq(
     "unequal sizes, different headers" -> Seq(
-      "small.csv" -> "a,b\n1,2\n",
-      "large.csv" -> "x,y,z\n1,2,3\n4,5,6\n7,8,9\n",
-      "mid.csv" -> "p\n1\n2\n"),
+      "a_small.csv" -> "a,b\n1,2\n",
+      "z_large.csv" -> "x,y,z\n1,2,3\n4,5,6\n7,8,9\n",
+      "m_mid.csv" -> "p\n1\n2\n"),
     "leading blank lines" -> Seq(
-      "blank_first.csv" -> "\n\n   \nk,v\n1,2\n3,4\n",
-      "other.csv" -> "m,n\n5,6\n"),
+      "z_blank_first.csv" -> "\n\n   \nk,v\n1,2\n3,4\n",
+      "a_other.csv" -> "m,n\n5,6\n"),
     "byte-order mark" -> Seq(
-      "bom.csv" -> "\uFEFFid,name\n1,x\n2,y\n",
-      "plain.csv" -> "q\n3\n"),
+      "z_bom.csv" -> "\uFEFFid,name\n1,x\n2,y\n",
+      "a_plain.csv" -> "q\n3\n"),
     "CRLF line endings" -> Seq(
       "crlf.csv" -> "a,b\r\nc,d\r\ne,f\r\n",
       "lf.csv" -> "g\nh\n"),
@@ -57,8 +57,9 @@ class CsvHeaderSpec extends SparkTestBase {
       "empty.csv" -> "",
       "data.csv" -> "u,v\n1,2\n"),
     "largest file all blank" -> Seq(
-      "blank.csv" -> "\n\n  \n\n\n\n\n\n\n\n\n\n",
-      "real.csv" -> "r,s\n1,2\n"),
+      "m_blank.csv" -> "\n\n  \n\n\n\n\n\n\n\n\n\n",
+      "z_real.csv" -> "r,s\n1,2\n",
+      "a_small.csv" -> "t\n1\n"),
     "equal sizes, different headers" -> Seq(
       "one.csv" -> "a,b\n1,2\n",
       "two.csv" -> "c,d\n3,4\n",
