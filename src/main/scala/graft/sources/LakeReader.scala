@@ -45,6 +45,14 @@ object LakeReader {
     * index order, largest split first), each through the reader that
     * scan uses (its line-ending and byte-order-mark rules). Only the
     * splits before the line are opened, usually one line of one file.
+    *
+    * It mirrors Spark 4.1's `TextInputCSVDataSource.inferFromDataset`:
+    * `CSVUtils.filterCommentAndEmpty` (`length(trim(value)) > 0`; SQL
+    * `trim` strips spaces only, and no comment option is set here) and
+    * `take(1)` over the `TextFileFormat` scan of the folder. It leans on
+    * `FileSourceScanExec.inputRDD`, `FilePartition` and
+    * `HadoopFileLinesReader`; on a Spark upgrade re-check those and run
+    * `CsvHeaderSpec`, which pins the result to Spark's own inference.
     */
   private def headerLine(spark: SparkSession, dir: String): Option[String] = {
     val conf = spark.sessionState.newHadoopConf()

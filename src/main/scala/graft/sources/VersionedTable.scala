@@ -2823,9 +2823,6 @@ object VersionedTable {
     staged.filterNot(drop.contains)
   }
 
-  /** [[keyedMerge]]'s per-row flag: a merge key hits the affected row. */
-  private val HitCol = "__vt_hit"
-
   /** The one body of [[upsert]] and [[merge]] (`deletes0` None: upsert,
     * whose commits keep their `upsert` op marker).
     */
@@ -2859,11 +2856,10 @@ object VersionedTable {
       df.select((if (isString) col(key) else col(key).cast(LongType)).as(key),
         lit(isUpsert).as("__vt_up"))
     // the key projection of both sides drives the one bounds/count job
-    // AND every attempt's row classification — materialize it ONCE
-    // instead of re-deriving the inputs (often expensive upstream
-    // frames) per consumer. NOT distinct: an existence join ignores
-    // duplicate build keys, and dropping the distinct saves a whole
-    // shuffle per merge. Upsert
+    // AND every attempt's anti-join — materialize it ONCE instead of
+    // re-deriving the inputs (often expensive upstream frames) per
+    // consumer. NOT distinct: left_anti ignores duplicate build keys,
+    // and dropping the distinct saves a whole shuffle per merge. Upsert
     // rows with null keys stay in (they count as rows to insert).
     val tagged = deletes0.foldLeft(norm(upserts, isUpsert = true)) {
       (u, d) => u.unionByName(norm(d, isUpsert = false)
@@ -2897,87 +2893,81 @@ object VersionedTable {
           // pending merge-on-read layer may hide rows of the affected
           // files, and a rewrite that copied them forward would give
           // them a fresh name/higher file version that escapes both
-          // layer types — silently resurrecting deleted rows. Each
-          // affected row is classified ONCE per attempt by whether a
-          // merge key hits it (an existence join: no row is duplicated
-          // and the scan's partitioning, so the rewritten file layout,
-          // is kept). The survivor rewrite and the CDC staging both read
-          // this one frame; with the change feed on it is persisted, so
-          // the affected files are scanned and their layers applied once.
-          val withCdc = bounds.nonEmpty && affected.nonEmpty &&
-            cdcEnabled(lines)
-          lazy val classified = {
-            val c = snapRead(spark, table, affected, lines)
-              .withColumn(HitCol, col(key).isin(allKeys))
-            if (withCdc) c.persist() else c
-          }
-          try {
-            // ONE write per attempt: the affected files' survivors together
-            // with the upsert rows
-            val added =
-              if (affected.isEmpty)
-                if (hasUpserts) stage(spark, upserts, table, cluster = true)
-                else Nil
-              else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
-                classified.where(!col(HitCol)).drop(HitCol)
-                  .unionByName(upserts, allowMissingColumns = true),
-                schemaLine(lines)), table, cluster = true),
-                others = files.filterNot(affected.contains))
-            // a pure insert needs no CDC file (the feed reads the added
-            // files as inserts), and neither does a merge that touched no
-            // file and added no row
-            val cdc =
-              if (bounds.isEmpty || (affected.isEmpty && !hasUpserts)) Nil
-              else stageCdcIfEnabled(spark, table, lines, {
-                // write-time rows give EXACT pre/post pairing (the
-                // derivation fallback can only say delete+insert): hit
-                // rows are update_preimage (delete when only a delete
-                // key hit them), upsert rows whose key hit a row are
-                // update_postimage, the other upsert rows plain inserts
-                if (affected.isEmpty)
-                  upserts.withColumn(ChangeTypeCol, lit("insert"))
-                else {
-                  val pre = classified.where(col(HitCol)).drop(HitCol)
-                  val preType =
-                    if (deletes0.isEmpty) lit("update_preimage")
-                    else when(col(key).isin(updKeys), "update_preimage")
-                      .otherwise("delete")
-                  pre.withColumn(ChangeTypeCol, preType)
-                    .unionByName(upserts.withColumn(ChangeTypeCol,
-                      when(col(key).isin(pre.select(col(key))),
-                        "update_postimage").otherwise("insert")))
-                }
-              })
-            // WRITE-WRITE conflict detection (Delta's ConcurrentAppend
-            // rule): a file appended between our snapshot and our commit
-            // may hold rows with keys this merge replaces or deletes —
-            // rebasing over it would leave them live. Rebase only appends
-            // whose footer key range is DISJOINT from the merged range;
-            // otherwise retry from the new snapshot (the re-run anti-joins
-            // them too). The rewritten files escape any delete layer
-            // committed AFTER our snapshot read (fresh names, higher file
-            // version), so a changed layer forces a retry like a
-            // conflicting append. Sustained intersecting appends
-            // legitimately starve an optimistic merge — Delta's
-            // ConcurrentAppendException: the caller backs off. Without a
-            // key there is nothing to conflict with: rebase.
-            val rule = bounds match {
-              case None => Rebase
-              case Some((lo, hi)) => Recheck { (_, latest) =>
-                val files2 = dataFiles(latest)
-                !files2.filterNot(files.contains).exists(n => fileIntersects(
-                  conf, new Path(table, n), key, lo, hi, isString)) &&
-                  affected.forall(files2.contains) &&
-                  deleteLayer(latest) == deleteLayer(lines)
+          // layer types — silently resurrecting deleted rows. ONE lazy
+          // frame shared by the survivor rewrite and the CDC staging
+          // (resolution work per snapshot version is cached, but the
+          // plan/setup cost isn't free either).
+          lazy val existing = snapRead(spark, table, affected, lines)
+          // ONE write per attempt: the affected files' survivors together
+          // with the upsert rows
+          val added =
+            if (affected.isEmpty)
+              if (hasUpserts) stage(spark, upserts, table, cluster = true)
+              else Nil
+            else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
+              existing.join(allKeys, Seq(key), "left_anti")
+                .unionByName(upserts, allowMissingColumns = true),
+              schemaLine(lines)), table, cluster = true),
+              others = files.filterNot(affected.contains))
+          // a pure insert needs no CDC file (the feed reads the added
+          // files as inserts), and neither does a merge that touched no
+          // file and added no row
+          val cdc =
+            if (bounds.isEmpty || (affected.isEmpty && !hasUpserts)) Nil
+            else stageCdcIfEnabled(spark, table, lines, {
+              // write-time rows give EXACT pre/post pairing (the
+              // derivation fallback can only say delete+insert):
+              // replaced rows are update_preimage, their new versions
+              // update_postimage, merged-away rows delete, unmatched
+              // upsert rows plain inserts
+              def tag(df: DataFrame, t: String) =
+                df.withColumn(ChangeTypeCol, lit(t))
+              if (affected.isEmpty) tag(upserts, "insert")
+              else {
+                val pre = existing.join(allKeys, Seq(key), "left_semi")
+                val preKeys = pre.select(col(key))
+                val preimages =
+                  if (deletes0.isEmpty) tag(pre, "update_preimage")
+                  else tag(pre.join(updKeys, Seq(key), "left_semi"),
+                      "update_preimage")
+                    .unionByName(tag(pre.join(updKeys, Seq(key),
+                      "left_anti"), "delete"))
+                preimages
+                  .unionByName(tag(upserts.join(preKeys, Seq(key),
+                    "left_semi"), "update_postimage"))
+                  .unionByName(tag(upserts.join(preKeys, Seq(key),
+                    "left_anti"), "insert"))
               }
+            })
+          // WRITE-WRITE conflict detection (Delta's ConcurrentAppend
+          // rule): a file appended between our snapshot and our commit
+          // may hold rows with keys this merge replaces or deletes —
+          // rebasing over it would leave them live. Rebase only appends
+          // whose footer key range is DISJOINT from the merged range;
+          // otherwise retry from the new snapshot (the re-run anti-joins
+          // them too). The rewritten files escape any delete layer
+          // committed AFTER our snapshot read (fresh names, higher file
+          // version), so a changed layer forces a retry like a
+          // conflicting append. Sustained intersecting appends
+          // legitimately starve an optimistic merge — Delta's
+          // ConcurrentAppendException: the caller backs off. Without a
+          // key there is nothing to conflict with: rebase.
+          val rule = bounds match {
+            case None => Rebase
+            case Some((lo, hi)) => Recheck { (_, latest) =>
+              val files2 = dataFiles(latest)
+              !files2.filterNot(files.contains).exists(n => fileIntersects(
+                conf, new Path(table, n), key, lo, hi, isString)) &&
+                affected.forall(files2.contains) &&
+                deleteLayer(latest) == deleteLayer(lines)
             }
-            Commit(rule,
-              base => metaLines(base, opName, txn = txn,
-                  newProps = withProps(base, setProps)) ++
-                cdc.map(CdcPrefix + _) ++
-                dataFiles(base).filterNot(affected.contains) ++ added,
-              staged = added ++ cdc)
-          } finally if (withCdc) { classified.unpersist(); () }
+          }
+          Commit(rule,
+            base => metaLines(base, opName, txn = txn,
+                newProps = withProps(base, setProps)) ++
+              cdc.map(CdcPrefix + _) ++
+              dataFiles(base).filterNot(affected.contains) ++ added,
+            staged = added ++ cdc)
         }
       }
     } finally { tagged.unpersist(); () }

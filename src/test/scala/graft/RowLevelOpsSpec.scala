@@ -58,6 +58,29 @@ class RowLevelOpsSpec extends SparkTestBase {
       Seq.empty[(String, String)].toDF("k", "v"), t, "k") === v)
   }
 
+  test("upsert/merge keep a null-keyed row of a rewritten file, change feed off and on") {
+    for (cdf <- Seq(false, true); op <- Seq("upsert", "merge")) {
+      val t = Files.createTempDirectory("rl_nullk").toString + "/t"
+      // ONE file holding the null-keyed row next to the merged key, so
+      // the rewrite copies the null row forward
+      VersionedTable.append(spark, Seq[(java.lang.Long, String)](
+        (1L, "a"), (2L, "b"), (null, "n")).toDF("k", "v").coalesce(1), t)
+      if (cdf) VersionedTable.alterProperties(spark, t,
+        Map(VersionedTable.CdcProperty -> "true"))
+      val before = dataFiles(t)
+      assert(before.size === 1)
+      val up = Seq((1L, "a2")).toDF("k", "v")
+      if (op == "upsert") VersionedTable.upsert(spark, up, t, "k")
+      else VersionedTable.merge(spark, t, "k", up, Seq(2L).toDF("k"))
+      assert(!dataFiles(t).contains(before.head), s"$op (cdf=$cdf) kept the file")
+      val got = VersionedTable.read(spark, t)
+        .as[(Option[Long], String)].collect().toSet
+      val want = Set(Some(1L) -> "a2", None -> "n") ++
+        (if (op == "upsert") Set(Some(2L) -> "b") else Set.empty)
+      assert(got === want, s"$op (cdf=$cdf)")
+    }
+  }
+
   test("delete removes matching rows, rewrites only containing files") {
     val t = Files.createTempDirectory("rl_del").toString + "/t"
     VersionedTable.append(spark,
