@@ -19,6 +19,8 @@ class RowLevelOpsSpec extends SparkTestBase {
   private def dataFiles(t: String): Seq[String] =
     VersionedTable.latest(spark, t)._2
 
+  private type R = (Long, Option[String])
+
   test("upsert rewrites ONLY footer-intersecting files; others carry over") {
     val t = Files.createTempDirectory("rl_up").toString + "/t"
     // three single-file commits with disjoint key ranges
@@ -98,6 +100,79 @@ class RowLevelOpsSpec extends SparkTestBase {
     // no matches -> same version, no rewrite
     val v = VersionedTable.latest(spark, t)._1
     assert(VersionedTable.delete(spark, t, col("k") === 999L) === v)
+  }
+
+  test("delete/update/replaceWhere × change feed × pending layer: rows, versions, feed") {
+    // one file: a row the layer hides (k=1), a duplicated hit row, a
+    // miss and a row whose predicate is null
+    val base: Seq[R] = Seq(1L -> Some("a"), 2L -> Some("b"), 2L -> Some("b"),
+      3L -> Some("c"), 5L -> None)
+    val ins: Seq[R] = Seq(9L -> Some("new"))
+    // SQL three-valued `k = 1 OR v = 'b'` and `v = 'zz'`
+    val hitPred = col("k") === 1L || col("v") === "b"
+    def hits(r: R): Option[Boolean] =
+      if (r._1 == 1L) Some(true) else r._2.map(_ == "b")
+    val missPred = col("v") === "zz"
+    def misses(r: R): Option[Boolean] = r._2.map(_ == "zz")
+    def sorted(rs: Seq[(Long, Option[String], String)]) =
+      rs.sortBy(r => (r._1, r._2.getOrElse(""), r._3))
+    for (op <- Seq("delete", "update", "replaceWhere"); cdf <- Seq(false, true);
+         layer <- Seq("none", "#del", "#delpos")) {
+      val label = s"$op (cdf=$cdf, layer=$layer)"
+      val t = Files.createTempDirectory("rl_fold").toString + "/t"
+      VersionedTable.append(spark, base.toDF("k", "v").coalesce(1), t)
+      if (cdf) VersionedTable.alterProperties(spark, t,
+        Map(VersionedTable.CdcProperty -> "true"))
+      layer match {
+        case "#del" => VersionedTable.deleteByKeys(spark, t, Seq(1L).toDF("k"))
+        case "#delpos" =>
+          VersionedTable.deleteWhereMergeOnRead(spark, t, col("k") === 1L)
+        case _ =>
+      }
+      var model: Seq[R] = if (layer == "none") base else base.filterNot(_._1 == 1L)
+      def run(pred: org.apache.spark.sql.Column,
+          hit: R => Option[Boolean]): Seq[(Long, Option[String], String)] = {
+        val isHit = (r: R) => hit(r).contains(true)
+        val (next, changes) = op match {
+          case "delete" =>
+            VersionedTable.delete(spark, t, pred)
+            (model.filterNot(isHit), model.filter(isHit).map((_, "delete")))
+          case "update" =>
+            VersionedTable.update(spark, t, pred,
+              Map("v" -> concat(col("v"), lit("!"))))
+            def set(r: R): R = (r._1, r._2.map(_ + "!"))
+            (model.map(r => if (isHit(r)) set(r) else r),
+              model.filter(isHit).flatMap(r =>
+                Seq((r, "update_preimage"), (set(r), "update_postimage"))))
+          case _ =>
+            VersionedTable.replaceWhere(spark, ins.toDF("k", "v"), t, pred)
+            (model.filterNot(isHit) ++ ins,
+              model.filter(isHit).map((_, "delete")) ++ ins.map((_, "insert")))
+        }
+        model = next
+        sorted(changes.map { case ((k, v), c) => (k, v, c) })
+      }
+      def feed(v: Long) = sorted(VersionedTable.readChangesCDF(spark, t, v - 1, v)
+        .select("k", "v", "_change_type")
+        .as[(Long, Option[String], String)].collect().toSeq)
+      def snapshot =
+        VersionedTable.read(spark, t).as[(Long, Option[String])].collect().toSeq.sorted
+
+      val v0 = VersionedTable.latest(spark, t)._1
+      val missFeed = run(missPred, misses)
+      val v1 = VersionedTable.latest(spark, t)._1
+      assert(v1 - v0 === (if (op == "replaceWhere") 1L else 0L),
+        s"$label: versions added by a no-match call")
+      if (v1 > v0) assert(feed(v1) === missFeed, s"$label: no-match feed")
+      assert(snapshot === model.sorted, s"$label: no-match snapshot")
+
+      val hitFeed = run(hitPred, hits)
+      val v2 = VersionedTable.latest(spark, t)._1
+      assert(v2 === v1 + 1, s"$label: one commit")
+      assert(snapshot === model.sorted, s"$label: snapshot")
+      assert(model.contains(5L -> None), s"$label: the null-predicate row survives")
+      assert(feed(v2) === hitFeed, s"$label: feed")
+    }
   }
 
   test("upsert racing intersecting appends: snapshot-at-commit has one row per key") {
