@@ -858,8 +858,8 @@ private[sources] class GraftTableScan(path: String, dataSchema: StructType,
     // to the same shape by one plan-time job over the affected files'
     // key columns (VersionedTable.pendingEqualityDeletePositions —
     // Iceberg sequencing rule applied at the scan). Each map is bounded
-    // (loud refusal past ~5M positions → compact first), so the merged
-    // closure stays task-shippable.
+    // (loud refusal past 256 MiB of compressed bitmaps → compact first),
+    // so the merged closure stays task-shippable.
     private lazy val posDeletes: Map[String, PositionBitmap] = {
       val pos = VersionedTable.pendingPositionDeletes(spark, path, asOf)
       val eq = VersionedTable.pendingEqualityDeletePositions(spark, path, asOf)

@@ -43,7 +43,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     (raced appends' key ranges disjoint from the upsert ∪ delete key
   *     range, rewritten files live, layer unchanged).
   *   - retry — re-read; any change to the data files or the delete layer
-  *     re-runs the op: delete, update, replaceWhere, materializeFieldIds.
+  *     re-runs the op: delete, update and replaceWhere (one copy-on-write
+  *     body, rewriteWhere), materializeFieldIds.
   *   - rescan — re-read; ANY commit (even metadata) re-runs the op:
   *     restore, deleteWhereMergeOnRead (their staged diff/positions pin
   *     the exact version).
@@ -459,6 +460,10 @@ object VersionedTable {
 
   /** `_change_type` column name in CDC files / the CDF output. */
   val ChangeTypeCol = "_change_type"
+
+  /** `df` as change rows of kind `t` (`insert`, `delete`, ...). */
+  private def asChange(df: DataFrame, t: String): DataFrame =
+    df.withColumn(ChangeTypeCol, org.apache.spark.sql.functions.lit(t))
 
   /** Columns the change feed itself appends. A data schema that already
     * contains one would be silently corrupted — CDC staging's
@@ -1016,31 +1021,16 @@ object VersionedTable {
     * REUSED for different content (drop/rename/abort-and-recreate).
     */
   def invalidateCache(table: String): Unit = {
-    manifestCache.synchronized {
-      val it = manifestCache.keySet().iterator()
-      val keep = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      while (it.hasNext) { val k = it.next(); if (k._1 == table) keep += k }
-      keep.foreach(manifestCache.remove)
-    }
-    bitmapCache.synchronized {
-      val it = bitmapCache.keySet().iterator()
-      val keep =
-        scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
-      while (it.hasNext) { val k = it.next(); if (k._1 == table) keep += k }
-      keep.foreach(bitmapCache.remove)
-    }
-    statsComputeCache.synchronized {
-      val it = statsComputeCache.keySet().iterator()
-      val keep = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val k = it.next(); if (k._1 == table) keep += k }
-      keep.foreach(statsComputeCache.remove)
-    }
-    statsParsedCache.synchronized {
-      val it = statsParsedCache.keySet().iterator()
-      val keep = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      while (it.hasNext) { val k = it.next(); if (k._1 == table) keep += k }
-      keep.foreach(statsParsedCache.remove)
-    }
+    // every cache key is a tuple whose first part is the table
+    def sweep[K <: Product](cache: java.util.Map[K, _]): Unit =
+      cache.synchronized {
+        cache.keySet().removeIf((k: K) => k.productElement(0) == table)
+        ()
+      }
+    sweep(manifestCache)
+    sweep(bitmapCache)
+    sweep(statsComputeCache)
+    sweep(statsParsedCache)
   }
 
   private def readManifestRaw(f: FileSystem, table: String, v: Long): Seq[String] = {
@@ -1358,13 +1348,15 @@ object VersionedTable {
     *     are APPENDED to the declared schema and the widened schema is
     *     returned for the commit to record.
     * Returns the aligned frame and the extra fields (empty when not
-    * evolving).
+    * evolving). A table without a declared `schema` takes `df` as is.
     */
   private def alignToSchema(df: DataFrame,
-      declared: org.apache.spark.sql.types.StructType, evolve: Boolean,
+      schema: Option[org.apache.spark.sql.types.StructType], evolve: Boolean,
       table: String): (DataFrame,
         Seq[org.apache.spark.sql.types.StructField]) = {
     import org.apache.spark.sql.functions.{col, lit}
+    if (schema.isEmpty) return (df, Nil)
+    val declared = schema.get
     def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
     val byName = df.schema.fields.map(f => key(f.name) -> f).toMap
     require(byName.size == df.schema.size,
@@ -1810,11 +1802,8 @@ object VersionedTable {
     */
   def append(spark: SparkSession, df: DataFrame, table: String,
       evolveSchema: Boolean = false, sortedBy: Seq[String] = Nil): Long = {
-    val lines0 = latestRaw(spark, table)._2
-    val (aligned, extras) = schemaLine(lines0) match {
-      case Some(sc) => alignToSchema(df, sc, evolveSchema, table)
-      case None => (df, Nil)
-    }
+    val (aligned, extras) = alignToSchema(df,
+      schemaLine(latestRaw(spark, table)._2), evolveSchema, table)
     val staged = stage(spark, aligned, table, cluster = true,
       sortedBy = sortedBy)
     // writer txn watermarks carry forward; op marker is per-commit
@@ -1841,10 +1830,8 @@ object VersionedTable {
     requireWriterId(writerId)
     val (v0, lines0) = latestRaw(spark, table)
     if (committed(lines0, Some(writerId -> epoch))) return v0
-    val aligned = schemaLine(lines0) match {
-      case Some(sc) => alignToSchema(df, sc, evolve = false, table)._1
-      case None => df
-    }
+    val aligned = alignToSchema(df, schemaLine(lines0), evolve = false,
+      table)._1
     commitStagedIdempotent(spark, table,
       stage(spark, aligned, table, cluster = true), writerId, epoch)
   }
@@ -1856,14 +1843,9 @@ object VersionedTable {
     * references them.
     */
   private[sources] def stageAligned(spark: SparkSession, df: DataFrame,
-      table: String): Seq[String] = {
-    val lines0 = latestRaw(spark, table)._2
-    val aligned = schemaLine(lines0) match {
-      case Some(sc) => alignToSchema(df, sc, evolve = false, table)._1
-      case None => df
-    }
-    stage(spark, aligned, table, cluster = true)
-  }
+      table: String): Seq[String] =
+    stage(spark, alignToSchema(df, schemaLine(latestRaw(spark, table)._2),
+      evolve = false, table)._1, table, cluster = true)
 
   /** Commit files ALREADY WRITTEN into the table dir (by distributed
     * streaming writers) as an idempotent epoch append: if `writerId`
@@ -2157,8 +2139,7 @@ object VersionedTable {
     val commits = logCommits(spark, table, fromVersion, toVersion, Some("CDF"))
     val declared = schema.orElse(schemaAtEnd(spark, table, toVersion))
     def tag(df: DataFrame, tpe: String, v: Long): DataFrame =
-      df.withColumn("_change_type", lit(tpe))
-        .withColumn("_commit_version", lit(v))
+      asChange(df, tpe).withColumn("_commit_version", lit(v))
     val parts = commits.flatMap { c =>
       val v = c.version
       if (cdfSkips(c, table)) None
@@ -2210,17 +2191,8 @@ object VersionedTable {
           posDels = delPosLines(c.prevRaw))
         val post = readFilesDeleteAware(spark, table, candCur, declared,
           delLines(c.raw), keepFileCol = false, posDels = delPosLines(c.raw))
-        val preD = pre.exceptAll(post)
-        val postD = post.exceptAll(pre)
-        c.op match {
-          case Some("update") =>
-            Some(tag(preD, "update_preimage", v)
-              .unionByName(tag(postD, "update_postimage", v)))
-          case Some("delete") | Some("delete-mor") =>
-            Some(tag(preD, "delete", v))
-          case _ =>
-            Some(tag(preD, "delete", v).unionByName(tag(postD, "insert", v)))
-        }
+        Some(derivedChanges(pre, post, c.op.getOrElse(""))
+          .withColumn("_commit_version", lit(v)))
       }
     }
     if (parts.isEmpty)
@@ -2228,6 +2200,25 @@ object VersionedTable {
         s"no changes in ($fromVersion, $toVersion] and no schema " +
           s"available for empty CDF of $table — pass schema="), "insert", 0L)
     else parts.reduce(_ unionByName _)
+  }
+
+  /** One commit's row changes derived from its rows before (`pre`) and
+    * after (`post`), EXCEPT ALL both ways, labelled by the commit's `op`
+    * like write-time CDC files: `update` as update_preimage/
+    * update_postimage, `delete`/`delete-mor` as deletes only, anything
+    * else as delete + insert.
+    */
+  private def derivedChanges(pre: DataFrame, post: DataFrame,
+      op: String): DataFrame = {
+    val preD = pre.exceptAll(post)
+    lazy val postD = post.exceptAll(pre)
+    op match {
+      case "update" => asChange(preD, "update_preimage")
+        .unionByName(asChange(postD, "update_postimage"))
+      case "delete" | "delete-mor" => asChange(preD, "delete")
+      case _ =>
+        asChange(preD, "delete").unionByName(asChange(postD, "insert"))
+    }
   }
 
   /** Internal snapshot read for rewrite paths (compact/upsert/update/
@@ -2708,26 +2699,11 @@ object VersionedTable {
       val cdc =
         if (remove.isEmpty && add.isEmpty) Nil
         else stageCdcIfEnabled(spark, table, lines, {
-          import org.apache.spark.sql.functions.lit
           val declared = schemaLine(lines)
-          val pre = readFilesDeleteAware(spark, table, remove, declared,
-            delLines(lines), keepFileCol = false,
-            posDels = delPosLines(lines))
-          val post = readFiles(spark, table, add, declared)
-          val preD = pre.exceptAll(post)
-          val postD = post.exceptAll(pre)
-          op match {
-            case "update" =>
-              preD.withColumn(ChangeTypeCol, lit("update_preimage"))
-                .unionByName(postD.withColumn(ChangeTypeCol,
-                  lit("update_postimage")))
-            case "delete" =>
-              preD.withColumn(ChangeTypeCol, lit("delete"))
-            case _ =>
-              preD.withColumn(ChangeTypeCol, lit("delete"))
-                .unionByName(postD.withColumn(ChangeTypeCol,
-                  lit("insert")))
-          }
+          derivedChanges(readFilesDeleteAware(spark, table, remove,
+            declared, delLines(lines), keepFileCol = false,
+            posDels = delPosLines(lines)),
+            readFiles(spark, table, add, declared), op)
         })
       Commit(Rebase, base =>
         metaLines(base, op) ++ cdc.map(CdcPrefix + _) ++
@@ -2838,10 +2814,8 @@ object VersionedTable {
     if (committed(lines0, txn)) return v0
     // align to the declared schema up front so the rewritten survivors
     // (read under that schema) union cleanly with the upsert rows
-    val upserts = schemaLine(lines0) match {
-      case Some(sc) => alignToSchema(upserts0, sc, evolve = false, table)._1
-      case None => upserts0
-    }
+    val upserts = alignToSchema(upserts0, schemaLine(lines0),
+      evolve = false, table)._1
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
     val keyType = upserts.schema(key).dataType
     val isString = keyType == StringType
@@ -2920,22 +2894,20 @@ object VersionedTable {
               // replaced rows are update_preimage, their new versions
               // update_postimage, merged-away rows delete, unmatched
               // upsert rows plain inserts
-              def tag(df: DataFrame, t: String) =
-                df.withColumn(ChangeTypeCol, lit(t))
-              if (affected.isEmpty) tag(upserts, "insert")
+              if (affected.isEmpty) asChange(upserts, "insert")
               else {
                 val pre = existing.join(allKeys, Seq(key), "left_semi")
                 val preKeys = pre.select(col(key))
                 val preimages =
-                  if (deletes0.isEmpty) tag(pre, "update_preimage")
-                  else tag(pre.join(updKeys, Seq(key), "left_semi"),
+                  if (deletes0.isEmpty) asChange(pre, "update_preimage")
+                  else asChange(pre.join(updKeys, Seq(key), "left_semi"),
                       "update_preimage")
-                    .unionByName(tag(pre.join(updKeys, Seq(key),
+                    .unionByName(asChange(pre.join(updKeys, Seq(key),
                       "left_anti"), "delete"))
                 preimages
-                  .unionByName(tag(upserts.join(preKeys, Seq(key),
+                  .unionByName(asChange(upserts.join(preKeys, Seq(key),
                     "left_semi"), "update_postimage"))
-                  .unionByName(tag(upserts.join(preKeys, Seq(key),
+                  .unionByName(asChange(upserts.join(preKeys, Seq(key),
                     "left_anti"), "insert"))
               }
             })
@@ -2973,104 +2945,107 @@ object VersionedTable {
     } finally { tagged.unpersist(); () }
   }
 
-  /** Row-level UPDATE: SET `assignments` on rows matching `predicate`
-    * (SQL semantics — null predicate leaves the row unchanged).
-    * Copy-on-write like [[delete]]: one pushed-down scan finds files
-    * containing matches, only those rewrite — matching rows with the
-    * assignments applied, non-matching rows verbatim — in ONE atomic
-    * commit. Assignment expressions may reference the row's old columns
-    * (`value -> col("value") * 2`).
+  /** The one copy-on-write body of [[delete]], [[update]] and
+    * [[replaceWhere]]. Each attempt scans the snapshot once for the
+    * files holding a row where `predicate` is TRUE (SQL semantics: a
+    * null predicate leaves the row as it is) and rewrites only those:
+    * the hit rows get `set` applied, or are dropped when `set` is
+    * empty; every other file carries over untouched. `inserts` (the
+    * rows, and the files they were staged to before the loop) ride the
+    * same commit. With no file hit and nothing inserted there is
+    * nothing to commit. The change feed gets the hit rows as
+    * update_preimage/update_postimage pairs under `set`, else as
+    * `delete`, and the inserted rows as `insert`.
+    *
+    * Conflict rule (retry): an arbitrary predicate can't be
+    * footer-checked against raced appends (they may hold matching
+    * rows), so ANY new data file forces a retry over the fresh
+    * snapshot; so does a raced delete-layer commit (no data file
+    * changes, but the rewritten files would escape the new layer).
+    * Stricter than upsert's key-range test: under heavy append traffic
+    * these ops pay retries, never correctness.
     */
-  def update(spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    require(assignments.nonEmpty, "update needs at least one assignment")
-    occCommit(spark, table, "update") { (v, lines) =>
+  private def rewriteWhere(spark: SparkSession, table: String, op: String,
+      marker: String, predicate: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column] = Map.empty,
+      inserts: Option[(DataFrame, Seq[String])] = None): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+    val hit = coalesce(predicate, lit(false))
+    val inserted = inserts.toSeq.flatMap(_._2)
+    occCommit(spark, table, op, owned = inserted) { (v, lines) =>
       val files = dataFiles(lines)
       val affected =
         if (files.isEmpty) Nil
         else {
           val snap = snapReadWithFile(spark, table, files, lines)
-          assignments.keys.foreach { c =>
-            require(snap.columns.contains(c), s"no such column to SET: $c")
-          }
+          set.keys.foreach(c =>
+            require(snap.columns.contains(c), s"no such column to SET: $c"))
           filesMatching(snap, predicate)
         }
-      if (affected.isEmpty) Done(v)
+      if (affected.isEmpty && inserted.isEmpty) Done(v)
       else {
-        val hit = coalesce(predicate, lit(false))
-        val rewrittenDf = assignments.foldLeft(
-          snapRead(spark, table, affected, lines)) {
-          case (df, (c, expr)) =>
-            df.withColumn(c, when(hit, expr).otherwise(col(c)))
-        }
-        val rewritten = stage(spark,
-          stampFieldIds(rewrittenDf, schemaLine(lines)), table)
+        lazy val rows = snapRead(spark, table, affected, lines)
+        val rewritten =
+          if (affected.isEmpty) Nil
+          else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
+            if (set.isEmpty) rows.where(not(hit))
+            else set.foldLeft(rows) { case (df, (c, e)) =>
+              df.withColumn(c, when(hit, e).otherwise(col(c)))
+            }, schemaLine(lines)), table),
+            others = files.filterNot(affected.contains) ++ inserted)
         val cdc = stageCdcIfEnabled(spark, table, lines, {
-          // apply the assignments to the PRE rows (the hit predicate is
-          // over original columns, so it must not re-evaluate post-SET)
-          val pre = snapRead(spark, table, affected, lines).where(hit)
-          val post = assignments.foldLeft(pre) {
-            case (df, (c, expr)) => df.withColumn(c, expr)
+          val changed = if (affected.isEmpty) None else Some {
+            val pre = rows.where(hit)
+            if (set.isEmpty) asChange(pre, "delete")
+            // the SET applies to the PRE rows: the hit predicate is over
+            // the original columns and must not re-evaluate after it
+            else asChange(pre, "update_preimage").unionByName(asChange(
+              set.foldLeft(pre) { case (df, (c, e)) => df.withColumn(c, e) },
+              "update_postimage"))
           }
-          pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(post.withColumn(ChangeTypeCol,
-              lit("update_postimage")))
+          // an undeclared table's inserts need not carry every column
+          (changed ++ inserts.map(i => asChange(i._1, "insert")))
+            .reduce(_.unionByName(_, allowMissingColumns = true))
         })
-        // same conflict rule as delete
         Commit(sameFilesAndLayer(lines), base =>
-          metaLines(base, "update") ++ cdc.map(CdcPrefix + _) ++
-            dataFiles(base).filterNot(affected.contains) ++ rewritten,
+          metaLines(base, marker) ++ cdc.map(CdcPrefix + _) ++
+            dataFiles(base).filterNot(affected.contains) ++ rewritten ++
+            inserted,
           staged = rewritten ++ cdc)
       }
     }
   }
 
+  /** Row-level UPDATE: SET `assignments` on rows matching `predicate`
+    * (SQL semantics — null predicate leaves the row unchanged), in ONE
+    * copy-on-write commit ([[rewriteWhere]]): only files containing
+    * matches rewrite. Assignment expressions may reference the row's old
+    * columns (`value -> col("value") * 2`).
+    */
+  def update(spark: SparkSession, table: String,
+      predicate: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
+    require(assignments.nonEmpty, "update needs at least one assignment")
+    rewriteWhere(spark, table, "update", "update", predicate,
+      set = assignments)
+  }
+
   /** Atomic predicate overwrite (Delta's replaceWhere): ONE commit that
     * removes rows matching `predicate` and inserts `df` — the
     * delete-then-append composed without the torn-state window between
-    * two commits. Backs `INSERT OVERWRITE ... WHERE` /
-    * DataFrameWriterV2.overwrite(condition). Same OCC conflict rule as
-    * [[delete]]: any raced data file forces a retry over the fresh
-    * snapshot.
+    * two commits ([[rewriteWhere]]; it commits even when nothing
+    * matched). `df` aligns to the declared schema like an append's.
+    * Backs `INSERT OVERWRITE ... WHERE` /
+    * DataFrameWriterV2.overwrite(condition).
     */
   def replaceWhere(spark: SparkSession, df: DataFrame, table: String,
       predicate: org.apache.spark.sql.Column,
       sortedBy: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val lines1 = latestRaw(spark, table)._2
-    val newFiles = stage(spark,
-      stampFieldIds(df, schemaLine(lines1)), table, cluster = true,
-      sortedBy = sortedBy)
-    occCommit(spark, table, "replaceWhere", owned = newFiles) { (_, lines) =>
-      val files = dataFiles(lines)
-      val affected =
-        if (files.isEmpty) Nil
-        else filesMatching(snapReadWithFile(spark, table, files, lines),
-          predicate)
-      val rewritten =
-        if (affected.isEmpty) Nil
-        else rowFiles(spark, table, lines, stage(spark, stampFieldIds(
-          snapRead(spark, table, affected, lines)
-            .where(not(coalesce(predicate, lit(false)))), schemaLine(lines)),
-          table), others = files.filterNot(affected.contains) ++ newFiles)
-      val cdc = stageCdcIfEnabled(spark, table, lines, {
-        val inserts = df.withColumn(ChangeTypeCol, lit("insert"))
-        if (affected.isEmpty) inserts
-        else snapRead(spark, table, affected, lines)
-          .where(coalesce(predicate, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete"))
-          // df need not carry every declared column (reads null-fill) —
-          // the CDC rows mirror that
-          .unionByName(inserts, allowMissingColumns = true)
-      })
-      Commit(sameFilesAndLayer(lines), base =>
-        metaLines(base, "replace") ++ cdc.map(CdcPrefix + _) ++
-          dataFiles(base).filterNot(affected.contains) ++ rewritten ++
-          newFiles,
-        staged = rewritten ++ cdc)
-    }
+    val aligned = alignToSchema(df, schemaLine(latestRaw(spark, table)._2),
+      evolve = false, table)._1
+    rewriteWhere(spark, table, "replaceWhere", "replace", predicate,
+      inserts = Some(aligned -> stage(spark, aligned, table, cluster = true,
+        sortedBy = sortedBy)))
   }
 
   /** Overwrite: one atomic commit whose snapshot is exactly `df` — the
@@ -3086,11 +3061,8 @@ object VersionedTable {
       sortedBy: Seq[String] = Nil,
       setProps: Map[String, String] = Map.empty): Long = {
     requirePlainProps(setProps, "overwrite")
-    val lines0 = latestRaw(spark, table)._2
-    val (aligned, extras) = schemaLine(lines0) match {
-      case Some(sc) => alignToSchema(df, sc, evolveSchema, table)
-      case None => (df, Nil)
-    }
+    val (aligned, extras) = alignToSchema(df,
+      schemaLine(latestRaw(spark, table)._2), evolveSchema, table)
     val staged = stage(spark, aligned, table, cluster = true,
       sortedBy = sortedBy)
     occCommit(spark, table, "overwrite", owned = staged) { (_, _) =>
@@ -3122,7 +3094,7 @@ object VersionedTable {
     val fid0 = fidOf(latestRaw(spark, table)._2)
     val (idFields, fid) = assignIds(bare.fields.toSeq, fid0)
     val schema = org.apache.spark.sql.types.StructType(idFields.toArray)
-    val aligned = alignToSchema(df, schema, evolve = false, table)._1
+    val aligned = alignToSchema(df, Some(schema), evolve = false, table)._1
     val staged = stage(spark, aligned, table, sortedBy = sortedBy,
       markerSchema = Some(schema))
     // old props and delete layers drop; txn watermarks and tags carry
@@ -3158,7 +3130,6 @@ object VersionedTable {
     * CDC see it as a row-level commit (resync or opt into skipping).
     */
   def restore(spark: SparkSession, table: String, version: Long): Long = {
-    import org.apache.spark.sql.functions.lit
     val f = fs(spark, table)
     require(version >= 1, s"cannot restore $table to version $version")
     require(f.exists(commitPath(table, version)),
@@ -3198,9 +3169,7 @@ object VersionedTable {
           val post = readFilesDeleteAware(spark, table, postFiles,
             targetSchema, delLines(target), keepFileCol = false,
             posDels = delPosLines(target))
-          pre.exceptAll(post).withColumn(ChangeTypeCol, lit("delete"))
-            .unionByName(
-              post.exceptAll(pre).withColumn(ChangeTypeCol, lit("insert")))
+          derivedChanges(pre, post, "restore")
         })
         // strict conflict rule: ANY commit since the pinned snapshot (new
         // files, layer change, schema change) invalidates the staged CDC
@@ -3291,46 +3260,15 @@ object VersionedTable {
     }
 
   /** Row-level DELETE: removes rows where `predicate` is TRUE (SQL
-    * semantics — null keeps). Copy-on-write like [[upsert]]: one
-    * pruned-and-pushed-down scan finds the files that actually contain
-    * matches (row provenance from `_metadata`), only those are rewritten without their
-    * matching rows, everything else carries over untouched. Returns the
-    * committed version (unchanged if nothing matched).
+    * semantics — null keeps), in ONE copy-on-write commit
+    * ([[rewriteWhere]]): only the files that actually contain matches
+    * are rewritten without their matching rows, everything else carries
+    * over untouched. Returns the committed version (unchanged if
+    * nothing matched).
     */
   def delete(spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    occCommit(spark, table, "delete") { (v, lines) =>
-      val files = dataFiles(lines)
-      val affected =
-        if (files.isEmpty) Nil
-        else filesMatching(snapReadWithFile(spark, table, files, lines),
-          predicate)
-      if (affected.isEmpty) Done(v)
-      else {
-        val survivors = snapRead(spark, table, affected, lines)
-          .where(not(coalesce(predicate, lit(false))))
-        val rewritten = rowFiles(spark, table, lines, stage(spark,
-          stampFieldIds(survivors, schemaLine(lines)), table),
-          others = files.filterNot(affected.contains))
-        val cdc = stageCdcIfEnabled(spark, table, lines,
-          snapRead(spark, table, affected, lines)
-            .where(coalesce(predicate, lit(false)))
-            .withColumn(ChangeTypeCol, lit("delete")))
-        // conflict rule: an arbitrary predicate can't be footer-checked
-        // against raced appends (they may contain matching rows), so ANY
-        // new data file forces a retry over the fresh snapshot; likewise
-        // a raced delete-layer commit (no data file change, but the
-        // rewritten files would escape the new layer). Stricter than
-        // upsert's key-range test; deletes under heavy append traffic
-        // pay retries, never correctness.
-        Commit(sameFilesAndLayer(lines), base =>
-          metaLines(base, "delete") ++ cdc.map(CdcPrefix + _) ++
-            dataFiles(base).filterNot(affected.contains) ++ rewritten,
-          staged = rewritten ++ cdc)
-      }
-    }
-  }
+      predicate: org.apache.spark.sql.Column): Long =
+    rewriteWhere(spark, table, "delete", "delete", predicate)
 
   /** Merge-on-read DELETE by key: the CDC shape — `keys` is a frame
     * whose columns name the equality key(s) and whose rows are the keys
@@ -3345,10 +3283,9 @@ object VersionedTable {
     * committed AFTER this delete are untouched, so re-inserting a
     * deleted key works naturally. Null keys never match (SQL equality)
     * and are dropped from the delete set. The DSv2 `graft-table` scan
-    * REFUSES tables with a pending delete layer (its executor-side
-    * parquet reader cannot apply joins — the same reader-protocol gate
-    * as Delta's deletion vectors); compact first, or read through this
-    * API.
+    * serves a pending layer by resolving it to dead row positions at
+    * plan time ([[pendingEqualityDeletePositions]]), refusing past 256
+    * MiB of compressed bitmaps — compact first then.
     *
     * @param txn optional (writerId, epoch) idempotence watermark — the
     *   exactly-once contract of [[appendIdempotent]] for CDC delete
@@ -3394,12 +3331,10 @@ object VersionedTable {
         // when the table opted into the feed
         val cdc =
           if (noKeys) Nil
-          else stageCdcIfEnabled(spark, table, lines,
+          else stageCdcIfEnabled(spark, table, lines, asChange(
             snapRead(spark, table, dataFiles(lines), lines)
               .join(readFiles(spark, table, staged, Some(clean.schema)),
-                keyCols, "left_semi")
-              .withColumn(ChangeTypeCol,
-                org.apache.spark.sql.functions.lit("delete")))
+                keyCols, "left_semi"), "delete"))
         Commit(Rebase, base =>
           metaLines(base, "delete-mor", txn = txn) ++
             staged.map(n =>
@@ -3422,8 +3357,9 @@ object VersionedTable {
     * names, so stale entries can never match (self-cleaning — re-inserts
     * are untouched by construction). [[compact]] materializes the layer;
     * until then the DSv2 scan serves it DIRECTLY (an ordinal-filtering
-    * reader skips the dead positions — no gate, unlike equality
-    * layers), bounded by [[pendingPositionDeletes]]' map-size cap.
+    * reader skips the dead positions — the reader equality layers
+    * resolve to as well), bounded by [[pendingPositionDeletes]]' 256 MiB
+    * cap on compressed bitmaps.
     *
     * SQL semantics: rows where `predicate` is TRUE are deleted, null
     * keeps. Unlike the copy-on-write delete there is NO write-write
@@ -3434,7 +3370,7 @@ object VersionedTable {
     */
   def deleteWhereMergeOnRead(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     occCommit(spark, table, "deleteWhereMergeOnRead") { (v, lines) =>
       val files = dataFiles(lines)
       lazy val matched = snapReadWithFilePos(spark, table, files, lines)
@@ -3444,8 +3380,7 @@ object VersionedTable {
       else {
         val posFiles = stage(spark, hits, table, prefix = "delpos-")
         val cdc = stageCdcIfEnabled(spark, table, lines,
-          matched.drop("__vt_file", "__vt_pos")
-            .withColumn(ChangeTypeCol, lit("delete")))
+          asChange(matched.drop("__vt_file", "__vt_pos"), "delete"))
         // any raced commit (append/rewrite/compact) invalidates the
         // scanned snapshot: stale positions would be wrong for rewritten
         // files and absent for new ones — rescan from scratch
@@ -3530,6 +3465,29 @@ object VersionedTable {
         .getFileMetaData.getSchema, pathFields)
       catch { case _: Exception => false }
     }
+  }
+
+  /** The gate [[renameColumn]] and [[dropColumn]] share before they
+    * change column `name` (path `parts`, fields `chain`): every data
+    * file must physically carry its field id (a file without one can
+    * only match by name, so `why`), and no pending equality-delete layer
+    * may key on its top-level column (the `#del` line stores the NAME).
+    */
+  private def requireIdMatched(spark: SparkSession, table: String,
+      lines: Seq[String], name: String, parts: Seq[String],
+      chain: Seq[org.apache.spark.sql.types.StructField], why: String): Unit = {
+    val files = dataFiles(lines)
+    val (carry, what) =
+      if (parts.length == 1)
+        (filesCarryFieldIds(spark, table, files), "without physical field ids")
+      else (filesCarryLeafId(spark, table, files, chain),
+        s"whose '$name' carries no physical field id")
+    require(carry, s"$table has data files $what — $why; run " +
+      "VersionedTable.materializeFieldIds first")
+    require(!delLines(lines).exists(
+      _._3.exists(_.equalsIgnoreCase(parts.head))),
+      s"a pending merge-on-read delete layer keys on '${parts.head}' — " +
+        "run VersionedTable.compact to materialize it first")
   }
 
   /** Resolve a column name against `sc` case-insensitively (Spark's
@@ -3680,21 +3638,8 @@ object VersionedTable {
         s"column '$from' of $table has no field id — run " +
           "VersionedTable.materializeFieldIds first (schema-merge " +
           "evolution columns stay name-matched)")
-      val files = dataFiles(lines)
-      if (parts.length == 1)
-        require(filesCarryFieldIds(spark, table, files),
-          s"$table has data files without physical field ids — a rename " +
-            "would break their reads; run " +
-            "VersionedTable.materializeFieldIds first")
-      else
-        require(filesCarryLeafId(spark, table, files, chain),
-          s"$table has data files whose '$from' carries no physical " +
-            "field id — a rename would silently null it there; run " +
-            "VersionedTable.materializeFieldIds first")
-      require(!delLines(lines).exists(
-        _._3.exists(_.equalsIgnoreCase(parts.head))),
-        s"a pending merge-on-read delete layer keys on '${parts.head}' — " +
-          "run VersionedTable.compact to materialize it first")
+      requireIdMatched(spark, table, lines, from, parts, chain,
+        "a rename would silently null it there")
       val renamed = transformParentStruct(declared, parts, table) { st =>
         require(!st.fields.exists(f => !(f eq target) &&
           f.name.equalsIgnoreCase(to)),
@@ -3740,7 +3685,6 @@ object VersionedTable {
       requireNoConstraintOn(spark, lines, parts.head, table)
       val chain = fieldsAlong(declared, parts, table)
       val target = chain.last
-      val files = dataFiles(lines)
       if (parts.length == 1)
         require(!clusterColsOf(lines).exists(_.equalsIgnoreCase(name)),
           s"'$name' is a $ClusterByProperty column of $table — clear or " +
@@ -3749,19 +3693,8 @@ object VersionedTable {
         require(!bucketSpecOf(lines).exists(_._1.equalsIgnoreCase(name)),
           s"'$name' is the $BucketByProperty column of $table — the " +
             "bucket layout is fixed at declaration")
-      if (parts.length == 1)
-        require(filesCarryFieldIds(spark, table, files),
-          s"$table has data files without physical field ids — run " +
-            "VersionedTable.materializeFieldIds first")
-      else
-        require(filesCarryLeafId(spark, table, files, chain),
-          s"$table has data files whose '$name' carries no physical " +
-            "field id — a re-added same-named field would resurrect " +
-            "their data; run VersionedTable.materializeFieldIds first")
-      require(!delLines(lines).exists(
-        _._3.exists(_.equalsIgnoreCase(parts.head))),
-        s"a pending merge-on-read delete layer keys on '${parts.head}' — " +
-          "run VersionedTable.compact to materialize it first")
+      requireIdMatched(spark, table, lines, name, parts, chain,
+        "a re-added same-named field would resurrect their data")
       val narrowed = transformParentStruct(declared, parts, table) { st =>
         require(st.fields.length > 1,
           if (parts.length == 1) s"cannot drop the only column of $table"

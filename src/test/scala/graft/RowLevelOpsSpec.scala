@@ -262,6 +262,39 @@ class RowLevelOpsSpec extends SparkTestBase {
       "pre-replace snapshot still time-travels")
   }
 
+  test("replaceWhere aligns its inserts to the declared schema like append") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val t = Files.createTempDirectory("rl_rwal").toString + "/t"
+    VersionedTable.create(spark, t, StructType(Seq(StructField("k", LongType),
+      StructField("v", StringType), StructField("x", StringType))))
+    VersionedTable.alterProperties(spark, t,
+      Map(VersionedTable.CdcProperty -> "true"))
+    VersionedTable.append(spark,
+      Seq((1L, "a", "p"), (2L, "b", "q")).toDF("k", "v", "x"), t)
+    val v0 = VersionedTable.latest(spark, t)._1
+    // an extra column would be written and never read back
+    intercept[IllegalArgumentException] {
+      VersionedTable.replaceWhere(spark,
+        Seq((3L, "c", "r", 0)).toDF("k", "v", "x", "extra"), t, col("k") === 1L)
+    }
+    // DOUBLE into BIGINT would truncate
+    intercept[IllegalArgumentException] {
+      VersionedTable.replaceWhere(spark,
+        Seq((3.5, "c", "r")).toDF("k", "v", "x"), t, col("k") === 1L)
+    }
+    assert(VersionedTable.latest(spark, t)._1 === v0, "a refused write commits")
+    // INT widens to BIGINT; the missing nullable `x` reads back as null
+    val v1 = VersionedTable.replaceWhere(spark,
+      Seq((3, "c")).toDF("k", "v"), t, col("k") === 1L)
+    assert(v1 === v0 + 1)
+    assert(VersionedTable.read(spark, t).as[(Long, String, Option[String])]
+      .collect().toSet === Set((2L, "b", Some("q")), (3L, "c", None)))
+    assert(VersionedTable.readChangesCDF(spark, t, v0, v1)
+      .select("k", "v", "x", "_change_type")
+      .as[(Long, String, Option[String], String)].collect().toSet ===
+      Set((1L, "a", Some("p"), "delete"), (3L, "c", None, "insert")))
+  }
+
   test("property: random upsert/delete/compact sequences match a reference model") {
     val rnd = new scala.util.Random(11)
     val t = Files.createTempDirectory("rl_model").toString + "/t"
